@@ -1,7 +1,6 @@
 package graft.facts
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.dims.DimDate
 import graft.ops.{AsOfJoin, Dedup}
@@ -11,12 +10,11 @@ import graft.ops.{AsOfJoin, Dedup}
   * backfill → point-in-time user/product SK lookups (orphans warned and
   * skipped) → in-batch composite-PK first-wins dedup → fact projection.
   *
-  * Shuffle budget at scale: the anti-join shuffles on `transaction_id`
-  * (the loaded-keys side is key-only and usually broadcast by AQE; past
-  * `spark.graft.j5.bloomMinRows` loaded rows it is first bloom-pruned to
-  * ~today's batch size so the exchange stays bounded as history grows —
-  * see [[Dedup.antiJoinExistingBloomed]]), both
-  * PIT lookups are broadcast equi-joins with zero fact-side exchanges
+  * One J5 entry point: with a sidecar prune (EtlRun) the anti-join reads
+  * only the fact partitions the per-`load_date` id index could not rule
+  * out ([[Dedup.antiJoinExistingPartitionPruned]]); without one it is the
+  * exact [[Dedup.antiJoinExisting]] against every loaded id. Both PIT
+  * lookups are broadcast equi-joins with zero fact-side exchanges
   * ([[AsOfJoin.pitLookup]]), and the first-wins window reuses the
   * anti-join's hash partitioning on `transaction_id` where possible — so
   * the load is one fact shuffle end-to-end.
@@ -30,90 +28,31 @@ object TxLoad {
     * @param existingFact current fact_transactions (any columns incl.
     *                  transaction_id)
     * @param today     run date 'yyyy-MM-dd' (load_date stamp)
+    * @param sidecarPrune when the caller maintains per-`load_date` id
+    *                  sidecars ([[TxSidecar]] — EtlRun does), the
+    *                  already-probed scan set + batch bloom: the anti-join
+    *                  then reads ONLY those fact partitions (zero history
+    *                  bytes on a disjoint-id day). Requires the sidecar
+    *                  superset contract
+    *                  ([[graft.ops.Dedup.antiJoinExistingPartitionPruned]]).
+    *                  None keeps the plain exact anti-join.
     * @return (newFacts, warnings, dimDateRows) — warnings carry
     *         (entity, table_name, record_id, error_type, severity, message);
     *         dimDateRows are calendar rows for every loaded tx date
     *         (the reference back-fills dim_date per row, etl.py:320-324)
     */
-  /** @param incomingBounded caller's knowledge that `validTx` is a bounded
-    *                  incremental batch (the reference's extract is BY
-    *                  CONTRACT one day, etl.py:146-168) — the premise the
-    *                  bloom prefilter's cost model rests on: its build is
-    *                  one pass over INCOMING, worth paying only when
-    *                  incoming ≪ the historical id set. A caller replaying
-    *                  a whole corpus as one "batch" (q19's fixture) passes
-    *                  false and keeps the plain anti-join at every scale;
-    *                  no cheap in-operator signal exists for this (plan
-    *                  size stats degenerate through the validation joins —
-    *                  the same stats gap that forces q75 to hand-build
-    *                  Spark's runtime filter). Semantics identical either
-    *                  way. */
-  /** @param sidecarPrune when the caller maintains per-`load_date` id
-    *                  sidecars ([[TxSidecar]] — EtlRun does), the
-    *                  already-probed scan set + batch bloom. The anti-join
-    *                  then reads ONLY those fact partitions (zero history
-    *                  bytes on a disjoint-id day) instead of scanning all
-    *                  historical ids; no count gate runs at all. Requires
-    *                  the sidecar superset contract
-    *                  ([[graft.ops.Dedup.antiJoinExistingPartitionPruned]]).
-    *                  Ignored when `incomingBounded` is false — the probe
-    *                  premise is the same bounded-batch one. */
-  /** @param share    caller-owned persistence hook for the shared load
-    *                  intermediate (r16). The facts, the orphan/duplicate
-    *                  warnings and the dim_date rows all derive from ONE
-    *                  joined+deduped frame; a caller that consumes more
-    *                  than one of them as SEPARATE actions (EtlRun's
-    *                  fact_tx / error_log / dim_date stages) re-evaluates
-    *                  the whole anti-join + PIT + window subtree per
-    *                  action — 3 evaluations of the day's batch, measured
-    *                  as the dominant fact_tx/error_log/dim_date cost in
-    *                  the sf10/sf100 replays. Passing a hook (typically
-    *                  `df => { df.cache(); track(df); df }`) makes the
-    *                  shared frame materialize once; the caller owns
-    *                  unpersist. None (default) keeps the exact r15 plan
-    *                  shape — single-consumer callers (q19) pay no cache
-    *                  write and lose no column pruning. Results are
-    *                  identical either way (FactLoadSpec pins it). */
   def load(validTx: DataFrame, dimUser: DataFrame, dimProduct: DataFrame,
            existingFact: DataFrame, today: String,
-           incomingBounded: Boolean = true,
-           sidecarPrune: Option[TxSidecar.Prune] = None,
-           share: Option[DataFrame => DataFrame] = None): (DataFrame, DataFrame, DataFrame) = {
+           sidecarPrune: Option[TxSidecar.Prune] = None): (DataFrame, DataFrame, DataFrame) = {
 
     // J5 — fidelity: keyed on transaction_id ALONE (etl.py:308-311), so a
     // partially loaded multi-product tx is never completed on re-run.
-    //
-    // Scale gate (VERDICT r13 #1): once the fact table outgrows
-    // `spark.graft.j5.bloomMinRows`, the historical id set can no longer
-    // broadcast and every daily run would pay a full exchange of ALL ids
-    // ever loaded (linear in history, +0.17 s/day measured at sf10).
-    // Above the gate, [[Dedup.antiJoinExistingBloomed]] prunes the
-    // history scan to roughly today's batch size before the exchange —
-    // identical results by bloom no-false-negative structure (asserted
-    // in FactLoadSpec). The gate itself is a zero-column count scan of
-    // the fact table (no column IO — cheap but not free, one job per
-    // load; the default threshold keeps small corpora on the plain
-    // plan). Default 20M ≈ sf10-replay day ~11, so a month-long replay
-    // exercises both sides.
-    // `bloomMinRows` compares fact ROWS (inflated by multi-product txs)
-    // against a threshold whose real subject is the distinct-id exchange;
-    // the approximation drifts with the corpus's lines-per-tx, which is
-    // fine for a perf-only heuristic but worth knowing when tuning the
-    // threshold on another corpus shape (ADVICE r14). EtlRun itself no
-    // longer reaches this gate: it probes TxSidecar indexes instead, so
-    // the count() below only runs for direct sidecar-less callers.
-    val conf = validTx.sparkSession.conf
-    val bloomMin = conf.get("spark.graft.j5.bloomMinRows", "20000000").toLong
-    val estItems = conf.get("spark.graft.j5.bloomEstItems", "4000000").toLong
     val fresh = (sidecarPrune match {
-      case Some(p) if incomingBounded =>
+      case Some(p) =>
         Dedup.antiJoinExistingPartitionPruned(validTx, existingFact,
           "transaction_id", "load_date",
           p.scanDates.map(java.sql.Date.valueOf), p.pruneBloom)
-      case _ =>
-        if (incomingBounded && existingFact.count() >= bloomMin)
-          Dedup.antiJoinExistingBloomed(validTx, existingFact, "transaction_id", estItems)
-        else Dedup.antiJoinExisting(validTx, existingFact, Seq("transaction_id"))
+      case None => Dedup.antiJoinExisting(validTx, existingFact, Seq("transaction_id"))
     }).withColumn("tx_date", to_date(col("date")))
 
     // PIT lookups (J3). The reference probes user first and skips the row
@@ -132,33 +71,11 @@ object TxLoad {
     // a total tie inside its own window partition).
     val tiebreak = withBoth.columns
       .filterNot(Seq("transaction_id", "pit_product_sk").contains).map(col).toSeq
-    val (orphanUser, orphanProduct, kept, dups) = share match {
-      case Some(persist) =>
-        // shared shape: ONE frame carries orphan flags AND the dedup rank,
-        // materialized once by the caller's hook; every consumer is a
-        // filter over it. The rank window adds the orphan flags to the
-        // partition key, so resolved rows group exactly as the plain
-        // firstWins partition (the flags are constant false there) and
-        // orphan rows — excluded from dedup by contract — only ever group
-        // among themselves (their ranks are computed but never read).
-        val w = Window.partitionBy(col("pit_user_sk").isNull,
-            col("pit_product_sk").isNull,
-            col("transaction_id"), col("pit_product_sk"))
-          .orderBy(tiebreak: _*)
-        val ann = persist(withBoth.withColumn("dedup_rn", row_number().over(w)))
-        val res = col("pit_user_sk").isNotNull && col("pit_product_sk").isNotNull
-        (ann.filter(col("pit_user_sk").isNull).drop("dedup_rn"),
-          ann.filter(col("pit_user_sk").isNotNull && col("pit_product_sk").isNull).drop("dedup_rn"),
-          ann.filter(res && col("dedup_rn") === 1).drop("dedup_rn"),
-          ann.filter(res && col("dedup_rn") > 1).drop("dedup_rn"))
-      case None =>
-        val orphanU = withBoth.filter(col("pit_user_sk").isNull)
-        val orphanP = withBoth.filter(col("pit_user_sk").isNotNull && col("pit_product_sk").isNull)
-        val resolved = withBoth.filter(col("pit_user_sk").isNotNull && col("pit_product_sk").isNotNull)
-        val (k, d) = Dedup.firstWins(resolved,
-          Seq("transaction_id", "pit_product_sk"), tiebreak)
-        (orphanU, orphanP, k, d)
-    }
+    val orphanUser = withBoth.filter(col("pit_user_sk").isNull)
+    val orphanProduct = withBoth.filter(col("pit_user_sk").isNotNull && col("pit_product_sk").isNull)
+    val resolved = withBoth.filter(col("pit_user_sk").isNotNull && col("pit_product_sk").isNotNull)
+    val (kept, dups) = Dedup.firstWins(resolved,
+      Seq("transaction_id", "pit_product_sk"), tiebreak)
 
     val facts = kept.select(
       col("transaction_id"),

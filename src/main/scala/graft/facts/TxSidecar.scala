@@ -237,18 +237,17 @@ object TxSidecar {
 
   /** Tier the index when enough cold daily rows have accumulated:
     * [[compact]] iff the rows whose whole window predates
-    * `today - spark.graft.j5.sidecarKeepDays` (default 45) outnumber
-    * their target months by at least `spark.graft.j5.sidecarCompactMin`
-    * (default 30) — i.e. at least that many rows would actually
-    * disappear. Counting the SHRINKAGE (rows − months), not the rows,
+    * `today - keepDays` outnumber their target months by at least
+    * `compactMin` — i.e. at least that many rows would actually
+    * disappear (EtlRun reads both from `spark.graft.j5.sidecarKeepDays`,
+    * default 45, and `spark.graft.j5.sidecarCompactMin`, default 30).
+    * Counting the SHRINKAGE (rows − months), not the rows,
     * makes the trigger self-quenching: already-compacted tier rows
     * contribute 0 and never re-fire a rewrite. The decision reuses the
     * run's already-collected [[State]] — no extra read or job.
     * Returns (rows compacted, tier rows written) when it ran. */
   def maybeCompact(spark: SparkSession, sidecarPath: String, st: State,
-                   today: String): Option[(Int, Int)] = {
-    val keepDays = spark.conf.get("spark.graft.j5.sidecarKeepDays", "45").toInt
-    val compactMin = spark.conf.get("spark.graft.j5.sidecarCompactMin", "30").toInt
+                   today: String, keepDays: Int, compactMin: Int): Option[(Int, Int)] = {
     val cutoff = java.time.LocalDate.parse(today).minusDays(keepDays.toLong).toString
     val cold = st.metas.filter(_.dateMax < cutoff)
     val months = cold.map(_.loadDate.substring(0, 7)).distinct

@@ -89,16 +89,29 @@ final class EtlRun(spark: SparkSession, warehouse: String) {
     * lambda call sites). */
   private def stage[T](name: String)(body: => T): T = {
     spark.sparkContext.setJobDescription(s"etl:$name")
-    val t0 = System.nanoTime()
-    try body finally {
-      spark.sparkContext.setJobDescription(null)
-      if (sys.env.contains("GRAFT_ETL_STAGE_TIMING"))
-        System.err.println(f"[etl-stage] $name%-12s ${(System.nanoTime() - t0) / 1e9}%6.3f s")
-    }
+    try body finally spark.sparkContext.setJobDescription(null)
+  }
+
+  /** An integer `spark.graft.*` knob, parsed and bounded up front: a
+    * 0/negative/garbage value fails HERE with the conf key named, not
+    * mid-run (NumberFormatException from inside a stage) after the
+    * warehouse already started mutating (ADVICE r14). */
+  private def intKnob(key: String, default: Int, min: Int): Int = {
+    val raw = spark.conf.get(key, default.toString)
+    scala.util.Try(raw.trim.toInt).toOption.filter(_ >= min).getOrElse(
+      throw new IllegalArgumentException(s"$key must be an integer >= $min, got '$raw'"))
   }
 
   /** One daily run. Returns the run-log row actually written. */
   def run(today: String): DataFrame = {
+    // every knob parses before the run reads or writes anything.
+    // stagePool is a measurement knob: 1 serializes the stage DAG (same
+    // Futures, one thread) so per-stage times can be read free of 4-way
+    // scheduler contention (VERDICT r13 "what's missing" #2). The sidecar
+    // pair sets the index tiering trigger ([[graft.facts.TxSidecar.maybeCompact]]).
+    val poolSize = intKnob("spark.graft.etl.stagePool", 4, 1)
+    val keepDays = intKnob("spark.graft.j5.sidecarKeepDays", 45, 0)
+    val compactMin = intKnob("spark.graft.j5.sidecarCompactMin", 30, 1)
     val startedAt = System.currentTimeMillis()
     // one small-table agg serves run-id allocation AND the J5 sizing
     // heuristic: the latest run's inserted-fact count sizes today's
@@ -212,21 +225,6 @@ final class EtlRun(spark: SparkSession, warehouse: String) {
       val nextProductDim = productDimSpec.merge(curProductDim,
         validProducts.drop("stock"), today, to_date(lit(today)))
 
-      // pool width is a measurement knob too: `spark.graft.etl.stagePool=1`
-      // serializes the stage DAG (same Futures, one thread) so per-stage
-      // times can be read free of 4-way scheduler contention — used by the
-      // replay harness to isolate pooled-vs-solo stage cost (VERDICT r13
-      // "what's missing" #2)
-      // parse + bound the knob up front: a 0/negative/garbage value must
-      // fail HERE with the conf key named, not mid-run from inside
-      // Executors/NumberFormatException after the warehouse already
-      // started mutating (ADVICE r14)
-      val poolConf = spark.conf.get("spark.graft.etl.stagePool", "4")
-      val poolSize = scala.util.Try(poolConf.trim.toInt).getOrElse(
-        throw new IllegalArgumentException(
-          s"spark.graft.etl.stagePool must be an integer >= 1, got '$poolConf'"))
-      require(poolSize >= 1,
-        s"spark.graft.etl.stagePool must be an integer >= 1, got '$poolConf'")
       val pool = java.util.concurrent.Executors.newFixedThreadPool(poolSize)
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.fromExecutorService(pool)
@@ -282,18 +280,15 @@ final class EtlRun(spark: SparkSession, warehouse: String) {
           val (txFacts, txWarnings, dateRows, sidecarRowDf, sidecarState) = stage("fact_plan") {
             val st = graft.facts.TxSidecar.readState(
               spark, path(graft.facts.TxSidecar.tableName), path("fact_transactions"))
-            // bloom sizing: 2× the last run's inserted count (batches
-            // drift slowly; mis-sizing only moves the fp rate). On the
-            // BOOTSTRAP run there is no prior count — size from the
-            // batch itself (one scan of the already-cached validTx;
-            // the conf, when set, overrides both). The old 4M blanket
-            // fallback built an ~MB bloom buffer PER PARTIAL-AGG TASK
-            // for fixture-scale day-1 batches — measured 1.7 s of
-            // fact_plan on q180's 15k-row day, vs KBs when fit.
-            val estItems = spark.conf.getOption("spark.graft.j5.bloomEstItems")
-              .map(_.toLong)
-              .getOrElse(math.max(2L * (if (lastTxInserted > 0L) lastTxInserted
-                else validTx.count()), 65536L))
+            // bloom sizing from data: 2× the last run's inserted count
+            // (batches drift slowly; mis-sizing only moves the fp rate).
+            // On the BOOTSTRAP run there is no prior count — size from
+            // the batch itself (one scan of the already-cached validTx).
+            // A blanket constant built an ~MB bloom buffer PER
+            // PARTIAL-AGG TASK for fixture-scale day-1 batches — measured
+            // 1.7 s of fact_plan on q180's 15k-row day, vs KBs when fit.
+            val estItems = math.max(2L * (if (lastTxInserted > 0L) lastTxInserted
+              else validTx.count()), 65536L)
             val bb = graft.facts.TxSidecar.buildBatchBloom(validTx, "transaction_id", estItems)
             val (hits, nOverlap) = bb.fold((Seq.empty[String], 0))(b =>
               graft.facts.TxSidecar.probeState(validTx, "transaction_id", st, b,
@@ -302,36 +297,15 @@ final class EtlRun(spark: SparkSession, warehouse: String) {
             // observability for the q19-regression signature (VERDICT r14
             // "what's wrong" #3): a probe that rules ~nothing out means the
             // batch is NOT the bounded daily increment the design assumes
-            // (or ids are adversarially interleaved) — surface it in the
-            // run row + stderr instead of waiting for an sf100 sweep.
-            if (res.ineffective) System.err.println(
-              s"[etl] J5 sidecar prune ineffective: scanning ${res.scanDates.size}/${res.allDates} " +
-                "fact partitions — incoming batch may not be a bounded daily increment")
+            // (or ids are adversarially interleaved) — the run row's notes
+            // flag it instead of waiting for an sf100 sweep.
             notes = s"j5:path=sidecar;overlap=$nOverlap;hit=${hits.size};" +
               s"uncovered=${st.uncoveredDates.size};" +
               s"scan=${res.scanDates.size}/${res.allDates};batch_ids=${bb.map(_.nRows).getOrElse(0L)}" +
               (if (res.ineffective) ";ineffective=1" else "")
-            // share hook (r16): fact_tx, error_log and dim_date each act on
-            // a frame derived from the SAME anti-join + PIT + dedup-window
-            // subtree — without a shared materialization the three pool
-            // stages re-evaluate the whole day's load three times (measured
-            // at sf100: fact_tx 22.8 s + dim_date 23.3 s + error_log's tx
-            // leg, all the same work). One cached frame, three filters.
-            // SIZE-GATED (guide §5: cache only when recompute beats the
-            // memory/IO pressure): below the threshold the three cheap
-            // re-evaluations win — measured at the 15k-row fixture day,
-            // caching cost q180 3.6 → 5.7 s (cache-block overhead + lost
-            // stage-pool overlap), while the multi-M-row replay days are
-            // where the 3× recompute dominates. The batch count is already
-            // known here from the bloom build — the gate costs no jobs.
-            val shareMin = spark.conf.get("spark.graft.etl.shareMinRows",
-              "1000000").toLong
-            val share = bb.filter(_.nRows >= shareMin).map { _ =>
-              (df: org.apache.spark.sql.DataFrame) => { val c = df.cache(); cached += c; c }
-            }
             val (f, w, d) = TxLoad.load(validTx, dimUserNow, dimProductNow,
               table("fact_transactions", Schemas.factTransactions), today,
-              sidecarPrune = Some(res.prune(bb.map(_.bloom))), share = share)
+              sidecarPrune = Some(res.prune(bb.map(_.bloom))))
             (f, w, d, bb.map(graft.facts.TxSidecar.sidecarRow(spark, today, _)), st)
           }
           // dim_date backfill for today + every loaded tx date
@@ -400,7 +374,8 @@ final class EtlRun(spark: SparkSession, warehouse: String) {
           // one-job pass over the KB/MB index, never the fact table.
           stage("sidecar_tier") {
             graft.facts.TxSidecar.maybeCompact(
-              spark, path(graft.facts.TxSidecar.tableName), sidecarState, today)
+              spark, path(graft.facts.TxSidecar.tableName), sidecarState, today,
+              keepDays, compactMin)
           }.foreach { case (nCold, nTiers) =>
             notes += s";tier=$nCold->$nTiers"
             spark.catalog.refreshByPath(path(graft.facts.TxSidecar.tableName))

@@ -559,15 +559,13 @@ object QEtl {
           to_date(lit("1992-01-01")).as("start_date"), lit(null).cast("date").as("end_date"))
         val existing = o.filter(col("o_orderkey") % 5 === 0)
           .select(col("o_orderkey").as("transaction_id"))
-        // incomingBounded=false: this fixture feeds the WHOLE corpus as one
-        // "batch" (155M rows at sf100) against a smaller existing set — the
-        // inverse of the daily-extract regime the bloom prefilter is built
-        // for (its build pass over incoming would cost more than the
-        // exchange it prunes; measured +30% at sf100). The bloom path is
-        // exercised at scale by the replay artifacts and at test scale by
-        // FactLoadSpec's forced-gate cases.
+        // no sidecar index here: this fixture feeds the WHOLE corpus as one
+        // "batch" (155M rows at sf100) against a smaller existing set, so
+        // the load takes the plain exact anti-join (a batch-bloom build
+        // over incoming would cost more than the exchange it prunes;
+        // measured +30% at sf100). The sidecar path is q182's.
         val (facts, _, _) = TxLoad.load(validTx, dimUser2v(s, dir), dimProduct,
-          existing, "2002-01-01", incomingBounded = false)
+          existing, "2002-01-01")
         facts.withColumn("load_date", ymd(col("load_date")))
       },
       Some(s"""WITH dim_user AS ($dimUser2vSql),

@@ -25,9 +25,10 @@ import graft.gen.Synthetic
   *    versions → linear in days but tiny slope (the SCD2 full-snapshot
   *    rewrite is the suspect the verdict named);
   *  - fact_transactions anti-join (J5: id-only vs the WHOLE target, the
-  *    reference's re-run contract): the id SCAN grows linearly with loaded
-  *    days; the EXCHANGE stays bounded once the gated bloom prefilter
-  *    engages (spark.graft.j5.bloomMinRows, default 20M ≈ day ~11 here);
+  *    reference's re-run contract): the per-`load_date` id sidecars
+  *    (graft.facts.TxSidecar) prune the history read to the partitions an
+  *    incoming id could hit — zero on a fresh-id day — so the J5 cost
+  *    stays flat in loaded days; the run-log notes carry the scan ratio;
   *  - fact_stock_history current-flag probe (J2/P2): the daily sales
   *    decrement (2M tx over 50k products) touches nearly every product,
   *    so the table grows ~nProducts/day — near-linear growth IS the
@@ -38,20 +39,19 @@ import graft.gen.Synthetic
   *       SPARK_GRAFT_USERS     (default 500000)
   *       SPARK_GRAFT_PRODUCTS  (default 50000)
   *       SPARK_GRAFT_TX_PER_DAY(default 2000000)  ≈ sf10 facts over 30 days
-  *       SPARK_GRAFT_CPUS      (default 32)
-  *       SPARK_GRAFT_OUT       (default /root/repo/BENCH_etl_replay_sf10.json)
+  *       SPARK_GRAFT_CPUS      (default: available processors)
+  *       SPARK_GRAFT_OUT       (default /tmp/BENCH_etl_replay.json)
   *       SPARK_GRAFT_WH        persistent warehouse dir (default: fresh
   *                             temp dir, deleted on exit; a given dir is
   *                             KEPT, enabling resume + A/B on one state)
   *       SPARK_GRAFT_FROM      first day index (default 0; resuming needs
   *                             SPARK_GRAFT_WH pointing at a warehouse that
   *                             already holds days 0..FROM-1)
-  *       SPARK_GRAFT_J5_BLOOM_MIN  forwarded to spark.graft.j5.bloomMinRows
   *       SPARK_GRAFT_STAGE_POOL    forwarded to spark.graft.etl.stagePool
-  *       SPARK_GRAFT_SIDECAR_KEEP         forwarded to spark.graft.j5.sidecarKeepDays
-  *       SPARK_GRAFT_SIDECAR_COMPACT_MIN  forwarded to spark.graft.j5.sidecarCompactMin
   *                             (1 = serialize stages: solo per-stage times
   *                             free of 4-way pool contention)
+  *       SPARK_GRAFT_SIDECAR_KEEP         forwarded to spark.graft.j5.sidecarKeepDays
+  *       SPARK_GRAFT_SIDECAR_COMPACT_MIN  forwarded to spark.graft.j5.sidecarCompactMin
   */
 object EtlReplayBench {
 
@@ -60,8 +60,9 @@ object EtlReplayBench {
     val nUsers = sys.env.getOrElse("SPARK_GRAFT_USERS", "500000").toInt
     val nProducts = sys.env.getOrElse("SPARK_GRAFT_PRODUCTS", "50000").toInt
     val txPerDay = sys.env.getOrElse("SPARK_GRAFT_TX_PER_DAY", "2000000").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_OUT", "/root/repo/BENCH_etl_replay_sf10.json")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors().toString)
+    val outPath = sys.env.getOrElse("SPARK_GRAFT_OUT", "/tmp/BENCH_etl_replay.json")
     val fromDay = sys.env.getOrElse("SPARK_GRAFT_FROM", "0").toInt
 
     val spark = SparkSession.builder()
@@ -82,8 +83,6 @@ object EtlReplayBench {
       .config("spark.sql.optimizer.runtime.bloomFilter.maxNumBits", "536870912")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    sys.env.get("SPARK_GRAFT_J5_BLOOM_MIN")
-      .foreach(v => spark.conf.set("spark.graft.j5.bloomMinRows", v))
     sys.env.get("SPARK_GRAFT_STAGE_POOL")
       .foreach(v => spark.conf.set("spark.graft.etl.stagePool", v))
     sys.env.get("SPARK_GRAFT_SIDECAR_KEEP")

@@ -35,6 +35,22 @@ class DedupSpec extends SparkSpec {
     assert(out.count() === 0)
   }
 
+  test("antiJoinExistingBloomed prunes the history scan before the exchange") {
+    // history must be a REAL scan: over a LocalRelation the optimizer
+    // evaluates the bloom probe at plan time (ConvertToLocalRelation)
+    // and the assertion would see nothing
+    val dir = java.nio.file.Files.createTempDirectory("graft_j5_bloom").toString
+    try {
+      Seq(6L).toDF("tx_id").write.mode("overwrite").parquet(dir)
+      val incoming = Seq((6L, "loaded"), (8L, "new")).toDF("tx_id", "v")
+      val out = Dedup.antiJoinExistingBloomed(incoming, spark.read.parquet(dir), "tx_id",
+        estItems = 1024L)
+      val plan = out.queryExecution.executedPlan.toString
+      assert(plan.contains("might_contain"), s"expected bloom probe in plan:\n$plan")
+      assert(sortedRows(out) === Seq(Seq(8L, "new")))
+    } finally graft.io.Fs.deleteRecursively(dir, spark.sessionState.newHadoopConf())
+  }
+
   test("firstWins keeps exactly one row per PK and routes the rest to dups") {
     val batch = Seq((1, 10, 1, "first"), (1, 10, 2, "second"), (1, 11, 1, "other-pk"))
       .toDF("tx_id", "product_sk", "seq", "v")

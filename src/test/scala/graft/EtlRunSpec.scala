@@ -270,14 +270,11 @@ class EtlRunSpec extends SparkSpec {
     assert(log.getAs[String]("status") === "failed")
   }
 
-  test("conf knobs: serialized stage pool + forced J5 bloom gate reproduce the default run exactly") {
-    // the measurement/scale knobs must be semantics-free: a day run with
+  test("conf knobs: a serialized stage pool reproduces the default run exactly") {
+    // the measurement knob must be semantics-free: a day run with
     // spark.graft.etl.stagePool=1 (stages serialized for contention-free
-    // timing) AND spark.graft.j5.bloomMinRows=0 (forces the legacy bloom
-    // gate for DIRECT TxLoad callers; EtlRun itself now always takes the
-    // sidecar-pruned path, where the knob is inert) must leave a
-    // warehouse with the same table counts as the default-conf run on
-    // the SAME inputs
+    // timing) must leave a warehouse with the same table counts as the
+    // default-conf run on the SAME inputs
     val whA = Files.createTempDirectory("graft_e2e_knobs_a").toString
     val whB = Files.createTempDirectory("graft_e2e_knobs_b").toString
     val users = Synthetic.users(spark, nUsers)
@@ -291,12 +288,8 @@ class EtlRunSpec extends SparkSpec {
     stage(whA); stage(whB)
     new EtlRun(spark, whA).run(day1)
     spark.conf.set("spark.graft.etl.stagePool", "1")
-    spark.conf.set("spark.graft.j5.bloomMinRows", "0")
     try new EtlRun(spark, whB).run(day1)
-    finally {
-      spark.conf.unset("spark.graft.etl.stagePool")
-      spark.conf.unset("spark.graft.j5.bloomMinRows")
-    }
+    finally spark.conf.unset("spark.graft.etl.stagePool")
     def counts(wh: String) = {
       val e = new EtlRun(spark, wh)
       Seq("dim_user" -> Schemas.dimUser, "dim_product" -> Schemas.dimProduct,
@@ -309,6 +302,33 @@ class EtlRunSpec extends SparkSpec {
     val status = new EtlRun(spark, whB).table("etl_run_log", Schemas.etlRunLog)
       .select("status").first().getString(0)
     assert(status === "success")
+  }
+
+  test("a bad sidecar knob fails naming its key before the warehouse mutates") {
+    // the tiering knobs are consumed by the LAST stage (sidecar_tier),
+    // after the fact/dim_date/error_log appends commit — so they must be
+    // parsed up front, or a typo fails the run with half a day written
+    val whK = Files.createTempDirectory("graft_e2e_badknob").toString
+    Synthetic.users(spark, nUsers).write.mode("overwrite").parquet(s"$whK/users")
+    Synthetic.products(spark, nProducts).write.mode("overwrite").parquet(s"$whK/products")
+    Synthetic.transactions(spark, 200, day1, nUsers, nProducts)
+      .unionByName(Synthetic.transactions(spark, 50, day2, nUsers, nProducts, firstId = 1000))
+      .write.mode("overwrite").partitionBy("date").parquet(s"$whK/transactions")
+    val etlK = new EtlRun(spark, whK)
+    etlK.run(day1)
+    def snapshot() = Seq("dim_user" -> Schemas.dimUser,
+        "fact_transactions" -> Schemas.factTransactions, "etl_run_log" -> Schemas.etlRunLog)
+      .map { case (t, sc) => sortedRows(etlK.table(t, sc)) }
+    val before = snapshot()
+    for ((key, bad) <- Seq("spark.graft.j5.sidecarKeepDays" -> "45d",
+                           "spark.graft.j5.sidecarCompactMin" -> "0")) {
+      spark.conf.set(key, bad)
+      try {
+        val e = intercept[IllegalArgumentException](etlK.run(day2))
+        assert(e.getMessage.contains(key) && e.getMessage.contains(s"'$bad'"), e.getMessage)
+      } finally spark.conf.unset(key)
+      assert(snapshot() === before, s"warehouse mutated by a run with $key=$bad")
+    }
   }
 
   test("multi-day replay: five drifting days re-version dims exactly and accumulate facts without reloads") {

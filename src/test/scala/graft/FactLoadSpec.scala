@@ -78,63 +78,6 @@ class FactLoadSpec extends SparkSpec {
     assert(warnings.count() === 0)
   }
 
-  /** Run `body` with the J5 bloom gate forced ON (threshold 0: any
-    * existing-fact count qualifies), restoring the default after. */
-  private def withBloomGateForced[T](body: => T): T = {
-    spark.conf.set("spark.graft.j5.bloomMinRows", "0")
-    try body finally spark.conf.unset("spark.graft.j5.bloomMinRows")
-  }
-
-  test("J5 bloom prefilter: forced gate yields IDENTICAL facts and warnings") {
-    // moderate overlap set: ids 1..400 incoming, evens ≤ 600 already
-    // loaded → exactly the odd incoming ids load. Bloom false positives
-    // must fall through to the exact anti-join (same result either way);
-    // false negatives are structurally impossible.
-    val batch = tx((1L to 400L).map(i => (i, "2024-02-01", 10L, 100L, 1, 10.0)): _*)
-    val existing = (2L to 600L by 2).toDF("transaction_id")
-    val (exactFacts, exactWarn, _) = TxLoad.load(batch, dimUser, dimProduct, existing, "2024-02-02")
-    val (bloomFacts, bloomWarn, _) = withBloomGateForced(
-      TxLoad.load(batch, dimUser, dimProduct, existing, "2024-02-02"))
-    assert(sortedRows(bloomFacts) === sortedRows(exactFacts))
-    assert(sortedRows(bloomWarn) === sortedRows(exactWarn))
-    assert(bloomFacts.select("transaction_id").as[Long].collect().toSet
-      === (1L to 400L by 2).toSet)
-  }
-
-  test("J5 bloom prefilter: already-loaded id stays blocked (no false negatives)") {
-    val batch = tx((6L, "2024-02-01", 10L, 100L, 1, 10.0),
-      (7L, "2024-02-01", 10L, 100L, 1, 10.0))
-    val existing = Seq(6L).toDF("transaction_id")
-    val (facts, _, _) = withBloomGateForced(
-      TxLoad.load(batch, dimUser, dimProduct, existing, "2024-02-02"))
-    assert(facts.select("transaction_id").as[Long].collect().toSeq === Seq(7L))
-  }
-
-  test("J5 bloom prefilter: the history scan is might_contain-pruned BEFORE the exchange") {
-    // history must be a REAL scan: over a LocalRelation the optimizer
-    // evaluates the bloom probe at plan time (ConvertToLocalRelation)
-    // and the assertion would see nothing
-    val dir = java.nio.file.Files.createTempDirectory("graft_j5_bloom").toString
-    try {
-      Seq(6L).toDF("transaction_id").write.mode("overwrite").parquet(dir)
-      val existing = spark.read.parquet(dir)
-      val batch = tx((8L, "2024-02-01", 10L, 100L, 1, 10.0))
-      val (facts, _, _) = withBloomGateForced(
-        TxLoad.load(batch, dimUser, dimProduct, existing, "2024-02-02"))
-      val plan = facts.queryExecution.executedPlan.toString
-      assert(plan.contains("might_contain"), s"expected bloom probe in plan:\n$plan")
-    } finally graft.io.Fs.deleteRecursively(dir, spark.sessionState.newHadoopConf())
-  }
-
-  test("J5 bloom prefilter: empty batch keeps the load a no-op") {
-    val batch = tx()
-    val existing = Seq(6L).toDF("transaction_id")
-    val (facts, warnings, _) = withBloomGateForced(
-      TxLoad.load(batch, dimUser, dimProduct, existing, "2024-02-02"))
-    assert(facts.count() === 0)
-    assert(warnings.count() === 0)
-  }
-
   test("J5 sidecar prune: TxLoad yields IDENTICAL facts and warnings (both prune states)") {
     // partitioned history: evens ≤ 600 live in two load_date partitions;
     // the sidecar-pruned load must match the plain path row-for-row,
@@ -174,29 +117,43 @@ class FactLoadSpec extends SparkSpec {
     } finally graft.io.Fs.deleteRecursively(dir, spark.sessionState.newHadoopConf())
   }
 
-  test("share hook: facts, warnings and dates are IDENTICAL to the unshared shape") {
-    // mixed batch: resolved rows, PK duplicates that differ in attributes
-    // (tiebreak must pick the same winner in both shapes), an orphan user,
-    // an orphan product, and an already-loaded id
-    val batch = tx(
-      (1L, "2024-02-01", 10L, 100L, 1, 10.0),
-      (1L, "2024-02-01", 10L, 100L, 2, 20.0), // PK dup, differing attrs
-      (2L, "2024-02-03", 10L, 100L, 1, 10.0),
-      (3L, "2024-02-01", 99L, 100L, 1, 10.0), // orphan user
-      (4L, "2024-02-01", 10L, 999L, 1, 10.0), // orphan product
-      (6L, "2024-02-01", 10L, 100L, 1, 10.0)) // already loaded
-    val existing = Seq(6L).toDF("transaction_id")
-    val (pf, pw, pd) = TxLoad.load(batch, dimUser, dimProduct, existing, "2024-02-04")
-    var hooked: Option[org.apache.spark.sql.DataFrame] = None
-    val (sf, sw, sd) = TxLoad.load(batch, dimUser, dimProduct, existing, "2024-02-04",
-      share = Some { df => hooked = Some(df.cache()); df })
-    try {
-      assert(sortedRows(sf) === sortedRows(pf))
-      assert(sortedRows(sw) === sortedRows(pw))
-      assert(sortedRows(sd) === sortedRows(pd))
-      // the shared frame really carries every consumer's rows (one source)
-      assert(hooked.isDefined && hooked.get.count() === batch.count() - 1) // anti-joined id 6 gone
-    } finally hooked.foreach(_.unpersist())
+  test("fact load is identical under shuffle partitions 1 (AQE on) and 7 (AQE off)") {
+    // plan-independence of the first-wins dedup: PK duplicates that differ
+    // in other columns must keep the same winner whether the window runs
+    // in one partition or seven, broadcast or sort-merge. The batch also
+    // carries an orphan user, an orphan product and an already-loaded id.
+    // It arrives through a shuffle on a non-key column (as EtlRun's
+    // validated batch arrives through the validation window), so the
+    // order in which duplicates reach the dedup varies with the config.
+    val batch = tx(((1L to 60L).flatMap(i => Seq(
+        (i, "2024-02-01", 10L, 100L, 1, 10.0 * i),
+        (i, s"2024-02-0${1 + i % 3}", 10L, 100L, 2 + (i % 4).toInt, 20.0 * i))) ++ Seq(
+        (61L, "2024-02-01", 99L, 100L, 1, 10.0), // orphan user
+        (62L, "2024-02-01", 10L, 999L, 1, 10.0), // orphan product
+        (63L, "2024-02-01", 10L, 100L, 1, 10.0))): _*) // already loaded
+      .repartition(col("quantity"))
+    val existing = Seq(63L).toDF("transaction_id")
+    def loadUnder(conf: (String, String)*): Seq[Seq[Seq[Any]]] = {
+      val before = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        val (f, w, d) = TxLoad.load(batch, dimUser, dimProduct, existing, "2024-02-04")
+        Seq(sortedRows(f), sortedRows(w), sortedRows(d))
+      } finally before.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    val a = loadUnder("spark.sql.shuffle.partitions" -> "1",
+      "spark.sql.adaptive.enabled" -> "true")
+    val b = loadUnder("spark.sql.shuffle.partitions" -> "7",
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    assert(b === a)
+    val Seq(facts, warnings, _) = a
+    assert(facts.size === 60) // one winner per PK; 63 blocked, 61/62 orphaned
+    assert(warnings.map(_(3)).groupBy(identity).view.mapValues(_.size).toMap ===
+      Map("duplicate_tx_id" -> 60, "orphan_user" -> 1, "orphan_product" -> 1))
   }
 
   test("stock orphan (no current dim row) is warned and skipped") {

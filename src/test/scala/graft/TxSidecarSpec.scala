@@ -175,20 +175,15 @@ class TxSidecarSpec extends SparkSpec {
       assert(st.uncoveredDates.isEmpty)
 
       // 40 cold dailies − 2 target months = 38 ≥ compactMin(30): fires
-      spark.conf.set("spark.graft.j5.sidecarKeepDays", "45")
-      spark.conf.set("spark.graft.j5.sidecarCompactMin", "30")
-      try {
-        val fired = TxSidecar.maybeCompact(spark, scPath, st, today = "2025-06-01")
-        assert(fired === Some((40, 2)))
-        val st2 = TxSidecar.readState(spark, scPath, s"$dir/fact")
-        assert(st2.metas.size === 2)
-        assert(st2.uncoveredDates.isEmpty)
-        // self-quenching: tier rows contribute rows − months = 0, no re-fire
-        assert(TxSidecar.maybeCompact(spark, scPath, st2, today = "2025-06-01").isEmpty)
-      } finally {
-        spark.conf.unset("spark.graft.j5.sidecarKeepDays")
-        spark.conf.unset("spark.graft.j5.sidecarCompactMin")
-      }
+      val fired = TxSidecar.maybeCompact(spark, scPath, st, today = "2025-06-01",
+        keepDays = 45, compactMin = 30)
+      assert(fired === Some((40, 2)))
+      val st2 = TxSidecar.readState(spark, scPath, s"$dir/fact")
+      assert(st2.metas.size === 2)
+      assert(st2.uncoveredDates.isEmpty)
+      // self-quenching: tier rows contribute rows − months = 0, no re-fire
+      assert(TxSidecar.maybeCompact(spark, scPath, st2, today = "2025-06-01",
+        keepDays = 45, compactMin = 30).isEmpty)
     } finally graft.io.Fs.deleteRecursively(dir, conf)
   }
 

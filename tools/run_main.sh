@@ -14,8 +14,12 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
+# default heap: half of physical RAM, clamped to 2-8 GB (the test suite's
+# driver-memory formula), so the default fits the machine it runs on
+DEFAULT_MEM="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' \
+  </proc/meminfo 2>/dev/null || echo 2g)"
 exec java $ADD_OPENS ${JAVA_EXTRA:-} \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
-  -Xmx"${SPARK_DRIVER_MEM:-48g}" \
+  -Xmx"${SPARK_DRIVER_MEM:-$DEFAULT_MEM}" \
   -cp "$CP" "$@"
