@@ -1,35 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // partitions sized by BYTES, not cores: AQE starts every shuffle at
-      // 512 partitions and coalesces to its advisory size, so small
-      // inputs still run at ~core-count tasks while 100× corpora fan out
-      // instead of spilling (sf100 finding: q29's verify join at 32 fixed
-      // partitions = 4.7M rows/sort-partition → 181 s; AQE-sized → 94 s,
-      // back to linear). This is the production config story — a
-      // 1000-executor cluster never runs keyed shuffles at 32 partitions.
-      // SPARK_GRAFT_INIT_PARTITIONS: diagnostic override (the q122 A/B
-      // isolated the 512-start's small-scale cost from query code)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INIT_PARTITIONS", "512"))
-      // lift BloomFilterAggregate's 4M-item clamp: q75's hand-built
-      // runtime filter inserts ~11M keys at sf100, and a clamped item
-      // count mis-sizes the hash count (k for 4M with 11M inserted ≈ 17%
-      // fp vs ~6% optimal). Affects only our own bloomAgg calls —
-      // InjectRuntimeFilter needs stats this corpus lacks either way.
-      .config("spark.sql.optimizer.runtime.bloomFilter.maxNumItems", "67108864")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // native functions + date-string-compare pushdown rule
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.builder(aqeStart512 = true).getOrCreate()
 
     // JVM/codegen warmup (untimed): first-query costs are one-time session
     // setup — parquet footer reads, janino compilation, JIT — not operator

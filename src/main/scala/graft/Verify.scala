@@ -1,26 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, only @ _*) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE sizes shuffle partitions by bytes from a 512 start (Bench.scala
-      // has the sf100 rationale)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
-      // match Bench: un-clamp BloomFilterAggregate item counts (q75)
-      .config("spark.sql.optimizer.runtime.bloomFilter.maxNumItems", "67108864")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // native functions + date-string-compare pushdown rule
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.builder(aqeStart512 = true).getOrCreate()
     new java.io.File(outDir).mkdirs()
     // a failed query must become a RED row, never a silently missing one
     // (r4 lost four regressed queries this way): write an explicit

@@ -66,7 +66,7 @@ object Components {
     // labels come out of the previous round's id-keyed aggregate — so
     // the per-iteration plan pays ONE exchange (the union's re-group),
     // not three. Measured at sf0.1: the components stage of the labels
-    // build dropped ~25% (tools.ProfLabels, 5.9 -> 4.5 s).
+    // build dropped ~25% (5.9 -> 4.5 s).
     // Partitioning deliberately NOT pinned to an explicit count (r11 A/B,
     // measured): with the AQE 512-start config the loop's shuffles are
     // sized by BYTES, which beats the zero-exchange co-partitioned loop

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import graft.Session.intKnob
 import graft.audit.Audit
 import graft.dims.{DimDate, Scd2}
 import graft.facts.{StockHistory, TxLoad}
@@ -92,16 +93,6 @@ final class EtlRun(spark: SparkSession, warehouse: String) {
     try body finally spark.sparkContext.setJobDescription(null)
   }
 
-  /** An integer `spark.graft.*` knob, parsed and bounded up front: a
-    * 0/negative/garbage value fails HERE with the conf key named, not
-    * mid-run (NumberFormatException from inside a stage) after the
-    * warehouse already started mutating (ADVICE r14). */
-  private def intKnob(key: String, default: Int, min: Int): Int = {
-    val raw = spark.conf.get(key, default.toString)
-    scala.util.Try(raw.trim.toInt).toOption.filter(_ >= min).getOrElse(
-      throw new IllegalArgumentException(s"$key must be an integer >= $min, got '$raw'"))
-  }
-
   /** One daily run. Returns the run-log row actually written. */
   def run(today: String): DataFrame = {
     // every knob parses before the run reads or writes anything.
@@ -109,9 +100,9 @@ final class EtlRun(spark: SparkSession, warehouse: String) {
     // Futures, one thread) so per-stage times can be read free of 4-way
     // scheduler contention (VERDICT r13 "what's missing" #2). The sidecar
     // pair sets the index tiering trigger ([[graft.facts.TxSidecar.maybeCompact]]).
-    val poolSize = intKnob("spark.graft.etl.stagePool", 4, 1)
-    val keepDays = intKnob("spark.graft.j5.sidecarKeepDays", 45, 0)
-    val compactMin = intKnob("spark.graft.j5.sidecarCompactMin", 30, 1)
+    val poolSize = intKnob(spark.conf, "spark.graft.etl.stagePool", 4, 1)
+    val keepDays = intKnob(spark.conf, "spark.graft.j5.sidecarKeepDays", 45, 0)
+    val compactMin = intKnob(spark.conf, "spark.graft.j5.sidecarCompactMin", 30, 1)
     val startedAt = System.currentTimeMillis()
     // one small-table agg serves run-id allocation AND the J5 sizing
     // heuristic: the latest run's inserted-fact count sizes today's

@@ -120,7 +120,7 @@ object ClusterLabels {
     val edges = Dedup.chainVerifiedEdges(docs, neighborWidth = 3)
     // AUDITED propagation: a persisted labels artifact silently built
     // from unconverged propagation is the worst failure mode this
-    // pipeline has (r8's CcProbe caught exactly that at 100× before
+    // pipeline has (an r8 probe caught exactly that at 100× before
     // pointer jumping landed — split clusters that LOOK fine). Refuse
     // to materialize rather than persist wrong clusters.
     val (cc, report) = graft.ops.Components.connectedComponentsAudited(

@@ -960,9 +960,11 @@ object QEtl {
         // memoized per (dir, table) per JVM so sweeps pay it once; the
         // threshold is a conf so PlanBudgetSpec can force the scale
         // variant at test size (the audit corpus could otherwise never
-        // render it — VERDICT r13 "what's wrong" #2).
-        val big = memoCount(s, dir, "lineitem") >=
-          s.conf.get("spark.graft.q75.minProbeRows", "200000000").toLong
+        // render it — VERDICT r13 "what's wrong" #2). It parses before
+        // the count runs, so a bad value fails naming its key.
+        val minProbeRows =
+          graft.Session.intKnob(s.conf, "spark.graft.q75.minProbeRows", 200000000, 0)
+        val big = memoCount(s, dir, "lineitem") >= minProbeRows
         val pruned = if (!big)
           t(s, dir, "lineitem")
         else {
@@ -1335,7 +1337,7 @@ object QEtl {
     // total itself (no division repr divergence); every %31 tx appears
     // twice so the 2nd occurrence logs the duplicate warning.
     Qry("q53_tx_price_dup_contract",
-      (s, dir) => q53Frame(s, dir, windowedOcc = true),
+      (s, dir) => q53Frame(s, dir),
       Some("""WITH base AS (SELECT o_orderkey AS transaction_id,
         |    CASE WHEN o_orderkey % 17 = 0 THEN strftime(o_orderdate, '%d-%m-%Y')
         |         ELSE strftime(o_orderdate, '%Y-%m-%d') END AS date,
@@ -2043,22 +2045,11 @@ object QEtl {
       Some(q180Sql))
   )
 
-  /** q53's frame, parameterized on the duplicate-occurrence formulation
-    * (VERDICT r10 next-round #7's A/B):
-    *  - `windowedOcc = true` (the registered shape): union the dup rows,
-    *    then number occurrences with the real PK window — one full-fact
-    *    exchange on transaction_id, the honest "validate a batch that
-    *    contains duplicates" shape (W3's operator form lives in
-    *    [[graft.ops.Dedup]] / q11 / q12);
-    *  - `windowedOcc = false` (the A/B challenger): the union branches
-    *    carry constant occurrence numbers (originals 1, the injected
-    *    copy 2). Output-identical HERE because the two copies of a %31
-    *    row are byte-identical, so the window's intra-key order between
-    *    them is arbitrary — but it removes the full-fact shuffle, making
-    *    the whole query scan-shaped. tools.Q53Ab times both; the loser
-    *    stays available for the record. */
-  private[graft] def q53Frame(s: SparkSession, dir: String,
-                              windowedOcc: Boolean): DataFrame = {
+  /** q53's frame: union the dup rows, then number occurrences with the
+    * real PK window — one full-fact exchange on transaction_id, the
+    * honest "validate a batch that contains duplicates" shape (W3's
+    * operator form lives in [[graft.ops.Dedup]] / q11 / q12). */
+  private def q53Frame(s: SparkSession, dir: String): DataFrame = {
     val ok = col("o_orderkey")
     val base = t(s, dir, "orders").select(
       ok.as("transaction_id"),
@@ -2075,11 +2066,7 @@ object QEtl {
       element_at(array(lit("Pending"), lit("Success"), lit("Failed")),
         (ok % 3).cast("int") + 1).as("status"))
     val dups = base.filter(col("transaction_id") % 31 === 0)
-    val tx =
-      if (windowedOcc) base.unionByName(dups)
-      else base.withColumn("dup_occ", lit(1))
-        .unionByName(dups.withColumn("dup_occ", lit(2)))
-    val looked = tx
+    val joined = base.unionByName(dups)
       .join(broadcast(t(s, dir, "customer").select(col("c_custkey").as("vu_user_id"))),
         col("user_id") === col("vu_user_id"), "left_outer")
       .join(broadcast(t(s, dir, "part").select(col("p_partkey").as("vp_product_id"),
@@ -2090,10 +2077,8 @@ object QEtl {
           when(col("transaction_id") % 37 === 0, col("vp_price") + 5.0)
             .otherwise(round(col("vp_price") * col("quantity"), 2)))
           .otherwise(col("o_totalprice")))
-    val joined =
-      if (windowedOcc) looked.withColumn("dup_occ", row_number().over(
+      .withColumn("dup_occ", row_number().over(
         Window.partitionBy("transaction_id").orderBy("product_id", "date")))
-      else looked
     val v = new Validator(
       Rules.transactionRules(col("transaction_id"), col("date"), col("user_id"),
         col("product_id"), col("quantity"), col("payment_type"), col("status"),

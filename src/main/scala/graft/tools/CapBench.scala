@@ -76,18 +76,7 @@ object CapBench {
     val nRuns = scala.util.Try(sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").trim.toInt)
       .getOrElse(2).max(1)
     val timeLabels = sys.env.getOrElse("SPARK_GRAFT_TIME_LABELS", "1") == "1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE sizes shuffle partitions by bytes from a 512 start (Bench.scala
-      // has the sf100 rationale)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.builder(aqeStart512 = true).getOrCreate()
 
     // --- guard sites (key-size frames mirror the operators exactly) ---
     def bandSizes(s: SparkSession, dir: String): DataFrame =

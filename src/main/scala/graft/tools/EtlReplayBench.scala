@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.gen.Synthetic
 
@@ -60,29 +59,19 @@ object EtlReplayBench {
     val nUsers = sys.env.getOrElse("SPARK_GRAFT_USERS", "500000").toInt
     val nProducts = sys.env.getOrElse("SPARK_GRAFT_PRODUCTS", "50000").toInt
     val txPerDay = sys.env.getOrElse("SPARK_GRAFT_TX_PER_DAY", "2000000").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
+    val cpus = graft.Session.cpus()
     val outPath = sys.env.getOrElse("SPARK_GRAFT_OUT", "/tmp/BENCH_etl_replay.json")
     val fromDay = sys.env.getOrElse("SPARK_GRAFT_FROM", "0").toInt
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // the daily increment is MB-scale: per-job core-count AQE start is
-      // the posture q180 adopted for exactly this job shape (VERDICT r11
-      // #3); a replay session runs nothing else, so it is session-global
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // sf100-sized daily increments carry ~20M ids; the default 4M
-      // maxNumItems clamp would silently saturate the J5 sidecar blooms
-      // (ranges still prune monotone-id days, but interleaved-id probes
-      // would degrade) — same lift Bench/Verify carry
-      .config("spark.sql.optimizer.runtime.bloomFilter.maxNumItems", "67108864")
+    // the daily increment is MB-scale: AQE starts at core count (the
+    // factory default), the posture q180 adopted for exactly this job
+    // shape (VERDICT r11 #3). sf100-sized days carry ~20M ids, so the J5
+    // sidecar blooms also lift the bit clamp next to the factory's item
+    // lift (ranges still prune monotone-id days, but saturated blooms
+    // would degrade interleaved-id probes)
+    val spark = graft.Session.builder(cpus)
       .config("spark.sql.optimizer.runtime.bloomFilter.maxNumBits", "536870912")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     sys.env.get("SPARK_GRAFT_STAGE_POOL")
       .foreach(v => spark.conf.set("spark.graft.etl.stagePool", v))
     sys.env.get("SPARK_GRAFT_SIDECAR_KEEP")

@@ -12,16 +12,9 @@ import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // same extensions as Bench/Verify — the pushdown-rule plans this
-      // tool audits must be the plans those harnesses run
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // SparkSpec's 4 cores: the pushdown-rule plans this tool audits
+    // must be the plans the specs and harnesses run
+    val spark = graft.Session.builder(cpus = 4).getOrCreate()
     if (args.tail.sameElements(Array("--all"))) { auditAll(spark, sfDir); spark.stop(); return }
     args.tail.foreach { name =>
       val (df, cuts) = graft.ops.Fixpoint.recordingCuts(

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Generates the all-query plan-shape ceiling table PlanBudgetSpec pins
   * (VERDICT r10 next-round #8): 345 exchanges across 180 plans is healthy,
   * but only the historically-bad plans had hand-written budgets — a
@@ -18,22 +16,15 @@ import org.apache.spark.sql.SparkSession
   * Counting matches PlanAudit/PlanBudgetSpec exactly
   * ([[graft.ops.Bucketing.shuffleCount]] on the Initial-Plan-stripped
   * string), so the committed artifact and the regression guard can't
-  * drift. The session config mirrors SparkSpec (local[4], 4 shuffle
-  * partitions, graft extensions) — ceilings are only valid against the
+  * drift. The session is SparkSpec's (`graft.Session` at 4 cores) —
+  * ceilings are only valid against the
   * environment that generated them.
   */
 object PlanCeilingGen {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outFile = args(1)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.builder(cpus = 4).getOrCreate()
     // the label-consumer family materializes the shared closure at
     // construction; build it once up front (PlanAudit discipline)
     try graft.queries.ClusterLabels(spark, sfDir)

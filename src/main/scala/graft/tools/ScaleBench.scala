@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Empirical scale evidence for the heavy query families (VERDICT r5
   * next-round #1): run the most expensive registered queries at the base
   * scale AND at a [[ScaleGen]]-produced K× scale, record per-query
@@ -69,18 +67,7 @@ object ScaleBench {
     val outPath = sys.env.getOrElse("SPARK_GRAFT_OUT", "/root/repo/BENCH_sf1.json")
     val nRuns = scala.util.Try(sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").trim.toInt)
       .getOrElse(2).max(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE sizes shuffle partitions by bytes from a 512 start (Bench.scala
-      // has the sf100 rationale)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.builder(aqeStart512 = true).getOrCreate()
 
     // codegen warmup: each heavy plan compiles once at sf0.001 (identical
     // generated classes — see Bench.scala's rationale), so timed runs at

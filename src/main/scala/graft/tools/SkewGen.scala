@@ -34,13 +34,7 @@ object SkewGen {
     val src = args(0)
     val out = args(1)
     val denom = if (args.length > 2) args(2).toInt else 20
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.builder().getOrCreate()
     run(spark, src, out, denom)
     spark.stop()
   }

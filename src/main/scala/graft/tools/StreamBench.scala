@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -73,18 +73,7 @@ object StreamBench {
     // fail fast on a malformed horizon BEFORE the ~100 s streaming runs,
     // not after them at the replay step (ADVICE r12)
     val horizonMs = parseMs(horizon)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE sizes shuffle partitions by bytes from a 512 start (Bench.scala
-      // has the sf100 rationale)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.builder(aqeStart512 = true).getOrCreate()
 
     // ---- stage: the q178 corpus as `chunks` parquet files in arrival
     // order (file source picks up oldest-mtime first; ranks are dense so

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.Window
 
 /** Global-window inventory (VERDICT r15 #2): for every registered query,
@@ -14,14 +14,7 @@ import org.apache.spark.sql.catalyst.plans.logical.Window
 object WindowAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.builder(cpus = 4).getOrCreate()
     try graft.queries.ClusterLabels(spark, sfDir)
     catch { case e: Throwable => System.err.println(s"[winaudit] labels: $e") }
     val only = args.tail.toSet

@@ -35,20 +35,14 @@ class FaultToleranceLocalClusterSpec extends AnyFunSuite {
     val classes = Seq("target/scala-2.13/classes", "target/scala-2.13/test-classes")
       .map(p => new java.io.File(p).getAbsolutePath).mkString(":")
     val ckpt = java.nio.file.Files.createTempDirectory("graft-ft-ckpt")
-    val s = SparkSession.builder()
-      .master("local-cluster[2,2,1536]")
-      .appName("graft-fault-tolerance")
+    val s = Session.builder(cpus = 4).master("local-cluster[2,2,1536]")
       .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.executor.extraClassPath", classes)
       // a killed executor must not fail the app before retries engage
       .config("spark.task.maxFailures", "8")
       .config("spark.stage.maxConsecutiveAttempts", "8")
       .getOrCreate()
     try {
-      s.sparkContext.setLogLevel("WARN")
       s.sparkContext.setCheckpointDir(ckpt.toString)
 
       def answer(): Seq[Seq[String]] = {

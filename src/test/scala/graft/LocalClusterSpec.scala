@@ -63,13 +63,8 @@ class LocalClusterSpec extends AnyFunSuite {
     }.toMap
 
   private def builder(master: String) =
-    SparkSession.builder()
-      .master(master)
-      .appName("graft-local-cluster")
+    Session.builder(cpus = 4).master(master)
       .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
 
   test("representative battery is bit-identical across real executor JVMs, " +
        "reliable-checkpoint branch included") {
@@ -77,7 +72,6 @@ class LocalClusterSpec extends AnyFunSuite {
     graft.queries.ClusterLabels.reset()
     val ref = {
       val s = builder("local[4]").getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
       try run(s)
       finally { graft.queries.ClusterLabels.reset(); s.stop() }
     }
@@ -93,7 +87,6 @@ class LocalClusterSpec extends AnyFunSuite {
         val s = builder("local-cluster[2,2,1536]")
           .config("spark.executor.extraClassPath", classes)
           .getOrCreate()
-        s.sparkContext.setLogLevel("WARN")
         s.sparkContext.setCheckpointDir(ckpt.toString)
         try {
           assert(s.sparkContext.master.startsWith("local-cluster"),

@@ -541,4 +541,13 @@ class PlanBudgetSpec extends SparkSpec {
       assert(sortedRows(df) === ungated)
     } finally spark.conf.unset("spark.graft.q75.minProbeRows")
   }
+
+  test("q75 gate: a garbage minProbeRows fails naming its key") {
+    spark.conf.set("spark.graft.q75.minProbeRows", "abc")
+    try {
+      val e = intercept[IllegalArgumentException](
+        SparkEntry.queries("q75_exists_orders")(spark, sfDir))
+      assert(e.getMessage.contains("spark.graft.q75.minProbeRows"), e.getMessage)
+    } finally spark.conf.unset("spark.graft.q75.minProbeRows")
+  }
 }

@@ -19,17 +19,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // native functions + date-string-compare pushdown rule
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // a fixed 4 cores, not SPARK_GRAFT_CPUS: plan ceilings and plan-shape
+  // budgets are recorded against this session
+  lazy val session: SparkSession = Session.builder(cpus = 4).getOrCreate()
 }

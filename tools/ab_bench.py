@@ -11,7 +11,7 @@ ratio can only be code.
 Usage:
   tools/ab_bench.py --classes-a <dir> --classes-b <dir> --sf <sfDir> \
       --queries q29_minhash_lsh,q138_incremental_dedup \
-      [--alternations 3] [--cpus 32] [--out BENCH_ab.json] \
+      [--alternations 3] [--cpus N] [--out BENCH_ab.json] \
       [--label-a r9] [--label-b r10]
 
 Each JVM runs graft.Bench with SPARK_GRAFT_ONLY=<queries>, RUNS=1 (the
@@ -40,6 +40,17 @@ ADD_OPENS_SUN = ["sun.nio.ch", "sun.nio.cs", "sun.security.action",
                  "sun.util.calendar"]
 
 
+def default_heap():
+    """Half of physical RAM clamped to 2-8 GB (tools/run_main.sh's formula),
+    so the default fits the machine it runs on. SPARK_DRIVER_MEM overrides."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(l.split()[1]) for l in f if l.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        kb = 0
+    return f"{min(max(kb // 2097152, 2), 8)}g"
+
+
 def run_side(classes, sf, queries, cpus, out_json):
     cmd = ["java"]
     for p in ADD_OPENS_PKGS:
@@ -47,7 +58,8 @@ def run_side(classes, sf, queries, cpus, out_json):
     for p in ADD_OPENS_SUN:
         cmd += ["--add-opens", f"java.base/{p}=ALL-UNNAMED"]
     cmd += ["-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-            "-Xmx48g", "-cp", f"{classes}:{SPARK_JARS}", "graft.Bench"]
+            f"-Xmx{os.environ.get('SPARK_DRIVER_MEM') or default_heap()}",
+            "-cp", f"{classes}:{SPARK_JARS}", "graft.Bench"]
     env = dict(os.environ)
     env.update({
         "SPARK_GRAFT_SF_DIR": sf,
@@ -76,7 +88,7 @@ def main():
     ap.add_argument("--queries", required=True)
     ap.add_argument("--alternations", type=int, default=4,
                     help="even count balances the two run orders")
-    ap.add_argument("--cpus", type=int, default=32)
+    ap.add_argument("--cpus", type=int, default=os.cpu_count())
     ap.add_argument("--out", default="/tmp/bench_ab.json")
     ap.add_argument("--label-a", default="A")
     ap.add_argument("--label-b", default="B")
