@@ -60,8 +60,7 @@ object Bench {
     // THROWS is a failure, not a timing: it lands in `failed` with its
     // message and is excluded from per-query times and the total (r4
     // recorded four time-to-throw values as 14x "speedups").
-    val nRuns = scala.util.Try(sys.env.getOrElse("SPARK_GRAFT_RUNS", "1").trim.toInt)
-      .getOrElse(1).max(1)
+    val nRuns = Session.intEnv("SPARK_GRAFT_RUNS", 1, 1)
     // SPARK_GRAFT_ONLY="q07_pit_lookup,q130_bigram_lm": time just these
     // (diagnostics — isolates a query's cost from the full-sweep context)
     val only = sys.env.get("SPARK_GRAFT_ONLY")

@@ -13,11 +13,17 @@ object Session {
 
   /** Local core count: `SPARK_GRAFT_CPUS`, default the JVM's available
     * processors. Anything but a positive integer fails naming the var. */
-  def cpus(env: Map[String, String] = sys.env): Int = env.get(CpusVar) match {
-    case None => Runtime.getRuntime.availableProcessors()
-    case Some(raw) => raw.trim.toIntOption.filter(_ > 0).getOrElse(
-      throw new IllegalArgumentException(s"$CpusVar must be a positive integer, got '$raw'"))
-  }
+  def cpus(env: Map[String, String] = sys.env): Int =
+    intEnv(CpusVar, Runtime.getRuntime.availableProcessors(), 1, env)
+
+  /** An integer env var of a main, `default` when unset; a garbage or
+    * too-small value fails naming the variable. */
+  def intEnv(name: String, default: Int, min: Int, env: Map[String, String] = sys.env): Int =
+    env.get(name).fold(default)(atLeast(name, _, min))
+
+  private def atLeast(name: String, raw: String, min: Int): Int =
+    raw.trim.toIntOption.filter(_ >= min).getOrElse(
+      throw new IllegalArgumentException(s"$name must be an integer >= $min, got '$raw'"))
 
   /** `local[cpus]` with the engine config. `aqeStart512` is the
     * query-catalog posture (Bench, Verify, the scale benches): AQE starts
@@ -52,9 +58,6 @@ object Session {
   /** An integer `spark.graft.*` knob, parsed and bounded where it is
     * read: a too-small or garbage value fails naming its conf key, not
     * as a bare NumberFormatException from inside a stage. */
-  def intKnob(conf: RuntimeConfig, key: String, default: Int, min: Int): Int = {
-    val raw = conf.get(key, default.toString)
-    raw.trim.toIntOption.filter(_ >= min).getOrElse(
-      throw new IllegalArgumentException(s"$key must be an integer >= $min, got '$raw'"))
-  }
+  def intKnob(conf: RuntimeConfig, key: String, default: Int, min: Int): Int =
+    atLeast(key, conf.get(key, default.toString), min)
 }

@@ -10,10 +10,12 @@ import org.apache.spark.sql.functions._
   * `weekofyear` in Spark is already ISO-8601, and `weekday(c)` is 0=Monday
   * so `+1` yields ISO weekday (1=Mon..7=Sun).
   *
-  * Built from the *data's own* distinct dates (the reference back-fills
-  * `dim_date` per transaction date, etl.py:320-324) — so late/out-of-order
-  * rows always have a calendar row. A distinct over dates is a tiny
-  * aggregation even at 100 TB (bounded by days, not rows).
+  * Built from the *data's own* distinct dates — a distinct over dates is
+  * a tiny aggregation even at 100 TB (bounded by days, not rows). The
+  * reference back-fills `dim_date` per transaction date (etl.py:320-324);
+  * [[graft.pipeline.EtlRun]] loads only transactions dated `today`, so
+  * it appends the row of a one-date frame holding `today` when the table
+  * lacks it.
   */
 object DimDate {
   def dateId(c: Column): Column = date_format(c, "yyyyMMdd").cast("int")

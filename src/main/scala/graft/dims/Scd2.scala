@@ -12,9 +12,10 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * `UPDATE` (expiry, etl.py:197-201) + `INSERT` (new version). Spark has no
   * point UPDATE, so the idiomatic pattern is a snapshot rewrite: read the
   * current snapshot, compute the merged next snapshot, overwrite
-  * (SURVEY.md §1.6). One equi-join + one union; with the dimension small
-  * relative to facts the join side broadcasts, and at 100 TB the dimension
-  * rewrite is still dwarfed by the fact load it serves.
+  * (SURVEY.md §1.6) — and, like the reference, write nothing on a day
+  * with no new version ([[persist]]). One equi-join + one union; with the
+  * dimension small relative to facts the join side broadcasts, and at
+  * 100 TB the dimension rewrite is still dwarfed by the fact load it serves.
   *
   * Semantics per the reference:
   *  - change detection compares tracked columns null-safely (etl.py:195, 243)
@@ -65,7 +66,33 @@ final case class Scd2(naturalKey: Seq[String], tracked: Seq[String], skName: Str
     *                  merged frame is no longer referenced, and stops
     *                  the chained plan growing at all. */
   def merge(current: DataFrame, incoming: DataFrame, runDate: String,
-            startForNew: Column, cutJoin: Boolean = false): DataFrame = {
+            startForNew: Column, cutJoin: Boolean = false): DataFrame =
+    mergeWithFresh(current, incoming, runDate, startForNew, cutJoin)._1
+
+  /** Merge, then persist the next snapshot at `path` — the one SCD2
+    * snapshot write path ([[graft.pipeline.EtlRun]]'s dimension stages,
+    * [[graft.streaming.StreamPipelines.scd2Sink]]). Returns the number of
+    * fresh versions (new plus re-versioned members): the inserted count.
+    *
+    * Every current row is carried exactly once (unchanged or expired) and
+    * an expiry comes only with a fresh version, so with zero fresh rows
+    * the next snapshot IS the current one: the write is skipped outright
+    * (no job, no staging dir, no renames), as the reference's point
+    * UPDATE/INSERT writes nothing on an unchanged day (etl.py:188-263).
+    * A changed day evaluates the join twice (count, then write); caching
+    * it measured slower at perfbench's size than evaluating it twice.
+    * Like [[merge]], it assumes one `incoming` row per natural key. */
+  def persist(current: DataFrame, incoming: DataFrame, runDate: String,
+              startForNew: Column, path: String): Long = {
+    val (next, fresh) = mergeWithFresh(current, incoming, runDate, startForNew, cutJoin = false)
+    val nFresh = fresh.count()
+    if (nFresh > 0) graft.io.Fs.overwriteViaStaging(next, path)
+    nFresh
+  }
+
+  /** The next snapshot, and the join rows that emit its fresh versions. */
+  private def mergeWithFresh(current: DataFrame, incoming: DataFrame, runDate: String,
+                             startForNew: Column, cutJoin: Boolean): (DataFrame, DataFrame) = {
     val run = to_date(lit(runDate))
 
     val history = current.filter(col("current_flag") === 0)
@@ -114,8 +141,8 @@ final case class Scd2(naturalKey: Seq[String], tracked: Seq[String], skName: Str
     // bounded by daily change volume, not table size.
     val maxSk = current.agg(coalesce(max(col(skName)), lit(0L)).as("max_sk"))
     val skWindow = Window.orderBy(naturalKey.map(k => col(s"in_$k")): _*)
-    val fresh = joined
-      .filter(hasInc && (!hasCur || changed))
+    val freshRows = joined.filter(hasInc && (!hasCur || changed))
+    val fresh = freshRows
       .withColumn("rn", row_number().over(skWindow))
       .crossJoin(broadcast(maxSk))
       .select(
@@ -126,7 +153,7 @@ final case class Scd2(naturalKey: Seq[String], tracked: Seq[String], skName: Str
           lit(1).as("current_flag"): _*
       )
 
-    history.unionByName(carried).unionByName(fresh)
+    (history.unionByName(carried).unionByName(fresh), freshRows)
   }
 
   /** Bootstrap a version-1 snapshot from a bare extract.

@@ -39,7 +39,9 @@ object TxLoad {
     * @return (newFacts, warnings, dimDateRows) — warnings carry
     *         (entity, table_name, record_id, error_type, severity, message);
     *         dimDateRows are calendar rows for every loaded tx date
-    *         (the reference back-fills dim_date per row, etl.py:320-324)
+    *         (the reference back-fills dim_date per row, etl.py:320-324);
+    *         EtlRun appends the calendar row of `today` instead, and
+    *         only the perfbench layer probe still reads this frame.
     */
   def load(validTx: DataFrame, dimUser: DataFrame, dimProduct: DataFrame,
            existingFact: DataFrame, today: String,

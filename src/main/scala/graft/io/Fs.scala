@@ -91,25 +91,33 @@ object Fs {
 
   /** Repair a snapshot table after a crash mid-[[overwriteViaStaging]]:
     * if the target is missing, promote a `_SUCCESS`-complete staging dir
-    * forward, else restore the `__old` snapshot. Idempotent and cheap
-    * (2-3 existence probes when the target is healthy — it never touches
-    * a table that has no swap debris). Returns whether it healed
-    * anything: a heal changes the files behind `path`, so a caller whose
-    * session may have cached the pre-crash listing (the file-status
-    * cache pins listings for the session, `metadataCacheTTLSeconds=-1` —
-    * the r13 stale-cache lesson) must `refreshByPath` on true before
-    * reading. */
+    * forward, else restore the `__old` snapshot, and drop the losing side.
+    * If the target is present, drop a leftover `__old` (a crash between
+    * promotion and drop); a `__staging` beside a present target is left
+    * alone, since a concurrent writer may be staging it. A skipped next
+    * write ([[graft.dims.Scd2.persist]]) would otherwise keep this debris.
+    * Idempotent and cheap (2 existence probes when the target is healthy
+    * — it never touches a table that has no swap debris). Returns whether
+    * it healed anything: a heal changes the files behind `path`, so a
+    * caller whose session may have cached the pre-crash listing (the
+    * file-status cache pins listings for the session,
+    * `metadataCacheTTLSeconds=-1` — the r13 stale-cache lesson) must
+    * `refreshByPath` on true before reading. Dropping `__old` beside a
+    * present target changes nothing behind `path` and returns false. */
   def recoverSnapshot(path: String, conf: Configuration): Boolean = {
     val target = new Path(path)
     val f = fs(target, conf)
-    if (f.exists(target)) false
-    else {
+    if (f.exists(target)) {
+      val old = new Path(oldOf(path))
+      if (f.exists(old)) f.delete(old, true)
+      false
+    } else {
       val staging = new Path(stagingOf(path))
       val old = new Path(oldOf(path))
-      if (f.exists(staging) && hasSuccessMarker(stagingOf(path), conf))
-        f.rename(staging, target)
-      else if (f.exists(old)) f.rename(old, target)
-      else false
+      val (winner, loser) =
+        if (f.exists(staging) && hasSuccessMarker(stagingOf(path), conf)) (staging, old)
+        else (old, staging)
+      f.exists(winner) && f.rename(winner, target) && { f.delete(loser, true); true }
     }
   }
 
@@ -131,7 +139,7 @@ object Fs {
     * pre-swap listing forever (`metadataCacheTTLSeconds=-1`), so without
     * it a later read of the same path in this session resolves to
     * renamed-away part-files. Shared by every snapshot table writer
-    * (EtlRun dims, CorpusRun, streaming scd2Sink). */
+    * (`Scd2.persist`, CorpusRun, the sidecar tiering). */
   def overwriteViaStaging(df: org.apache.spark.sql.DataFrame, path: String): Unit = {
     stageSnapshot(df, path)
     commitSnapshot(df.sparkSession, path)

@@ -19,11 +19,13 @@ import graft.validate.{Rules, Validator}
   *   (error log + run log) — each stage an independent write (L2), the
   *   run row last (L1).
   *
-  * Storage is a parquet "warehouse" directory per table. Dimensions are
-  * read-modify-OVERWRITE via a staging dir + atomic move (Spark cannot
-  * update in place; SURVEY §1.6); facts and logs are appends. Idempotent
-  * re-runs come from the anti-join (J5) + change-only (P5) semantics, not
-  * from storage transactions — proven by the two-run test suite.
+  * Storage is a parquet "warehouse" directory per table. A dimension
+  * with new versions is read-modify-OVERWRITTEN via a staging dir + atomic
+  * move (Spark cannot update in place; SURVEY §1.6), one without is not
+  * written ([[graft.dims.Scd2.persist]]); facts and logs are appends.
+  * Idempotent re-runs come from the anti-join (J5) + change-only (P5)
+  * semantics, not from storage transactions — proven by the two-run test
+  * suite.
   */
 final class EtlRun(spark: SparkSession, warehouse: String) {
 
@@ -44,12 +46,6 @@ final class EtlRun(spark: SparkSession, warehouse: String) {
       spark.read.schema(schema).parquet(path(name))
     else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }
-
-  /** Overwrite-via-staging: write next to `<table>__staging`, swap dirs
-    * (shared implementation with the cache-refresh rationale: [[graft.io
-    * .Fs.overwriteViaStaging]]). */
-  private def overwrite(df: DataFrame, name: String): Unit =
-    graft.io.Fs.overwriteViaStaging(df, path(name))
 
   /** Fact appends partition by `load_date`: the daily access paths (S3
     * incremental scans, re-run anti-joins, backfill reads) then prune to
@@ -188,13 +184,9 @@ final class EtlRun(spark: SparkSession, warehouse: String) {
         .map { case (ann, v) => v.errorLog(ann, lit(runId)) }
         .reduce(_ unionByName _)
 
-      // ---- DIMS (SCD2 snapshot rewrite; S6/S7). Inserted counts ride the
-      // snapshot WRITE as observe() metrics instead of separate count()
-      // actions — the old shape cached the merged frame and paid one full
-      // materialization per counter, which at a real dimension size is a
-      // second table-wide pass (and at q180's fixture size was pure fixed
-      // job overhead, VERDICT r10 #1). The CURRENT snapshot count must be
-      // taken BEFORE the overwrite swaps the files out from under it.
+      // ---- DIMS (SCD2; S6/S7). Each stage is one Scd2.persist: count the
+      // merge's fresh versions (the inserted count), then rewrite the
+      // snapshot only when there are any — a re-run writes no dim file.
       //
       // INDEPENDENT stages run CONCURRENTLY (the production-DAG pattern a
       // scheduler would apply): dim_user ∥ dim_product first, then — once
@@ -208,13 +200,8 @@ final class EtlRun(spark: SparkSession, warehouse: String) {
       // slowest branch instead of the sum.
       val userDimSpec = Scd2(Seq("user_id"), Seq("name", "email"), "user_sk", Seq("join_date"))
       val curUserDim = table("dim_user", Schemas.dimUser)
-      val nextUserDim = userDimSpec.merge(curUserDim,
-        validUsers.withColumn("join_date", to_date(col("join_date"))),
-        today, col("join_date"))
       val productDimSpec = Scd2(Seq("product_id"), Seq("name", "category", "price"), "product_sk")
       val curProductDim = table("dim_product", Schemas.dimProduct)
-      val nextProductDim = productDimSpec.merge(curProductDim,
-        validProducts.drop("stock"), today, to_date(lit(today)))
 
       val pool = java.util.concurrent.Executors.newFixedThreadPool(poolSize)
       implicit val ec: scala.concurrent.ExecutionContext =
@@ -230,18 +217,13 @@ final class EtlRun(spark: SparkSession, warehouse: String) {
       val (userInserted, productInserted, stockInserted, txInserted) =
         try {
           val fUser = scala.concurrent.Future(stage("dim_user") {
-            val before = curUserDim.count()
-            val obs = org.apache.spark.sql.Observation()
-            overwrite(nextUserDim.select(Schemas.dimUser.fieldNames.map(col).toSeq: _*)
-              .observe(obs, count(lit(1)).as("n")), "dim_user")
-            obs.get("n").asInstanceOf[Long] - before
+            userDimSpec.persist(curUserDim,
+              validUsers.withColumn("join_date", to_date(col("join_date"))),
+              today, col("join_date"), path("dim_user"))
           })
           val fProduct = scala.concurrent.Future(stage("dim_product") {
-            val before = curProductDim.count()
-            val obs = org.apache.spark.sql.Observation()
-            overwrite(nextProductDim.select(Schemas.dimProduct.fieldNames.map(col).toSeq: _*)
-              .observe(obs, count(lit(1)).as("n")), "dim_product")
-            obs.get("n").asInstanceOf[Long] - before
+            productDimSpec.persist(curProductDim,
+              validProducts.drop("stock"), today, to_date(lit(today)), path("dim_product"))
           })
           val Seq(uIns, pIns) = awaitAll(Seq(fUser, fProduct))
 
@@ -268,7 +250,7 @@ final class EtlRun(spark: SparkSession, warehouse: String) {
           // history bytes on a disjoint-id day. Partitions without a
           // sidecar row (pre-sidecar warehouse) are always scanned, so
           // results are identical on any warehouse state.
-          val (txFacts, txWarnings, dateRows, sidecarRowDf, sidecarState) = stage("fact_plan") {
+          val (txFacts, txWarnings, sidecarRowDf, sidecarState) = stage("fact_plan") {
             val st = graft.facts.TxSidecar.readState(
               spark, path(graft.facts.TxSidecar.tableName), path("fact_transactions"))
             // bloom sizing from data: 2× the last run's inserted count
@@ -294,18 +276,11 @@ final class EtlRun(spark: SparkSession, warehouse: String) {
               s"uncovered=${st.uncoveredDates.size};" +
               s"scan=${res.scanDates.size}/${res.allDates};batch_ids=${bb.map(_.nRows).getOrElse(0L)}" +
               (if (res.ineffective) ";ineffective=1" else "")
-            val (f, w, d) = TxLoad.load(validTx, dimUserNow, dimProductNow,
+            val (f, w, _) = TxLoad.load(validTx, dimUserNow, dimProductNow,
               table("fact_transactions", Schemas.factTransactions), today,
               sidecarPrune = Some(res.prune(bb.map(_.bloom))))
-            (f, w, d, bb.map(graft.facts.TxSidecar.sidecarRow(spark, today, _)), st)
+            (f, w, bb.map(graft.facts.TxSidecar.sidecarRow(spark, today, _)), st)
           }
-          // dim_date backfill for today + every loaded tx date
-          // (etl.py:320-324, 431) — merge-distinct against the calendar
-          val curDates = table("dim_date", Schemas.dimDate)
-          val todayRow = DimDate.fromDates(
-            spark.range(1).select(to_date(lit(today)).as("d")), col("d"))
-          val newDates = dateRows.unionByName(todayRow)
-            .join(curDates.select("date_id"), Seq("date_id"), "left_anti").distinct()
           // ---- AUDIT (S9/S10) — severity totals observe() the error-log
           // append (one pass instead of cache + two filtered counts +
           // write). The warnings derive from the LOAD INPUTS, not the
@@ -330,8 +305,16 @@ final class EtlRun(spark: SparkSession, warehouse: String) {
               "fact_transactions", Seq("load_date"))
             obs.get("n").asInstanceOf[Long]
           })
+          // dim_date back-fill (etl.py:320-324, 431) from the calendar: the
+          // extract keeps only raw dates equal to `today`, so every loaded
+          // tx date is `today` — append its row only when it is missing.
+          // One partition: a default range also writes an empty part-file.
           val fDates = scala.concurrent.Future(stage("dim_date") {
-            append(newDates.select(Schemas.dimDate.fieldNames.map(col).toSeq: _*), "dim_date")
+            val todayDate = to_date(lit(today))
+            if (table("dim_date", Schemas.dimDate)
+                .filter(col("date_id") === DimDate.dateId(todayDate)).isEmpty)
+              append(DimDate.fromDates(spark.range(0, 1, 1, 1).select(todayDate.as("d")), col("d"))
+                .select(Schemas.dimDate.fieldNames.map(col).toSeq: _*), "dim_date")
             0L
           })
           val fErrors = scala.concurrent.Future(stage("error_log") {

@@ -61,17 +61,18 @@ object StreamPipelines {
         col("event_type"), col("n"))
 
   /** Streaming dimension maintenance: SCD2 upserts from a mutation stream
-    * via `foreachBatch` — each micro-batch runs the SAME [[graft.dims
-    * .Scd2.merge]] the daily batch uses and swaps the snapshot atomically
-    * ([[graft.io.Fs.overwriteViaStaging]]), so batch and streaming
-    * dimension states are definitionally consistent. The dim snapshot at
-    * `dimPath` must exist (seed with `Scd2.init`). Caller sets the
-    * trigger/checkpoint and starts the returned writer.
+    * via `foreachBatch` — each micro-batch runs the SAME SCD2 write path
+    * the daily batch uses ([[graft.dims.Scd2.persist]]: merge, then an
+    * atomic snapshot swap), so batch and streaming dimension states are
+    * definitionally consistent. The dim snapshot at `dimPath` must exist
+    * (seed with `Scd2.init`). Caller sets the trigger/checkpoint and
+    * starts the returned writer.
     *
     * Scale notes: foreachBatch gives exactly-once per micro-batch through
     * checkpointed offsets + the atomic swap (a re-run of a failed batch
     * re-merges idempotently — SCD2 change detection is null-safe equality,
-    * so an unchanged re-merge is a no-op). State lives in the snapshot,
+    * so an unchanged re-merge has no fresh version and writes nothing:
+    * the snapshot's files stay as they are). State lives in the snapshot,
     * not the state store, so dimension size is unbounded by watermarks.
     */
   def scd2Sink(mutations: DataFrame, dimPath: String, dim: graft.dims.Scd2,
@@ -81,9 +82,9 @@ object StreamPipelines {
     mutations.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       if (!batch.isEmpty) {
         val current = batch.sparkSession.read.parquet(dimPath)
-        val next = dim.merge(current, batch, runDateForBatch(batch, batchId), startForNew)
-        graft.io.Fs.overwriteViaStaging(next, dimPath)
+        dim.persist(current, batch, runDateForBatch(batch, batchId), startForNew, dimPath)
       }
+      ()
     }
 
   /** One event as consumed by the session operator. */

@@ -73,8 +73,7 @@ object CapBench {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_BASE_DIR", "/root/testdata/sf0.1")
     val scaledDir = sys.env.getOrElse("SPARK_GRAFT_SCALED_DIR", "/root/repo/scratch/sf10")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_OUT", "/root/repo/BENCH_sf10_caps.json")
-    val nRuns = scala.util.Try(sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").trim.toInt)
-      .getOrElse(2).max(1)
+    val nRuns = graft.Session.intEnv("SPARK_GRAFT_RUNS", 2, 1)
     val timeLabels = sys.env.getOrElse("SPARK_GRAFT_TIME_LABELS", "1") == "1"
     val spark = graft.Session.builder(aqeStart512 = true).getOrCreate()
 

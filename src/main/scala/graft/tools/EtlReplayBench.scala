@@ -22,7 +22,9 @@ import graft.gen.Synthetic
   * Growth expectations to check against the artifact (all by design):
   *  - dim_user/dim_product snapshot rewrite: current rows + ~2%/day closed
   *    versions → linear in days but tiny slope (the SCD2 full-snapshot
-  *    rewrite is the suspect the verdict named);
+  *    rewrite is the suspect the verdict named); every replayed day
+  *    drifts both, so none takes the no-new-version skip of `Scd2.persist`;
+  *  - dim_date: one filtered read + one-row append per day → flat;
   *  - fact_transactions anti-join (J5: id-only vs the WHOLE target, the
   *    reference's re-run contract): the per-`load_date` id sidecars
   *    (graft.facts.TxSidecar) prune the history read to the partitions an
@@ -55,13 +57,14 @@ import graft.gen.Synthetic
 object EtlReplayBench {
 
   def main(args: Array[String]): Unit = {
-    val days = sys.env.getOrElse("SPARK_GRAFT_DAYS", "30").toInt
-    val nUsers = sys.env.getOrElse("SPARK_GRAFT_USERS", "500000").toInt
-    val nProducts = sys.env.getOrElse("SPARK_GRAFT_PRODUCTS", "50000").toInt
-    val txPerDay = sys.env.getOrElse("SPARK_GRAFT_TX_PER_DAY", "2000000").toInt
+    import graft.Session.intEnv
+    val days = intEnv("SPARK_GRAFT_DAYS", 30, 1)
+    val nUsers = intEnv("SPARK_GRAFT_USERS", 500000, 1)
+    val nProducts = intEnv("SPARK_GRAFT_PRODUCTS", 50000, 1)
+    val txPerDay = intEnv("SPARK_GRAFT_TX_PER_DAY", 2000000, 1)
     val cpus = graft.Session.cpus()
     val outPath = sys.env.getOrElse("SPARK_GRAFT_OUT", "/tmp/BENCH_etl_replay.json")
-    val fromDay = sys.env.getOrElse("SPARK_GRAFT_FROM", "0").toInt
+    val fromDay = intEnv("SPARK_GRAFT_FROM", 0, 0)
 
     // the daily increment is MB-scale: AQE starts at core count (the
     // factory default), the posture q180 adopted for exactly this job

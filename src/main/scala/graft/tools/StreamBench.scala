@@ -68,7 +68,7 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/repo/scratch/sf10")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_OUT", "/root/repo/BENCH_stream_sf10.json")
-    val chunks = sys.env.getOrElse("SPARK_GRAFT_CHUNKS", "24").toInt
+    val chunks = graft.Session.intEnv("SPARK_GRAFT_CHUNKS", 24, 1)
     val horizon = sys.env.getOrElse("SPARK_GRAFT_HORIZON", "5 days")
     // fail fast on a malformed horizon BEFORE the ~100 s streaming runs,
     // not after them at the replay step (ADVICE r12)

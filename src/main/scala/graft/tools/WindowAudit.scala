@@ -7,8 +7,9 @@ import org.apache.spark.sql.catalyst.plans.logical.Window
   * walk the OPTIMIZED logical plan (plus any lineage-cut subtrees) and
   * report each Window node with an EMPTY partitionSpec — the plans that
   * log `WindowExec: No Partition Defined` and move all input rows to a
-  * single partition. The committed inventory (OPTIMIZATION_r16.md) must
-  * argue every hit is bounded (O(groups), not O(rows)) or fix it.
+  * single partition. Every hit must be argued bounded (O(groups), not
+  * O(rows)) or fixed; ROADMAP item 7(a) lists today's 19 sites and the
+  * allowlist spec that is to replace this report.
   * Usage: runMain graft.tools.WindowAudit <sfDir> [q...]
   */
 object WindowAudit {

@@ -1,6 +1,7 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.gen.Synthetic
@@ -23,16 +24,17 @@ class EtlRunSpec extends SparkSpec {
   private val day1 = "2025-03-01"
   private val day2 = "2025-03-02"
 
-  private def writeOltp(users: DataFrame, products: DataFrame, tx: DataFrame): Unit = {
-    users.write.mode("overwrite").parquet(s"$wh/users")
-    products.write.mode("overwrite").parquet(s"$wh/products")
+  private def writeOltp(users: DataFrame, products: DataFrame, tx: DataFrame,
+                        root: String = wh): Unit = {
+    users.write.mode("overwrite").parquet(s"$root/users")
+    products.write.mode("overwrite").parquet(s"$root/products")
     // the transactions SOURCE is partitioned by its raw date string — the
     // warehouse layout SURVEY §1.6 maps the reference's daily access to:
     // the S3 extract's `date = today` equality then prunes to ONE
     // partition directory instead of listing the whole table
-    tx.write.mode("overwrite").partitionBy("date").parquet(s"$wh/transactions")
+    tx.write.mode("overwrite").partitionBy("date").parquet(s"$root/transactions")
     Seq("users", "products", "transactions").foreach(t =>
-      spark.catalog.refreshByPath(s"$wh/$t"))
+      spark.catalog.refreshByPath(s"$root/$t"))
   }
 
   private def tbl(name: String) = name match {
@@ -45,13 +47,21 @@ class EtlRunSpec extends SparkSpec {
     case "etl_run_log" => etl.table(name, Schemas.etlRunLog)
   }
 
+  /** Facts whose `date_id` has no `dim_date` row (the calendar FK). */
+  private def orphanDates(facts: DataFrame, dimDate: DataFrame): Long =
+    facts.join(dimDate, Seq("date_id"), "left_anti").count()
+
   // --- day 1: valid + all 14 adversarial kinds ---------------------------
-  private lazy val day1Run: Unit = {
+  private def writeDay1(root: String): Unit = {
     val (badU, badP, badT) = Synthetic.invalid(spark, day1, nUsers, nProducts)
     writeOltp(
       Synthetic.users(spark, nUsers).unionByName(badU),
       Synthetic.products(spark, nProducts).unionByName(badP),
-      Synthetic.transactions(spark, 200, day1, nUsers, nProducts).unionByName(badT))
+      Synthetic.transactions(spark, 200, day1, nUsers, nProducts).unionByName(badT), root)
+  }
+
+  private lazy val day1Run: Unit = {
+    writeDay1(wh)
     etl.run(day1)
   }
 
@@ -233,12 +243,50 @@ class EtlRunSpec extends SparkSpec {
   test("idempotent re-run: same day twice inserts nothing new") {
     day1Run
     // ensure day-2 state exists (ordering safety if run standalone)
+    if (tbl("etl_run_log").filter(col("run_date") === day2).isEmpty) etl.run(day2)
     val before = (tbl("fact_transactions").count(), tbl("fact_stock_history").count(),
       tbl("dim_user").count(), tbl("dim_product").count())
+    val dims = Seq("dim_user", "dim_product", "dim_date")
+    val filesBefore = dims.map(t => t -> fileListing(s"$wh/$t")).toMap
+    def dimEntries = Files.list(Paths.get(wh)).iterator().asScala
+      .map(_.getFileName.toString).filter(_.startsWith("dim_")).toSet
     etl.run(day2)
     val after = (tbl("fact_transactions").count(), tbl("fact_stock_history").count(),
       tbl("dim_user").count(), tbl("dim_product").count())
     assert(after === before)
+    // a zero-change day rewrites no dimension: same files, same sizes, and
+    // no staging debris left next to the tables
+    dims.foreach(t => assert(fileListing(s"$wh/$t") === filesBefore(t), t))
+    assert(dimEntries === dims.toSet)
+  }
+
+  test("every fact date_id has a dim_date row, invalid corpus included") {
+    day1Run
+    assert(orphanDates(tbl("fact_transactions"), tbl("dim_date")) === 0L)
+    assert(tbl("dim_date").groupBy("date_id").count().filter(col("count") > 1).isEmpty)
+  }
+
+  test("torn dimension swap, then a zero-change day: table() heals and nothing is rewritten") {
+    val whT = Files.createTempDirectory("graft_e2e_torn").toString
+    val etlT = new EtlRun(spark, whT)
+    writeDay1(whT)
+    etlT.run(day1)
+    val tables = Seq("dim_user" -> Schemas.dimUser, "dim_product" -> Schemas.dimProduct,
+      "dim_date" -> Schemas.dimDate, "fact_transactions" -> Schemas.factTransactions,
+      "fact_stock_history" -> Schemas.factStockHistory)
+    def contents = tables.map { case (t, schema) => t -> sortedRows(etlT.table(t, schema)) }.toMap
+    val before = contents
+    // a crashed swap: the next snapshot was staged complete (`_SUCCESS`),
+    // the live one demoted to `__old`, and the promotion never happened
+    etlT.table("dim_user", Schemas.dimUser).write.parquet(s"$whT/dim_user__staging")
+    Files.move(Paths.get(whT, "dim_user"), Paths.get(whT, "dim_user__old"))
+    val run = etlT.run(day1).first()
+    assert(run.getAs[String]("status") === "success")
+    Seq("rows_users_inserted", "rows_products_inserted", "rows_stock_inserted",
+      "rows_transactions_inserted").foreach(c => assert(run.getAs[Long](c) === 0L, c))
+    assert(contents === before)
+    Seq("dim_user__staging", "dim_user__old").foreach(d =>
+      assert(!Files.exists(Paths.get(whT, d)), s"$d left behind"))
   }
 
   test("SQL surface: demo-notebook queries run unchanged over the warehouse") {
@@ -394,6 +442,7 @@ class EtlRunSpec extends SparkSpec {
     }
 
     def tm(name: String) = name match {
+      case "dim_date" => etlM.table(name, Schemas.dimDate)
       case "dim_user" => etlM.table(name, Schemas.dimUser)
       case "dim_product" => etlM.table(name, Schemas.dimProduct)
       case "fact_transactions" => etlM.table(name, Schemas.factTransactions)
@@ -406,6 +455,13 @@ class EtlRunSpec extends SparkSpec {
     assert(tm("dim_product").filter(col("current_flag") === 1).count() === nP)
     assert(tm("fact_stock_history").count() === expStockRows)
     assert(tm("fact_transactions").count() === expFactRows)
+    // calendar FK: every loaded fact's date has its dim_date row, and the
+    // calendar holds exactly the replayed days
+    assert(orphanDates(tm("fact_transactions"), tm("dim_date")) === 0L)
+    assert(tm("dim_date").select(col("full_date").cast("string")).as[String].collect().toSet ===
+      (0 until nDays).map(day).toSet)
+    // each day's one calendar row lands in one part-file, no empty ones
+    assert(fileListing(s"$whM/dim_date").keys.count(_.endsWith(".parquet")) === nDays)
     // run-log: one success row per day, insert counters reconciling to the
     // same arithmetic (totals equal the accumulated table counts)
     val runs = tm("etl_run_log")

@@ -78,6 +78,7 @@ class FsSpec extends SparkSpec {
     assert(f.rename(new Path(t), new Path(t + "__old")))
     Fs.recoverSnapshot(t, conf)
     assert(readVals(t) === Seq(2), "marker-complete staging must win")
+    assert(!f.exists(new Path(t + "__old")), "the superseded snapshot is dropped")
   }
 
   test("crash with incomplete staging: recovery restores the old snapshot") {
@@ -90,6 +91,18 @@ class FsSpec extends SparkSpec {
     assert(f.rename(new Path(t), new Path(t + "__old")))
     Fs.recoverSnapshot(t, conf)
     assert(readVals(t) === Seq(1), "incomplete staging must NOT be promoted")
+    assert(!f.exists(new Path(t + "__staging")), "the dead job's staging is dropped")
+  }
+
+  test("crash after promotion: a leftover __old beside the target is dropped") {
+    val t = freshTable()
+    write(t, Seq(1))
+    val f = new Path(t).getFileSystem(conf)
+    // simulate: the swap promoted its staging, then died before dropping __old
+    Seq(0).toDF("v").write.mode("overwrite").parquet(t + "__old")
+    assert(!Fs.recoverSnapshot(t, conf), "the target's files are untouched: no heal")
+    assert(readVals(t) === Seq(1))
+    assert(!f.exists(new Path(t + "__old")))
   }
 
   test("next overwrite self-heals a torn swap before writing") {

@@ -91,6 +91,66 @@ class Scd2Spec extends SparkSpec {
     assert(d2.merge(cur, diff, "2024-06-01", to_date(lit("2024-06-01"))).count() === 2)
   }
 
+  // ---- persist: the one SCD2 snapshot write path -----------------------
+  // closed history, a member the extract omits (bob), and a member whose
+  // extract row differs only in a passthrough column (dee's join_date)
+  private def histSnap = Seq(
+    (1L, 10, "anne", "a@x.com", "2020-01-01", "2023-01-01", "2023-12-31", 0),
+    (2L, 10, "ann", "a@x.com", "2020-01-01", "2024-01-01", null.asInstanceOf[String], 1),
+    (3L, 20, "bob", "b@x.com", "2020-02-02", "2024-01-01", null.asInstanceOf[String], 1),
+    (4L, 40, "dee", "d@x.com", "2021-04-04", "2024-02-02", null.asInstanceOf[String], 1)
+  ).toDF("user_sk", "user_id", "name", "email", "join_date", "start_date", "end_date", "current_flag")
+    .withColumn("join_date", to_date(col("join_date")))
+    .withColumn("start_date", to_date(col("start_date")))
+    .withColumn("end_date", to_date(col("end_date")))
+
+  private def extract(rows: (Int, String, String, String)*) = rows
+    .toDF("user_id", "name", "email", "join_date")
+    .withColumn("join_date", to_date(col("join_date")))
+
+  private def unchangedExtract =
+    extract((10, "ann", "a@x.com", "2020-01-01"), (40, "dee", "d@x.com", "1999-09-09"))
+
+  private def tempTable(df: org.apache.spark.sql.DataFrame): String = {
+    val p = java.nio.file.Files.createTempDirectory("graft_scd2_persist").resolve("dim").toString
+    df.write.parquet(p)
+    p
+  }
+
+  test("zero fresh versions: the merge reproduces the current snapshot as a multiset") {
+    val m = dim.merge(histSnap, unchangedExtract, "2024-06-01", col("join_date"))
+    assert(m.exceptAll(histSnap).isEmpty && histSnap.exceptAll(m).isEmpty)
+    assert(m.count() === histSnap.count())
+  }
+
+  test("persist skips the write when no version is fresh: the snapshot's files stay") {
+    val p = tempTable(histSnap)
+    val before = fileListing(p)
+    val n = dim.persist(spark.read.parquet(p), unchangedExtract, "2024-06-01", col("join_date"), p)
+    assert(n === 0L)
+    assert(fileListing(p) === before)
+    val dir = java.nio.file.Paths.get(p)
+    assert(!java.nio.file.Files.exists(dir.resolveSibling("dim__staging")))
+    assert(sortedRows(spark.read.parquet(p)) === sortedRows(histSnap))
+  }
+
+  test("persist on a changed day returns the old observe(n) - before count and writes the merge") {
+    val p = tempTable(histSnap)
+    // ann unchanged, bob's email changes, dee passthrough-only, cyd new
+    val inc = extract((10, "ann", "a@x.com", "2020-01-01"), (20, "bob", "bob@new.com", "2020-02-02"),
+      (30, "cyd", "c@x.com", "2024-05-05"), (40, "dee", "d@x.com", "1999-09-09"))
+    val cur = spark.read.parquet(p)
+    val before = cur.count()
+    val obs = org.apache.spark.sql.Observation()
+    val expected = sortedRows(dim.merge(cur, inc, "2024-06-01", col("join_date"))
+      .observe(obs, count(lit(1)).as("n")))
+    val oldInserted = obs.get("n").asInstanceOf[Long] - before
+    val n = dim.persist(cur, inc, "2024-06-01", col("join_date"), p)
+    assert(n === oldInserted)
+    assert(n === 2L) // bob's new version + cyd
+    assert(sortedRows(spark.read.parquet(p)) === expected)
+  }
+
   test("init assigns dense 1..n SKs in key order without a global window") {
     val extract = (1 to 500).map(i => (1000 - i, s"u$i", s"u$i@x.com"))
       .toDF("user_id", "name", "email")

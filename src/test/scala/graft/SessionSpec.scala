@@ -27,6 +27,17 @@ class SessionSpec extends SparkSpec {
     }
   }
 
+  test("intEnv: unset gives the default; garbage or below-min fails naming the variable") {
+    assert(Session.intEnv("SPARK_GRAFT_DAYS", 30, 1, Map.empty) === 30)
+    assert(Session.intEnv("SPARK_GRAFT_FROM", 7, 0, Map("SPARK_GRAFT_FROM" -> " 0 ")) === 0)
+    assert(Session.intEnv("SPARK_GRAFT_RUNS", 2, 1, Map("SPARK_GRAFT_RUNS" -> "5")) === 5)
+    Seq("abc", "", "2.5", "0", "-3").foreach { bad =>
+      val e = intercept[IllegalArgumentException](
+        Session.intEnv("SPARK_GRAFT_RUNS", 2, 1, Map("SPARK_GRAFT_RUNS" -> bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_RUNS"), e.getMessage)
+    }
+  }
+
   test("graft.Session is the only source file that builds a Spark session") {
     val call = "SparkSession" + ".builder" // split so this file does not match itself
     val files = Files.walk(Paths.get("src")).iterator().asScala

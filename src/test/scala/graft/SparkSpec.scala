@@ -16,6 +16,19 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** Collect to a sorted Seq of Seq[Any] for order-insensitive compares. */
   def sortedRows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq).sortBy(_.mkString("|"))
+
+  /** Every file under `dir`: relative path → (size, mtime) — equal
+    * listings mean nothing under `dir` was rewritten. */
+  def fileListing(dir: String): Map[String, (Long, Long)] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(dir)
+    val walk = java.nio.file.Files.walk(root)
+    try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+      .map(f => root.relativize(f).toString ->
+        (java.nio.file.Files.size(f), java.nio.file.Files.getLastModifiedTime(f).toMillis))
+      .toMap
+    finally walk.close()
+  }
 }
 
 object SparkSpec {

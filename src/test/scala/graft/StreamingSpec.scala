@@ -110,6 +110,37 @@ class StreamingSpec extends SparkSpec {
     assert(streamed.filter(col("current_flag") === 0).count() > 0)
   }
 
+  test("replaying an already-merged SCD2 batch leaves the snapshot's files untouched") {
+    import graft.dims.Scd2
+    import graft.gen.Synthetic
+    val dim = Scd2(Seq("user_id"), Seq("name", "email"), "user_sk", Seq("join_date"))
+    val users = Synthetic.users(spark, 40)
+    val day0 = dim.init(users, col("join_date"))
+    val wh = Files.createTempDirectory("graft_scd2_replay").toString
+    val dimPath = s"$wh/dim_user"
+    day0.write.parquet(dimPath)
+    val mutations = Synthetic.mutateUsers(users, 0.4)
+      .select("user_id", "name", "email", "join_date")
+    mutations.write.parquet(s"$wh/mutations")
+    // a fresh checkpoint re-delivers the same batch, as after a lost commit
+    def drain(ckpt: String): Unit = {
+      val q = StreamPipelines.scd2Sink(
+          spark.readStream.schema(mutations.schema).parquet(s"$wh/mutations"),
+          dimPath, dim, startForNew = col("join_date"), runDateForBatch = (_, _) => "2025-06-01")
+        .option("checkpointLocation", s"$wh/$ckpt")
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination(120000)
+    }
+    drain("ckpt1")
+    val merged = fileListing(dimPath)
+    assert(spark.read.parquet(dimPath).filter(col("current_flag") === 0).count() > 0)
+    drain("ckpt2")
+    assert(fileListing(dimPath) === merged)
+    val batch = dim.merge(day0, mutations, "2025-06-01", col("join_date"))
+    val streamed = spark.read.parquet(dimPath)
+    assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
+  }
+
   test("two-micro-batch SCD2 sink lands exactly on the q120 registry row") {
     import graft.queries.Scd2StreamTwin
     val sfDir = "/root/testdata/sf0.001"
