@@ -21,12 +21,12 @@ object Session {
   def intEnv(name: String, default: Int, min: Int, env: Map[String, String] = sys.env): Int =
     env.get(name).fold(default)(atLeast(name, _, min))
 
-  private def atLeast(name: String, raw: String, min: Int): Int =
+  private[graft] def atLeast(name: String, raw: String, min: Int): Int =
     raw.trim.toIntOption.filter(_ >= min).getOrElse(
       throw new IllegalArgumentException(s"$name must be an integer >= $min, got '$raw'"))
 
   /** `local[cpus]` with the engine config. `aqeStart512` is the
-    * query-catalog posture (Bench, Verify, the scale benches): AQE starts
+    * query-catalog posture (Bench, Verify): AQE starts
     * every shuffle at 512 partitions and coalesces to its advisory size,
     * so partitions are sized by BYTES, not cores — small inputs still run
     * at ~core-count tasks while 100× corpora fan out instead of spilling

@@ -48,17 +48,4 @@ object Audit {
       .withColumn("run_date", to_date(col("run_date")))
       .withColumn("source_date", to_date(col("source_date")))
   }
-
-  /** Errors/warnings per run by severity (reference etl.py:521-530 — the
-    * authoritative counts are re-derived from the error log, not the dead
-    * in-memory counters; SURVEY A5 fidelity note). */
-  def severityCounts(errorLog: DataFrame, runId: Long): DataFrame =
-    errorLog.filter(col("run_id") === runId)
-      .groupBy("severity").agg(count(lit(1)).as("n"))
-
-  /** DQ rollup (reference demo.ipynb cell 16, SURVEY A3). */
-  def dqRollup(errorLog: DataFrame): DataFrame =
-    errorLog.groupBy("error_type", "severity")
-      .agg(count(lit(1)).as("n"))
-      .orderBy(desc("n"), col("error_type"))
 }

@@ -169,163 +169,4 @@ object Fs {
     f.delete(old, true)
     spark.catalog.refreshByPath(path)
   }
-
-  // ===== Versioned snapshots (time travel without a table format) =====
-  //
-  // Same staging/swap discipline as overwriteViaStaging, but each commit
-  // RETAINS the demoted snapshot as `<path>__v<N>` (pruned to the `keep`
-  // newest) and stamps the current snapshot's version in a `_VERSION`
-  // marker file — underscore-prefixed, so every parquet reader ignores
-  // it. This is the nightly-pipeline safety net ("yesterday's dim before
-  // the bad backfill") and a reproducibility primitive ("train against
-  // snapshot v12"), Iceberg-style in shape; a real table format's
-  // manifest commit replaces it on object stores. Crash-safety: the
-  // marker is written into STAGING after the job's `_SUCCESS`, so every
-  // window [[recoverSnapshot]] can promote forward already carries its
-  // version — monotonicity survives any crash, and the retained-version
-  // chain is append-only until pruned.
-
-  private def versionDirOf(path: String, v: Long) = s"${path}__v$v"
-
-  private def readVersionMarker(dir: String, conf: Configuration): Long = {
-    val p = new Path(dir, "_VERSION")
-    val f = fs(p, conf)
-    if (!f.exists(p)) 0L
-    else {
-      val in = f.open(p)
-      try new String(in.readAllBytes(), "UTF-8").trim.toLong
-      finally in.close()
-    }
-  }
-
-  private def writeVersionMarker(dir: String, v: Long, conf: Configuration): Unit = {
-    val p = new Path(dir, "_VERSION")
-    val out = fs(p, conf).create(p, true)
-    try out.write(s"$v\n".getBytes("UTF-8")) finally out.close()
-  }
-
-  /** Version of the CURRENT snapshot at `path` (0 = never written by the
-    * versioned writer). */
-  def snapshotVersion(path: String, conf: Configuration): Long =
-    readVersionMarker(path, conf)
-
-  /** Retained historical versions (ascending) — the current snapshot's
-    * version is NOT in this list; see [[snapshotVersion]]. */
-  def retainedVersions(path: String, conf: Configuration): Seq[Long] = {
-    val target = new Path(path)
-    val f = fs(target, conf)
-    val parent = target.getParent
-    val prefix = target.getName + "__v"
-    if (parent == null || !f.exists(parent)) Seq.empty
-    else f.listStatus(parent).toSeq
-      .map(_.getPath.getName)
-      .filter(_.startsWith(prefix))
-      .flatMap(n => scala.util.Try(n.stripPrefix(prefix).toLong).toOption)
-      .sorted
-  }
-
-  /** Versioned overwrite: stage, demote the current snapshot to its
-    * version slot, promote, prune. Returns the NEW current version.
-    * Every crash window leaves either a readable current snapshot or a
-    * `_SUCCESS`-complete staging that [[recoverSnapshot]] promotes —
-    * with its `_VERSION` marker already inside. */
-  def overwriteVersioned(df: org.apache.spark.sql.DataFrame, path: String,
-                         keep: Int = 3): Long = {
-    val spark = df.sparkSession
-    val next = stageVersioned(df, path)
-    commitVersioned(spark, path, keep)
-    next
-  }
-
-  /** Stage phase: write staging + stamp its `_VERSION` (= current + 1). */
-  def stageVersioned(df: org.apache.spark.sql.DataFrame, path: String): Long = {
-    val conf = df.sparkSession.sessionState.newHadoopConf()
-    recoverSnapshot(path, conf)
-    val next = snapshotVersion(path, conf) + 1
-    df.write.mode("overwrite").parquet(stagingOf(path))
-    writeVersionMarker(stagingOf(path), next, conf)
-    next
-  }
-
-  /** Commit phase: demote current → its version slot, promote staging,
-    * prune retained versions beyond `keep`. */
-  def commitVersioned(spark: org.apache.spark.sql.SparkSession, path: String,
-                      keep: Int): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val target = new Path(path)
-    val f = fs(target, conf)
-    if (f.exists(target)) {
-      val cur = snapshotVersion(path, conf)
-      val slot = new Path(versionDirOf(path, cur))
-      if (f.exists(slot)) f.delete(slot, true) // re-run debris; newest wins
-      f.rename(target, slot)
-    }
-    f.rename(new Path(stagingOf(path)), target)
-    retainedVersions(path, conf).dropRight(keep)
-      .foreach(v => f.delete(new Path(versionDirOf(path, v)), true))
-    spark.catalog.refreshByPath(path)
-  }
-
-  /** Time-travel read: the snapshot as of version `v` (the current one or
-    * any retained historical version). Fails fast with the retained set
-    * when `v` has been pruned — silently serving the wrong version is the
-    * one unacceptable behavior for a reproducibility primitive.
-    *
-    * Concurrency contract: this layer assumes a SINGLE WRITER per table
-    * path (the nightly-batch model every writer in this repo follows).
-    * Readers racing a writer are handled best-effort: after resolving
-    * `v == cur` to the live path, the `_VERSION` marker is re-read and,
-    * if a concurrent commit moved the current version, the read falls
-    * back to the freshly demoted `__v<v>` slot — so the marker-read →
-    * parquet-read window cannot silently serve version cur+1 labeled as
-    * v. A reader racing the PRUNE of a historical slot can still lose
-    * the require/read race; under multiple writers use a real table
-    * format's manifest commit instead. */
-  def readVersion(spark: org.apache.spark.sql.SparkSession, path: String,
-                  v: Long): org.apache.spark.sql.DataFrame = {
-    val conf = spark.sessionState.newHadoopConf()
-    val cur = snapshotVersion(path, conf)
-    if (v == cur) {
-      val df = spark.read.parquet(path)
-      // TOCTOU guard: a concurrent commitVersioned between the marker read
-      // and the parquet read would have demoted v into its slot. The slot
-      // itself can ALSO already be pruned (keep=0, or a commit+prune race)
-      // — re-check retention so a lost race fails with the documented
-      // "not available: retained=..." contract error, not an opaque
-      // path-not-found from the parquet reader.
-      if (snapshotVersion(path, conf) == v) df
-      else readVersionSlot(spark, path, v, conf)
-    } else readVersionSlot(spark, path, v, conf)
-  }
-
-  /** Read the `__v<v>` historical slot, translating a losing race in
-    * the check → eager-read window into the documented contract error:
-    * the retention `require` narrows but cannot close that window
-    * (ADVICE r8 — a prune landing in between still surfaced as an
-    * opaque path-not-found), so the eager `spark.read.parquet` is also
-    * wrapped and a slot that vanishes there re-reports with the
-    * post-race retained set. A prune landing AFTER the read returns but
-    * before the caller's first action is inherently out of reach — that
-    * residual window surfaces as a scan-time FileNotFoundException, the
-    * same exposure any snapshot reader has between plan and execute
-    * (ADVICE r9). */
-  private def readVersionSlot(spark: org.apache.spark.sql.SparkSession,
-                              path: String, v: Long,
-                              conf: Configuration): org.apache.spark.sql.DataFrame = {
-    def unavailable(cause: Throwable): Nothing =
-      throw new IllegalArgumentException(
-        s"requirement failed: version $v of $path not available: " +
-          s"current=${snapshotVersion(path, conf)} " +
-          s"retained=${retainedVersions(path, conf).mkString(",")}", cause)
-    require(retainedVersions(path, conf).contains(v),
-      s"version $v of $path not available: " +
-        s"current=${snapshotVersion(path, conf)} " +
-        s"retained=${retainedVersions(path, conf).mkString(",")}")
-    try spark.read.parquet(versionDirOf(path, v))
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if "PATH_NOT_FOUND".equals(e.getCondition) => unavailable(e)
-      case e: java.io.FileNotFoundException => unavailable(e)
-    }
-  }
 }

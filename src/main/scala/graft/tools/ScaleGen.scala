@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions._
   *
   * Every scale claim in PERF.md so far is plan-shape reasoning at sf0.1
   * (shuffle budgets, hot-key caps). This tool manufactures an
-  * sf1-equivalent corpus so [[ScaleBench]] can RECORD that the heavy
-  * families scale ~linearly and keep their exchange counts.
+  * sf1-equivalent corpus so [[graft.Bench]] (`SPARK_GRAFT_SF_DIR` at the
+  * output) and [[PlanAudit]] can RECORD that the heavy families scale
+  * ~linearly and keep their exchange counts.
   *
   * Scaling is replication with deterministic perturbation, not fresh
   * generation — the scaled data keeps the base distribution exactly
@@ -49,13 +50,15 @@ object ScaleGen {
   def main(args: Array[String]): Unit = {
     val src = args(0)
     val out = args(1)
-    val k = if (args.length > 2) args(2).toInt else 10
+    val k = if (args.length > 2) graft.Session.atLeast("K", args(2), 1) else 10
     val spark = graft.Session.builder().getOrCreate()
     run(spark, src, out, k)
     spark.stop()
   }
 
   def run(spark: SparkSession, src: String, out: String, k: Int): Unit = {
+    // K <= 0 would cross-join an empty replica frame: empty scaled tables
+    require(k >= 1, s"K must be an integer >= 1, got '$k'")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
     // unscaled tables: byte-copy (exact, cheap; all are ≤ a few MB here —
     // at a real deployment these would be HDFS copies or views)

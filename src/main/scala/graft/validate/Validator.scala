@@ -100,12 +100,4 @@ final class Validator(rules: Seq[Rule], entity: String, recordId: Column,
       createdAt.as("created_at"),
       col("severity")
     )
-
-  /** DQ rollup `GROUP BY error_type, severity ORDER BY count DESC`
-    * (reference demo.ipynb cell 16 / SURVEY.md A3). */
-  def dqSummary(annotated: DataFrame): DataFrame =
-    errors(annotated)
-      .groupBy("error_type", "severity")
-      .agg(count(lit(1)).as("n"))
-      .orderBy(desc("n"), col("error_type"))
 }

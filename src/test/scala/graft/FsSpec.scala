@@ -35,39 +35,6 @@ class FsSpec extends SparkSpec {
     assert(!f.exists(new Path(t + "__staging")) && !f.exists(new Path(t + "__old")))
   }
 
-  test("versioned snapshots: monotonic versions, time travel, retention pruning") {
-    val t = freshTable()
-    assert(Fs.overwriteVersioned(Seq(1).toDF("v"), t, keep = 2) === 1L)
-    assert(Fs.overwriteVersioned(Seq(2, 2).toDF("v"), t, keep = 2) === 2L)
-    assert(Fs.overwriteVersioned(Seq(3, 3, 3).toDF("v"), t, keep = 2) === 3L)
-    assert(Fs.snapshotVersion(t, conf) === 3L)
-    assert(Fs.retainedVersions(t, conf) === Seq(1L, 2L))
-    // time travel: every retained version AND the current one read back
-    assert(Fs.readVersion(spark, t, 3).as[Int].collect().toSeq === Seq(3, 3, 3))
-    assert(Fs.readVersion(spark, t, 2).as[Int].collect().toSeq.sorted === Seq(2, 2))
-    assert(Fs.readVersion(spark, t, 1).as[Int].collect().toSeq === Seq(1))
-    // a fourth write prunes version 1 (keep = 2 -> retain {2, 3})
-    assert(Fs.overwriteVersioned(Seq(4).toDF("v"), t, keep = 2) === 4L)
-    assert(Fs.retainedVersions(t, conf) === Seq(2L, 3L))
-    val err = intercept[IllegalArgumentException](Fs.readVersion(spark, t, 1))
-    assert(err.getMessage.contains("retained=2,3")) // fails FAST, names the survivors
-  }
-
-  test("versioned crash window: promoted staging carries its version marker") {
-    val t = freshTable()
-    Fs.overwriteVersioned(Seq(1).toDF("v"), t, keep = 3)
-    // stage version 2, then crash exactly where commitVersioned has
-    // demoted the current snapshot but not yet promoted the staging
-    assert(Fs.stageVersioned(Seq(2, 2).toDF("v"), t) === 2L)
-    val f = new Path(t).getFileSystem(conf)
-    assert(f.rename(new Path(t), new Path(t + "__v1")))
-    Fs.recoverSnapshot(t, conf)
-    spark.catalog.refreshByPath(t)
-    assert(readVals(t) === Seq(2, 2))
-    assert(Fs.snapshotVersion(t, conf) === 2L) // marker rode the promotion
-    assert(Fs.readVersion(spark, t, 1).as[Int].collect().toSeq === Seq(1))
-  }
-
   test("crash after demoting target: recovery promotes the complete staging") {
     val t = freshTable()
     write(t, Seq(1))

@@ -48,7 +48,7 @@ class RegistrySpec extends SparkSpec {
     // unpersist (deliberate: the returned frame is lazy, so an in-body
     // unpersist would defeat the cache before the caller's action). The
     // CONTRACT is that harnesses clear the catalog cache between
-    // invocations — Bench/Verify/CapBench/ScaleBench all do — because
+    // invocations — Bench and Verify both do — because
     // Spark's CacheManager substitutes by PLAN equality: a second
     // invocation over the same path would silently serve the first
     // run's rows after the underlying files changed (the r13 EtlRun

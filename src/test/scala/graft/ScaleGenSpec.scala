@@ -25,6 +25,13 @@ class ScaleGenSpec extends SparkSpec {
     f.delete()
   }
 
+  test("K < 1 fails naming K before the output dir is created") {
+    val out = freshOut() + "/out"
+    val err = intercept[IllegalArgumentException](ScaleGen.run(spark, src, out, 0))
+    assert(err.getMessage.contains("K must be an integer >= 1"))
+    assert(!new java.io.File(out).exists(), "a rejected K must write nothing")
+  }
+
   test("K=2 scale-up: counts, disjoint id bands, FK, schemas, determinism") {
     val out = freshOut()
     ScaleGen.run(spark, src, out, 2)

@@ -42,7 +42,10 @@ class SessionSpec extends SparkSpec {
     val call = "SparkSession" + ".builder" // split so this file does not match itself
     val files = Files.walk(Paths.get("src")).iterator().asScala
       .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala")).toSeq
-    assert(files.size > 100, s"source walk found only ${files.size} files")
+    // the walk must reach both trees, not stop short of the sources
+    val walked = files.map(p => Paths.get("src").relativize(p).toString).toSet
+    assert(Seq("main/scala/graft/pipeline/EtlRun.scala", "test/scala/graft/SessionSpec.scala")
+      .forall(walked), s"source walk missed a tree: found ${files.size} files")
     val builders = files.filter(p => Files.readString(p).contains(call))
       .map(p => Paths.get("src").relativize(p).toString).sorted
     assert(builders === Seq("main/scala/graft/Session.scala"))

@@ -181,8 +181,8 @@ class StreamDisorderSpec extends SparkSpec {
     assert(gained.isEmpty,
       s"horizon run emitted reports the control did not: $gained")
 
-    // the batch replay of the eviction rule (the executable spec
-    // StreamBench uses to re-derive horizon deltas at sf10) reproduces
+    // the batch replay of the eviction rule (the executable spec that
+    // re-derives horizon deltas without a stream) reproduces
     // this streaming run EXACTLY: batch i = file i, watermark during
     // batch j = max ts of files < j minus the 1h delay
     val horizonMs = 3600000L
