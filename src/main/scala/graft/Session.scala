@@ -44,13 +44,18 @@ object Session {
       .config("spark.log.level", "WARN")
       // native functions + date-string-compare pushdown rule
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // lift BloomFilterAggregate's 4M-item clamp: q75's hand-built
-      // runtime filter inserts ~11M keys at sf100 and the J5 sidecar
-      // blooms ~20M ids per sf100 day; a clamped item count mis-sizes the
-      // hash count (k for 4M with 11M inserted ≈ 17% fp vs ~6% optimal).
-      // Affects only our own bloomAgg calls — InjectRuntimeFilter needs
-      // stats this corpus lacks either way.
+      // lift BloomFilterAggregate's 4M-item and 8 MB clamps: q75's
+      // hand-built runtime filter inserts ~11M keys at sf100 and the J5
+      // sidecar blooms ~20M ids per sf100 day; a clamped item count
+      // mis-sizes the hash count (k for 4M with 11M inserted ≈ 17% fp vs
+      // ~6% optimal). The item lift also sets every bloom's BYTES: Spark
+      // designs for fpp = 0.03·n/maxNumItems, so n = 65,536 (EtlRun's
+      // floor) gets fpp 2.9e-5 and 178 KB (131 KB at the default 4M).
+      // With 64M items the 8 MB bit clamp binds from ~5.3M items on; the
+      // 64 MB one only at maxNumItems. Affects only our own bloomAgg
+      // calls — InjectRuntimeFilter needs stats this corpus lacks.
       .config("spark.sql.optimizer.runtime.bloomFilter.maxNumItems", "67108864")
+      .config("spark.sql.optimizer.runtime.bloomFilter.maxNumBits", "536870912")
     if (aqeStart512) b.config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
     else b
   }

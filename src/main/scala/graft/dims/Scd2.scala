@@ -81,12 +81,19 @@ final case class Scd2(naturalKey: Seq[String], tracked: Seq[String], skName: Str
     * UPDATE/INSERT writes nothing on an unchanged day (etl.py:188-263).
     * A changed day evaluates the join twice (count, then write); caching
     * it measured slower at perfbench's size than evaluating it twice.
+    * The snapshot is rebalanced before the write: the union of history,
+    * carried and fresh rows otherwise lands one file per upstream
+    * partition (the sink policy of [[graft.pipeline.EtlRun.append]]).
+    * The rebalance scatters key order, so each file is re-sorted on the
+    * natural key (perfbench's dim_user file: 465 KB unsorted, 426 KB
+    * sorted).
     * Like [[merge]], it assumes one `incoming` row per natural key. */
   def persist(current: DataFrame, incoming: DataFrame, runDate: String,
               startForNew: Column, path: String): Long = {
     val (next, fresh) = mergeWithFresh(current, incoming, runDate, startForNew, cutJoin = false)
     val nFresh = fresh.count()
-    if (nFresh > 0) graft.io.Fs.overwriteViaStaging(next, path)
+    if (nFresh > 0) graft.io.Fs.overwriteViaStaging(
+      next.hint("rebalance").sortWithinPartitions(naturalKey.map(col): _*), path)
     nFresh
   }
 

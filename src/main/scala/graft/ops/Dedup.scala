@@ -40,8 +40,10 @@ object Dedup {
     * over 51.6M ids); post-prune the build side is incoming-sized, so
     * AQE can broadcast it and the daily cost stays flat in history size.
     *
-    * `estItems` sizes the bloom (overprovisioning only lowers the
-    * false-positive rate; Spark clamps bits at maxNumBits, 8 MB). The
+    * `estItems` sizes the bloom: overprovisioning lowers the
+    * false-positive rate and grows the bytes (Spark designs for fpp =
+    * 0.03·n/maxNumItems and clamps bits at maxNumBits, 64 MB from
+    * [[graft.Session]]). The
     * single-row `.head()` is the sanctioned bounded plan-literal
     * collect — the caller contract is DETERMINISTIC re-evaluation, not
     * just cheapness (ADVICE r14): `incoming` is evaluated once for the

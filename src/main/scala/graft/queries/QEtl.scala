@@ -940,14 +940,14 @@ object QEtl {
     // ~45% of lineitem (270M one-column rows) into the SMJ. This builds
     // the SAME runtime filter by hand with Spark's own bloom expressions
     // (functions/Bloom): aggregate the date-window order keys into ONE
-    // bounded bloom (count-sized: KBs at sf0.1, the 8 MB maxNumBits clamp
-    // at sf100), ship it as a plan literal — the mechanics production
-    // runtime filters use — and pre-filter the lineitem scan to ~7% of
-    // its rows before the exchange. Exactness is unconditional: blooms
-    // have no false negatives, and a false positive just fails the semi
-    // join's key equality like any other non-window row. The two driver
-    // actions (count + single-row bloom collect) are the sanctioned
-    // bounded plan-literal pattern (q122).
+    // bounded bloom (count-sized: KBs at sf0.1, ~20 MB at sf100, under
+    // graft.Session's 64 MB maxNumBits clamp), ship it as a plan literal
+    // — the mechanics production runtime filters use — and pre-filter
+    // the lineitem scan to ~7% of its rows before the exchange.
+    // Exactness is unconditional: blooms have no false negatives, and a
+    // false positive just fails the semi join's key equality like any
+    // other non-window row. The two actions (count + single-row bloom
+    // collect) are the sanctioned bounded plan-literal pattern (q122).
     Qry("q75_exists_orders",
       (s, dir) => {
         t(s, dir, "orders").createOrReplaceTempView("g_orders")

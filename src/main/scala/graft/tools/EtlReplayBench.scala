@@ -1,5 +1,6 @@
 package graft.tools
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.gen.Synthetic
@@ -18,6 +19,9 @@ import graft.gen.Synthetic
   * (stock-history change rows), and appends a fresh block of transactions
   * with globally unique ids. Input staging is UNTIMED; the timed region is
   * exactly `EtlRun.run(day)` (eager — every stage write happens inside).
+  * Each day also records the files the run created under the ETL tables
+  * (`files_created`, `mb_created`, `files_by_table`; regular non-dot files
+  * new after the run, perfbench's `files_per_day` definition).
   *
   * Growth expectations to check against the artifact (all by design):
   *  - dim_user/dim_product snapshot rewrite: current rows + ~2%/day closed
@@ -68,13 +72,8 @@ object EtlReplayBench {
 
     // the daily increment is MB-scale: AQE starts at core count (the
     // factory default), the posture q180 adopted for exactly this job
-    // shape (VERDICT r11 #3). sf100-sized days carry ~20M ids, so the J5
-    // sidecar blooms also lift the bit clamp next to the factory's item
-    // lift (ranges still prune monotone-id days, but saturated blooms
-    // would degrade interleaved-id probes)
-    val spark = graft.Session.builder(cpus)
-      .config("spark.sql.optimizer.runtime.bloomFilter.maxNumBits", "536870912")
-      .getOrCreate()
+    // shape (VERDICT r11 #3)
+    val spark = graft.Session.builder(cpus).getOrCreate()
     sys.env.get("SPARK_GRAFT_STAGE_POOL")
       .foreach(v => spark.conf.set("spark.graft.etl.stagePool", v))
     sys.env.get("SPARK_GRAFT_SIDECAR_KEEP")
@@ -110,6 +109,18 @@ object EtlReplayBench {
         f
     }
     def path(t: String) = s"$wh/$t"
+    // regular, non-dot files under the ETL tables (the sources excluded):
+    // path → bytes, perfbench's files_per_day / write_mb_per_day definition
+    val sources = Set("users", "products", "transactions")
+    def etlFiles(): Map[String, Long] = {
+      val root = wh.toPath
+      val walk = java.nio.file.Files.walk(root)
+      try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .filter(p => !sources(root.relativize(p).getName(0).toString))
+        .filter(p => !p.getFileName.toString.startsWith("."))
+        .map(p => root.relativize(p).toString -> java.nio.file.Files.size(p)).toMap
+      finally walk.close()
+    }
     def day(d: Int) = java.time.LocalDate.parse("2025-03-01").plusDays(d.toLong).toString
 
     val etl = new graft.pipeline.EtlRun(spark, wh.toString)
@@ -169,6 +180,7 @@ object EtlReplayBench {
       // later would bleed its duration into this day (ADVICE r13).
       stageMs.clear()
       active.clear()
+      val filesBefore = etlFiles()
       val t0 = System.nanoTime()
       val runLog = etl.run(today)
       val (status, runNotes) = {
@@ -176,6 +188,7 @@ object EtlReplayBench {
         (r.getString(0), Option(r.getString(1)).getOrElse(""))
       }
       val wall = (System.nanoTime() - t0) / 1e9
+      val created = etlFiles() -- filesBefore.keySet
       // deterministic drain (not a fixed sleep): every queued listener
       // event is delivered before the per-stage snapshot
       org.apache.spark.sql.graft.bridge.waitListenerBusEmpty(spark.sparkContext)
@@ -188,11 +201,10 @@ object EtlReplayBench {
       val stockRows = etl.table("fact_stock_history", Schemas.factStockHistory).count()
       val errRows = etl.table("etl_error_log", Schemas.etlErrorLog).count()
 
-      val stages = {
-        import scala.jdk.CollectionConverters._
-        stageMs.asScala.toSeq.sortBy(-_._2.get())
+      val stages = stageMs.asScala.toSeq.sortBy(-_._2.get())
           .map { case (k, v) => s""""$k":${v.get() / 1e3}""" }.mkString(",")
-      }
+      val filesByTable = created.keys.groupBy(f => java.nio.file.Paths.get(f).getName(0).toString)
+        .toSeq.sortBy(_._1).map { case (t, fs) => s""""$t":${fs.size}""" }.mkString(",")
       // the run row's notes carry the J5 sidecar prune stats (scan set
       // size, ineffective flag) — the per-day observability VERDICT r14
       // asked to land in replay artifacts
@@ -200,7 +212,9 @@ object EtlReplayBench {
         s""""status":"$status","notes":"$runNotes","fact_tx_rows":$factRows,""" +
         s""""dim_user_rows":$dimUserRows,""" +
         s""""dim_product_rows":$dimProductRows,"stock_rows":$stockRows,""" +
-        s""""error_rows":$errRows,"stage_s":{$stages}}"""
+        s""""error_rows":$errRows,"files_created":${created.size},""" +
+        s""""mb_created":${math.round(created.values.sum / 1e3) / 1e3},""" +
+        s""""files_by_table":{$filesByTable},"stage_s":{$stages}}"""
       System.err.println(s"[etl-replay] $line")
       perDay += line
     }

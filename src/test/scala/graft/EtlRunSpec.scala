@@ -179,6 +179,49 @@ class EtlRunSpec extends SparkSpec {
     assert(plan.contains(s"= $day1"), plan.take(800))
   }
 
+  test("sink policy: every computed sink lands one part-file per day at fixture size") {
+    val whS = Files.createTempDirectory("graft_e2e_sinks").toString
+    val etlS = new EtlRun(spark, whS)
+    def parquetFiles = fileListing(whS).keySet.filter(_.endsWith(".parquet"))
+    def newFilesByTable(run: => Unit): Map[String, Int] = {
+      val before = parquetFiles
+      run
+      (parquetFiles -- before).toSeq.groupBy(f => Paths.get(f).getName(0).toString)
+        .map { case (t, fs) => t -> fs.size }
+    }
+    writeDay1(whS)
+    val day1Files = newFilesByTable(etlS.run(day1))
+    // day 2 re-versions both dimensions (5 emails, 3 prices, so 3 stock
+    // rows) and loads fresh transactions
+    writeOltp(Synthetic.users(spark, nUsers).withColumn("email",
+        when(col("user_id") <= 5, concat(lit("changed"), col("user_id"), lit("@example.com")))
+          .otherwise(col("email"))),
+      Synthetic.products(spark, nProducts).withColumn("price",
+        when(col("product_id") <= 3, col("price") + 5.0).otherwise(col("price"))),
+      Synthetic.transactions(spark, 150, day2, nUsers, nProducts, firstId = 5001), whS)
+    val day2Files = newFilesByTable(etlS.run(day2))
+    val computed = Seq("dim_user", "dim_product", "fact_transactions", "fact_stock_history",
+      "etl_error_log")
+    Seq(day1 -> day1Files, day2 -> day2Files).foreach { case (d, files) =>
+      computed.foreach(t => assert(files.get(t).contains(1), s"$d $t: $files"))
+    }
+    // a rewritten dimension snapshot is one file in all
+    Seq("dim_user", "dim_product").foreach(t =>
+      assert(fileListing(s"$whS/$t").keys.count(_.endsWith(".parquet")) === 1, t))
+  }
+
+  test("append: an empty frame observes zeros above the rebalance and writes no part-file") {
+    val whE = Files.createTempDirectory("graft_e2e_empty").toString
+    // a computed frame with upstream partitions and no rows, as a re-run's
+    // fact increment: the observation must still report, as zeros
+    val empty = spark.range(0, 100, 1, 4).filter(col("id") < 0)
+      .select(col("id"), to_date(lit(day1)).as("load_date"))
+    val r = new EtlRun(spark, whE).append(empty, "t", Seq("load_date"),
+      Seq(coalesce(sum("id"), lit(0L)).as("s")))
+    assert((r.getLong(0), r.getLong(1)) === (0L, 0L))
+    assert(!fileListing(whE).keys.exists(_.endsWith(".parquet")))
+  }
+
   test("staged append is all-or-nothing: a mid-job failure leaves the table untouched") {
     day1Run
     import scala.jdk.CollectionConverters._

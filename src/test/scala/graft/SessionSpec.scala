@@ -12,6 +12,7 @@ class SessionSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
     assert(spark.conf.get("spark.sql.extensions") === "graft.functions.GraftExtensions")
     assert(spark.conf.get("spark.sql.optimizer.runtime.bloomFilter.maxNumItems") === "67108864")
+    assert(spark.conf.get("spark.sql.optimizer.runtime.bloomFilter.maxNumBits") === "536870912")
     assert(spark.conf.get("spark.sql.shuffle.partitions") === "4")
     val dot = spark.sql("SELECT graft_dot(array(CAST(1 AS FLOAT), CAST(2 AS FLOAT)), " +
       "array(CAST(3 AS FLOAT), CAST(4 AS FLOAT))) AS d").head().getDouble(0)
