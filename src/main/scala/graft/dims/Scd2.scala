@@ -70,8 +70,8 @@ final case class Scd2(naturalKey: Seq[String], tracked: Seq[String], skName: Str
     mergeWithFresh(current, incoming, runDate, startForNew, cutJoin)._1
 
   /** Merge, then persist the next snapshot at `path` — the one SCD2
-    * snapshot write path ([[graft.pipeline.EtlRun]]'s dimension stages,
-    * [[graft.streaming.StreamPipelines.scd2Sink]]). Returns the number of
+    * snapshot write path, run by [[graft.pipeline.EtlRun]]'s dimension
+    * stages. Returns the number of
     * fresh versions (new plus re-versioned members): the inserted count.
     *
     * Every current row is carried exactly once (unchanged or expired) and

@@ -13,8 +13,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * (inputs treated as SETS; both sides deduped) but one hash-set pass per
   * row instead of two interpreted set-builder expressions that each
   * rebuild both arrays. This is the VERIFY step of every near-dup
-  * pipeline — evaluated once per LSH candidate pair (q28/q29/q57/q72 and
-  * CorpusRun), which at corpus scale is the largest per-row workload
+  * pipeline — evaluated once per LSH candidate pair (q28/q29/q57/q72),
+  * which at corpus scale is the largest per-row workload
   * after the band keys themselves.
   *
   * Parity: |A∩B| and |A∪B| are exact integers (distinct semantics, null

@@ -16,8 +16,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * but evaluated in ONE JVM call per row instead of four nested
   * interpreted higher-order lambdas (per-element expression-tree dispatch
   * with boxing). This sits on the hottest path of the library: every
-  * text near-dup query (q29/q57/q72/q119) and CorpusRun evaluate it per
-  * document, on up to three plan branches.
+  * text near-dup query (q29/q57/q72/q119) evaluates it per document, on
+  * up to three plan branches.
   *
   * Bit-parity contract (NativeExprSpec asserts it against the HOF form;
   * the DuckDB oracles then hash-match both):

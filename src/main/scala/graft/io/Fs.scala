@@ -139,27 +139,12 @@ object Fs {
     * pre-swap listing forever (`metadataCacheTTLSeconds=-1`), so without
     * it a later read of the same path in this session resolves to
     * renamed-away part-files. Shared by every snapshot table writer
-    * (`Scd2.persist`, CorpusRun, the sidecar tiering). */
+    * (`Scd2.persist`, the sidecar tiering). */
   def overwriteViaStaging(df: org.apache.spark.sql.DataFrame, path: String): Unit = {
-    stageSnapshot(df, path)
-    commitSnapshot(df.sparkSession, path)
-  }
-
-  /** Phase 1 of [[overwriteViaStaging]], exposed so MULTI-TABLE writers
-    * (e.g. a snapshot + its manifest) can stage every output while the
-    * expensive jobs run, then commit the swaps back-to-back — a failure
-    * anywhere in staging leaves every previous snapshot untouched, and
-    * the cross-table torn window shrinks to two adjacent renames. */
-  def stageSnapshot(df: org.apache.spark.sql.DataFrame, path: String): Unit = {
-    val conf = df.sparkSession.sessionState.newHadoopConf()
+    val spark = df.sparkSession
+    val conf = spark.sessionState.newHadoopConf()
     recoverSnapshot(path, conf)
     df.write.mode("overwrite").parquet(stagingOf(path))
-  }
-
-  /** Phase 2 of [[overwriteViaStaging]]: steps 3-5 — demote the current
-    * snapshot to `__old`, promote the staged one, drop `__old`. */
-  def commitSnapshot(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
     val target = new Path(path)
     val f = fs(target, conf)
     val old = new Path(oldOf(path))

@@ -52,7 +52,6 @@ object Multimodal {
                              sample_rate: Int, n_channels: Int,
                              bits_per_sample: Int, n_frames: Long,
                              duration_ms: Long, real_decode: Boolean)
-  final case class MediaVec(doc_id: Long, embedding: Array[Float])
   final case class VideoMeta(doc_id: Long, media_type: String, n_bytes: Long,
                              container: String, width: Int, height: Int,
                              duration_ms: Long, n_frames: Long,
@@ -676,28 +675,6 @@ object Multimodal {
               u16(6).toLong, u16(8).toLong, u16(10).toLong,
               real_decode = false)
         }
-      }
-    }
-  }
-
-  /** Feature extraction: payload → fixed-width float embedding (stub:
-    * md5-chained PRN floats in [-1,1)); batch shape + vector schema real.
-    * For REAL image features see [[imageDct]]. */
-  def extractFeatures(media: Dataset[Media], dim: Int = 64)
-                     (implicit spark: SparkSession): Dataset[MediaVec] = {
-    import spark.implicits._
-    media.mapPartitions { it =>
-      val md = MessageDigest.getInstance("MD5")
-      it.map { m =>
-        val vec = new Array[Float](dim)
-        var seed = m.payload
-        var i = 0
-        while (i < dim) {
-          seed = md.digest(seed)
-          vec(i) = (((seed(0) & 0xff) << 8 | (seed(1) & 0xff)) / 32768.0f) - 1.0f
-          i += 1
-        }
-        MediaVec(m.doc_id, vec)
       }
     }
   }

@@ -136,7 +136,7 @@ object Dedup {
   /** MinHash-LSH candidate pairs over a `(doc_id, sh)` shingle frame: one
     * signature of `k` permutations (affine family, one md5 per shingle),
     * banded `bands × rowsPerBand`, self-joined on band key — the shared
-    * core of every near-dup pipeline (q29 scoring, q57/CorpusRun removal,
+    * core of every near-dup pipeline (q29 scoring, q57 removal,
     * q72 clustering). Returns distinct `(id_a, id_b)` with `id_a < id_b`;
     * callers verify with [[graft.text.TextOps.jaccard]]. The input should
     * be cached: both join branches re-read it.
@@ -222,7 +222,7 @@ object Dedup {
 
   /** Chain-bounded, hash-verified near-dup EDGES over a `(doc_id, sh)`
     * shingle frame — the shared verify stage of the closure family
-    * (ClusterLabels/q72 clustering, q57/CorpusRun greedy removal). Band
+    * (ClusterLabels/q72 clustering, q57 greedy removal). Band
     * keys (native fused minhash) and each doc's DISTINCT 60-bit md5
     * shingle-hash set are materialized ONCE via a lazy lineage cut
     * ([[Fixpoint.cut]] — ContextCleaner-freed when the frame is
@@ -268,9 +268,8 @@ object Dedup {
       .select(col("id_a").as("src"), col("id_b").as("dst"))
   }
 
-  /** ARRIVAL-ordered scored near-dups — the batch twin of
-    * [[graft.streaming.StreamPipelines.nearDupStream]] and the exact
-    * contract a streaming corpus monitor keeps: each arriving doc is
+  /** ARRIVAL-ordered scored near-dups (q178) — the contract a streaming
+    * corpus monitor keeps: each arriving doc is
     * scored against the `perBand` MOST RECENT prior arrivals in each of
     * its LSH bands (signature-agreement estimate, `matches/k`), and a
     * matched doc reports the minimum earlier doc_id it duplicates.

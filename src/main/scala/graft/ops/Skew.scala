@@ -1,46 +1,23 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Skew-handling join helpers for the 100 TB path.
+/** Skew-handling join helper for the 100 TB path.
   *
   * AQE's skew-join splitting (`spark.sql.adaptive.skewJoin.enabled`, on by
-  * default) already handles sort-merge skew at runtime; these helpers cover
-  * the cases AQE cannot: a shuffled join whose hot keys are known or
+  * default) already handles sort-merge skew at runtime; this helper covers
+  * the case AQE cannot: a shuffled join whose hot keys are known or
   * measurable up front, where salting turns one straggler partition into
   * `buckets` parallel ones.
   *
-  * Shape: the big (skewed) side gets a random salt in [0, buckets); the
-  * small side is exploded `buckets`× with every salt value; the join key
-  * becomes (key, salt). Row multiplication happens only on the SMALL side
+  * Shape: the big (skewed) side's hot keys get a salt in [0, buckets);
+  * the small side's hot keys are exploded `buckets`× with every salt
+  * value; the join key becomes (key, salt). Row multiplication happens only on the SMALL side
   * — the big side is never duplicated — so the extra cost is
   * `buckets × |small|`, bought back by removing the straggler.
   */
 object Skew {
-
-  /** Inner/left equi-join with uniform salting on every key.
-    *
-    * @param big     skewed side (never duplicated)
-    * @param small   replicated side (exploded `buckets`×)
-    * @param keys    equi-join key column names (present on both sides)
-    * @param buckets salt fan-out; ~= executor slots touched per hot key
-    */
-  def saltedJoin(big: DataFrame, small: DataFrame, keys: Seq[String],
-                 buckets: Int, joinType: String = "inner"): DataFrame = {
-    // salt = hash(all columns, row id): the row id disambiguates fully
-    // identical duplicate rows of a hot key (the common fact-load skew),
-    // which a pure content hash would pile into ONE salt bucket. The salt
-    // value never affects join results (the small side carries every salt),
-    // only the shuffle distribution, so the id's run-to-run instability is
-    // harmless.
-    val salted = big.withColumn("__salt",
-      pmod(hash((big.columns.map(col) :+ monotonically_increasing_id()).toSeq: _*),
-        lit(buckets)))
-    val replicated = small.withColumn("__salt",
-      explode(sequence(lit(0), lit(buckets - 1))))
-    salted.join(replicated, keys :+ "__salt", joinType).drop("__salt")
-  }
 
   /** Salt ONLY the keys that are actually hot (two-pass): measure key
     * frequencies on the big side, salt keys above `hotThreshold` rows,
@@ -53,6 +30,12 @@ object Skew {
     val hot = big.groupBy(kc: _*).agg(count(lit(1)).as("__n"))
       .filter(col("__n") > hotThreshold).select(kc: _*)
       .withColumn("__hot", lit(true))
+    // salt = hash(all columns, row id): the row id disambiguates fully
+    // identical duplicate rows of a hot key (the common fact-load skew),
+    // which a pure content hash would pile into ONE salt bucket. The salt
+    // never affects join results (the small side carries every salt), only
+    // the shuffle distribution, so the id's run-to-run instability is
+    // harmless.
     val tagged = big.join(broadcast(hot), keys, "left_outer")
       .withColumn("__salt",
         when(col("__hot"),

@@ -741,9 +741,8 @@ object QCurate {
     // per band, so ONE degenerate band (boilerplate docs sharing a
     // signature) made the join quadratic on a single hot key: 44.2 s top
     // cost / 52.6× steepest ratio at 100× rows (VERDICT r9 #2). The
-    // contract is now the ARRIVAL-CHAIN bound the streaming twin
-    // ([[graft.streaming.StreamPipelines.nearDupStream]] /
-    // [[graft.ops.Dedup.arrivalChainScoredDups]]) already keeps: each
+    // contract is now the ARRIVAL-CHAIN bound q178
+    // ([[graft.ops.Dedup.arrivalChainScoredDups]]) already keeps: each
     // arriving doc is scored against the 3 MOST RECENT prior arrivals
     // (doc_id order) in each of its 8 bands — ≤ 24 comparisons per new
     // doc REGARDLESS of band skew, one lag window, no self-join or probe
@@ -804,14 +803,11 @@ object QCurate {
            |SELECT id_a, id_b, jacc FROM scored WHERE jacc >= 0.5""".stripMargin
       }),
 
-    // BATCH TWIN of [[graft.streaming.StreamPipelines.curateDocs]]: the
-    // dup-injected corpus arrives as a stream (ts = epoch + doc_id
-    // minutes, so the verbatim +10000/+20000 copies land days after
-    // their originals), content-fingerprint first-arrival-wins dedup,
-    // the frozen quality gate, and per-UTC-day ingest stats.
-    // StreamingSpec drives the REAL two-stateful-operator stream over
-    // the same rows and asserts it lands on this query's output:
-    // stream == batch == oracle.
+    // ingest curation in arrival order: the dup-injected corpus gets
+    // event times (ts = epoch + doc_id minutes, so the verbatim
+    // +10000/+20000 copies land days after their originals),
+    // content-fingerprint first-arrival-wins dedup, the frozen quality
+    // gate, and per-UTC-day ingest stats.
     Qry("q139_stream_curation_twin",
       (s, dir) => {
         val epoch = 1704067200L // 2024-01-01T00:00Z, UTC-day-aligned

@@ -1871,9 +1871,8 @@ object QEtl {
         |    / count(*), 6) AS avg_cents
         |FROM orders GROUP BY 1""".stripMargin)),
 
-    // the foreachBatch SCD2 sink's registered batch twin: two chained
-    // merges = two micro-batches; StreamingSpec runs the real sink on the
-    // same batches and asserts identity (see [[Scd2StreamTwin]])
+    // two chained SCD2 merges over disjoint mutation waves, with the
+    // surrogate-key continuation across merges (see [[Scd2StreamTwin]])
     Qry("q120_scd2_stream_twin",
       (s, dir) => Scd2StreamTwin.merged(s, dir),
       Some(Scd2StreamTwin.oracleSql)),

@@ -265,14 +265,12 @@ object QLlm {
         |  FROM scored WHERE jacc >= 0.5)
         |SELECT id_a, id_b, jacc FROM ranked WHERE rk <= 10""".stripMargin)),
 
-    // BATCH TWIN of [[graft.streaming.StreamPipelines.nearDupStream]]:
-    // arrival-ordered near-dup detection with bounded per-band state —
-    // each doc scored (signature agreement, matches/16) against the 3
-    // MOST RECENT prior arrivals in each of its LSH bands, reporting the
-    // min matched earlier id. The streaming form keeps exactly this ring
-    // as mapGroupsWithState state; StreamingSpec drives the real stream
-    // over the same rows and asserts stream == this == oracle. Arrival
-    // rank is doc_id (monotone in the ingest model's event time).
+    // arrival-ordered near-dup detection with bounded per-band state
+    // ([[graft.ops.Dedup.arrivalChainScoredDups]]) — each doc scored
+    // (signature agreement, matches/16) against the 3 MOST RECENT prior
+    // arrivals in each of its LSH bands, reporting the min matched
+    // earlier id. Arrival rank is doc_id (monotone in the ingest model's
+    // event time).
     Qry("q178_stream_neardup_twin",
       (s, dir) => {
         val d = docsWithDups(s, dir)
@@ -512,7 +510,8 @@ object QLlm {
         |  CAST(${h64("text || '|h'")} % 1024 + 1 AS INT) AS fake_height
         |FROM documents""".stripMargin)),
 
-    // tumbling-window aggregation (batch twin of the streaming pipeline)
+    // tumbling-window aggregation: hourly event counts and value sums per
+    // event type
     Qry("q39_tumbling_window",
       (s, dir) => {
         val ev = events(s, dir)
@@ -944,8 +943,7 @@ object QLlm {
         |SELECT doc_id, CAST(u.i - 1 AS INT) AS pos, tk[u.i] AS token
         |FROM d, unnest(generate_series(1, least(len(tk), 5))) AS u(i)""".stripMargin)),
 
-    // bounded-window interval join (batch twin of a watermarked
-    // stream-stream join): purchases within 30 min AFTER each click,
+    // bounded-window interval join: purchases within 30 min AFTER each click,
     // banded by time bucket — each side shuffles once, 2× bounded
     // fan-out, no per-key quadratic range join
     Qry("q61_interval_join",
@@ -1125,11 +1123,10 @@ object QLlm {
         |SELECT doc_id, term, tf, df, tfidf, rnk FROM r WHERE rnk <= 3""".stripMargin)),
 
     // SLIDING windows (1 h window, 15 min slide): Spark's native window()
-    // operator emits each event into its 4 overlapping windows — the batch
-    // twin of the streaming sliding aggregate. The oracle reproduces the
-    // epoch-aligned starts with exact µs arithmetic (k·15 min back from
-    // the event's 15-min floor), so the window assignment itself is what
-    // gets hash-checked
+    // operator emits each event into its 4 overlapping windows. The oracle
+    // reproduces the epoch-aligned starts with exact µs arithmetic (k·15
+    // min back from the event's 15-min floor), so the window assignment
+    // itself is what gets hash-checked
     Qry("q95_sliding_window",
       (s, dir) => events(s, dir)
         .groupBy(window(col("ts"), "1 hour", "15 minutes").as("w"), col("event_type"))

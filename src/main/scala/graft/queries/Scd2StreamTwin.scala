@@ -4,19 +4,15 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.dims.Scd2
 
-/** The batch twin of [[graft.streaming.StreamPipelines.scd2Sink]],
-  * registered as q120: TWO sequential [[Scd2.merge]] calls — exactly what
-  * the foreachBatch sink executes for a two-micro-batch mutation stream —
-  * over customer-derived inputs, with a DuckDB oracle reproducing the
-  * chained result (including the per-merge surrogate-key continuation).
-  * StreamingSpec drives the REAL sink over the same two batches and
-  * asserts it lands on this query's rows, closing the loop:
-  * stream == batch == oracle.
+/** q120: TWO sequential [[Scd2.merge]] waves — two days of mutations
+  * applied to one dimension in order — over customer-derived inputs,
+  * with a DuckDB oracle reproducing the chained result (including the
+  * per-merge surrogate-key continuation).
   *
-  * The two batches mutate DISJOINT key sets (≡0 vs ≡5 mod 10, plus new
-  * members in batch 2), so each key's final state is computable in one
+  * The two waves mutate DISJOINT key sets (≡0 vs ≡5 mod 10, plus new
+  * members in wave 2), so each key's final state is computable in one
   * SQL pass while sk assignment still exercises the chained max-sk
-  * handoff (batch-2 keys continue past batch-1's allocations).
+  * handoff (wave-2 keys continue past wave-1's allocations).
   */
 object Scd2StreamTwin {
   val d1 = "1998-06-01"
@@ -40,14 +36,14 @@ object Scd2StreamTwin {
       .select("user_sk", "user_id", "name", "email", "join_date",
         "start_date", "end_date", "current_flag")
 
-  /** Micro-batch 1 (run date [[d1]]): name changes on keys ≡ 0 (mod 10). */
+  /** Wave 1 (run date [[d1]]): name changes on keys ≡ 0 (mod 10). */
   def batch1(s: SparkSession, dir: String): DataFrame =
     customer(s, dir).filter(col("c_custkey") % 10 === 0)
       .select(col("c_custkey").as("user_id"),
         concat(col("c_name"), lit(" v2")).as("name"),
         mkEmail(col("c_custkey")).as("email"), jd(col("c_custkey")).as("join_date"))
 
-  /** Micro-batch 2 (run date [[d2]]): disjoint name changes (≡ 5 mod 10)
+  /** Wave 2 (run date [[d2]]): disjoint name changes (≡ 5 mod 10)
     * plus brand-new members entering at [[d2]]. */
   def batch2(s: SparkSession, dir: String): DataFrame = {
     val c = customer(s, dir)
@@ -70,8 +66,8 @@ object Scd2StreamTwin {
       date_format(col("end_date"), "yyyy-MM-dd").as("end_date"),
       col("current_flag"))
 
-  /** The chained two-batch merge — what the streaming sink's dim snapshot
-    * holds after the second micro-batch commits. Since r8's single-pass
+  /** The chained two-wave merge — the dimension snapshot after both
+    * waves are applied in order. Since r8's single-pass
     * [[Scd2.merge]] (the four filtered join derivations collapsed into
     * one explode pass) the chained plan no longer fans out — 22→7
     * broadcasts and ~30% faster with NO caching needed (VERDICT r7 #5;

@@ -244,7 +244,7 @@ object TextOps {
   /** Heuristic quality features + composite score, all exact-arithmetic
     * ratios of integers (cross-engine deterministic after round). */
   /** Frozen-weight linear quality model over [[qualityFeatures]] — the
-    * q133 classifier, shared with the streaming curation pipeline. Emits
+    * q133 classifier, shared with q139's ingest curation. Emits
     * the ROUNDED logit; the keep decision is `qualityLogit(text) > 0`.
     * (Deliberately no sigmoid: same decision boundary, and the bit-exact
     * oracle contract never has to assume libm `exp` rounding.) */

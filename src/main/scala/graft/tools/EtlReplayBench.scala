@@ -121,7 +121,9 @@ object EtlReplayBench {
         .map(p => root.relativize(p).toString -> java.nio.file.Files.size(p)).toMap
       finally walk.close()
     }
-    def day(d: Int) = java.time.LocalDate.parse("2025-03-01").plusDays(d.toLong).toString
+    // day 0 follows the last `Synthetic.users` join date (2024-01-01 +
+    // 700 days), so every generated user is PIT-valid from the first day
+    def day(d: Int) = java.time.LocalDate.parse("2026-01-01").plusDays(d.toLong).toString
 
     val etl = new graft.pipeline.EtlRun(spark, wh.toString)
     val perDay = Vector.newBuilder[String]

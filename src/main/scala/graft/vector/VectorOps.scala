@@ -277,35 +277,6 @@ object VectorOps {
       .toDF("query_id", "neighbor_id", "rank")
   }
 
-  /** Lloyd refinement over an [[ivfAssign]] output: per cluster, the new
-    * centroid is the element-wise mean of its members; vectors re-assign
-    * to the nearest refined centroid each iteration. Kept OUT of the
-    * oracle-checked surface on purpose — iterative float averaging is
-    * shuffle-order-dependent across engines — but within one engine it
-    * tightens clusters (spec asserts mean intra-cluster cosine does not
-    * decrease). Cost per iteration: one posexplode aggregate (linear in
-    * rows × dims, map-side partials) + one broadcast re-assignment pass.
-    */
-  def ivfRefine(assigned: DataFrame, iters: Int = 1): DataFrame = {
-    var cur = assigned // (id, vec, centroid_id)
-    (0 until iters).foreach { _ =>
-      val cents = cur
-        .select(col("centroid_id"), posexplode(d(col("vec"))).as(Seq("pos", "x")))
-        .groupBy("centroid_id", "pos").agg(avg("x").as("m"))
-        .groupBy("centroid_id")
-        .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-        .select(col("centroid_id"),
-          transform(col("pm"), e => e.getField("m").cast("float")).as("cvec"))
-      val w = Window.partitionBy("id").orderBy(col("__cos").desc, col("centroid_id"))
-      cur = cur.select("id", "vec").join(broadcast(cents))
-        .withColumn("__cos", cosine(col("vec"), col("cvec")))
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1)
-        .select(col("id"), col("vec"), col("centroid_id"))
-    }
-    cur
-  }
-
   /** Deterministic ±1 sign for the JL projection matrix, from md5 parity
     * (low bit of the first hex nibble) — any engine rebuilds the same
     * matrix from the formula, no RNG state to ship (the [[planeComponent]]
@@ -454,7 +425,10 @@ object VectorOps {
   /** Exact-cosine re-rank of shortlisted `(query_id, neighbor_id)` pairs
     * — stage 2 of the production PQ shape, usable against ANY shortlist
     * source. The slim id-pair frame broadcasts against the corpus scan,
-    * so the re-rank touches only |Q| × shortlist full-precision vectors. */
+    * so the re-rank touches only |Q| × shortlist full-precision vectors.
+    * Pure ADC ranking on a 32× lossy code is weak on near-random vectors
+    * (recall@5 ≈ 0.1 on the testdata corpus); re-ranking a top-50
+    * [[pqAdcTopK]] shortlist recovers most of it (≈ 0.54–0.66, q167). */
   def rerankExact(short: DataFrame, queries: DataFrame, corpus: DataFrame,
                   k: Int): DataFrame = {
     val sq = short.select(col("query_id"), col("neighbor_id")).join(
@@ -467,21 +441,6 @@ object VectorOps {
       .withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), col("rank"))
   }
-
-  /** Two-stage PQ search — ADC shortlist, then EXACT re-rank: the
-    * production shape for compressed-domain ANN. Pure ADC ranking on a
-    * 32× lossy code is weak on near-random vectors (recall@5 ≈ 0.1 on
-    * the testdata corpus); re-ranking the top-`shortlist` ADC candidates
-    * with exact cosine recovers most of it (≈ 0.54–0.66 observed) while
-    * still touching only |Q| × shortlist original vectors instead of the
-    * whole corpus — at 100 TB the full-precision vectors stay on disk
-    * and only the shortlist pages in. The shortlist (|Q| × shortlist slim
-    * id pairs) broadcasts against the corpus scan, so the re-rank is one
-    * narrow pass + a tiny window. */
-  def pqSearchRerank(queries: DataFrame, corpus: DataFrame, m: Int, subDim: Int,
-                     ks: Int, shortlist: Int, k: Int, seed: Int = 7): DataFrame =
-    rerankExact(pqAdcTopK(queries, corpus, m, subDim, ks, shortlist, seed),
-      queries, corpus, k)
 
   /** Bucketed ANN: exact cosine evaluated only on bucket-colliding pairs.
     * Returns candidate pairs (id_a < id_b) with their cosine — the

@@ -272,17 +272,8 @@ class MultimodalSpec extends SparkSpec {
     assert(fr.forall(_.real_frame_count))
   }
 
-  test("extractFeatures yields fixed-width deterministic embeddings in range") {
-    val v = Multimodal.extractFeatures(media, dim = 16).collect().sortBy(_.doc_id)
-    assert(v.length === 3)
-    assert(v.forall(_.embedding.length === 16))
-    assert(v.forall(_.embedding.forall(x => x >= -1.0f && x < 1.0f)))
-    val v2 = Multimodal.extractFeatures(media, dim = 16).collect().sortBy(_.doc_id)
-    assert(v.zip(v2).forall { case (a, b) => a.embedding.sameElements(b.embedding) })
-  }
-
   test("all multimodal stages are narrow: no exchange in the plan") {
-    val plan = Multimodal.extractFeatures(media).queryExecution.executedPlan.toString
+    val plan = Multimodal.imageDct(media).queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"unexpected shuffle:\n$plan")
     val audioPlan = Multimodal.audioFeatures(media).queryExecution.executedPlan.toString
     assert(!audioPlan.contains("Exchange"), s"unexpected shuffle:\n$audioPlan")

@@ -333,7 +333,7 @@ class PlanBudgetSpec extends SparkSpec {
     // cluster representative: q72's CC (checkpointed lineage collapses
     // its iterations) + the length join + the per-cluster argmax window
     assert(shuffles("q154_cluster_representative") <= 8)
-    // arrival-chain scored near-dups (the streaming twin's batch form):
+    // arrival-chain scored near-dups:
     // ONE band-keyed lag window + the per-doc min aggregate — the whole
     // near-dup report in two exchanges, no self-join anywhere
     assert(shuffles("q178_stream_neardup_twin") <= 2)

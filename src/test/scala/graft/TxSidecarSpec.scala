@@ -207,8 +207,8 @@ class TxSidecarSpec extends SparkSpec {
 
       // window A: compaction staged (_SUCCESS complete), crash right
       // after the demote — no table at the path at all
-      graft.io.Fs.stageSnapshot(
-        TxSidecar.compactedFrame(spark, scPath, "2025-03-01"), scPath)
+      TxSidecar.compactedFrame(spark, scPath, "2025-03-01")
+        .write.mode("overwrite").parquet(scPath + "__staging")
       assert(fsys.rename(new Path(scPath), new Path(scPath + "__old")))
       // NO manual cache refresh: the heal itself must invalidate the
       // session's pre-crash listing (recoverSnapshot returns healed=true

@@ -124,26 +124,6 @@ class VectorOpsSpec extends SparkSpec {
     assert(sortedRows(a1.select("id", "centroid_id")) === sortedRows(a2.select("id", "centroid_id")))
   }
 
-  test("ivfRefine does not worsen mean intra-cluster cosine") {
-    // two planted clusters + noise: refinement should tighten assignment
-    val vecs = (1L to 120L).map { i =>
-      val base = if (i % 2 == 0) Array(1.0f, 0.2f, 0.0f, 0.1f) else Array(0.0f, 0.9f, 0.3f, 0.0f)
-      (i, base.zipWithIndex.map { case (v, j) => v + 0.05f * math.sin(i * 7 + j).toFloat }.toSeq)
-    }.toDF("id", "vec")
-    def meanIntra(a: org.apache.spark.sql.DataFrame): Double = {
-      val cents = a.groupBy("centroid_id").agg(first("vec").as("ref"))
-      a.join(cents, Seq("centroid_id"))
-        .select(VectorOps.cosine(col("vec"), col("ref")).as("c"))
-        .agg(avg("c")).first().getDouble(0)
-    }
-    val a0 = VectorOps.ivfAssign(vecs, nCentroids = 4)
-    val a1 = VectorOps.ivfRefine(a0, iters = 2)
-    assert(a1.count() === 120)
-    assert(a1.select("id").distinct().count() === 120)
-    // compactness proxy must not regress (allow float slack)
-    assert(meanIntra(a1) >= meanIntra(a0) - 1e-6)
-  }
-
   test("ivfSearch with nprobe = nCentroids recovers the exact brute-force top-k") {
     val vecs = (1L to 60L).map(i => (i, Seq.tabulate(8)(j =>
       math.cos(i * 2.3 + j * 0.7).toFloat))).toDF("id", "vec")
@@ -218,14 +198,15 @@ class VectorOpsSpec extends SparkSpec {
     assert(got === expected)
   }
 
-  test("pqSearchRerank with shortlist >= |corpus| equals bruteForceTopK") {
+  test("rerankExact over a pqAdcTopK shortlist >= |corpus| equals bruteForceTopK") {
     val vecs = (1L to 50L).map(i => (i, Seq.tabulate(8)(j =>
       math.sin(i * 1.7 + j * 2.1).toFloat))).toDF("id", "vec")
     val q = vecs.filter(col("id") <= 4)
     val exact = VectorOps.bruteForceTopK(q, vecs, 3)
       .select("query_id", "neighbor_id", "rank")
-    val rr = VectorOps.pqSearchRerank(q, vecs, m = 4, subDim = 2, ks = 8,
-      shortlist = 50, k = 3)
+    // the two-stage composition q167 runs: ADC shortlist, then exact re-rank
+    val short = VectorOps.pqAdcTopK(q, vecs, m = 4, subDim = 2, ks = 8, k = 50)
+    val rr = VectorOps.rerankExact(short, q, vecs, k = 3)
     assert(sortedRows(rr) === sortedRows(exact))
   }
 
