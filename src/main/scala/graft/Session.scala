@@ -44,11 +44,11 @@ object Session {
       .config("spark.log.level", "WARN")
       // native functions + date-string-compare pushdown rule
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // lift BloomFilterAggregate's 4M-item and 8 MB clamps: q75's
-      // hand-built runtime filter inserts ~11M keys at sf100 and the J5
-      // sidecar blooms ~20M ids per sf100 day; a clamped item count
-      // mis-sizes the hash count (k for 4M with 11M inserted ≈ 17% fp vs
-      // ~6% optimal). The item lift also sets every bloom's BYTES: Spark
+      // lift BloomFilterAggregate's 4M-item and 8 MB clamps: the J5
+      // sidecar blooms ~20M ids per sf100 day, and q122 and q181–q183
+      // use the same aggregate; a clamped item count mis-sizes the hash
+      // count (k sized for 4M with 11M inserted ≈ 17% fp vs ~6% optimal).
+      // The item lift also sets every bloom's BYTES: Spark
       // designs for fpp = 0.03·n/maxNumItems, so n = 65,536 (EtlRun's
       // floor) gets fpp 2.9e-5 and 178 KB (131 KB at the default 4M).
       // With 64M items the 8 MB bit clamp binds from ~5.3M items on; the

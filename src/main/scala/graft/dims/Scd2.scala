@@ -53,21 +53,9 @@ final case class Scd2(naturalKey: Seq[String], tracked: Seq[String], skName: Str
     * evaluated against `incoming`'s columns (e.g. `col("join_date")` or
     * `lit(runDate)`).
     */
-  /** @param cutJoin  lazily lineage-cut ([[graft.ops.Fixpoint.cut]]) the
-    *                  full-outer join the output branches all derive
-    *                  from. Off by default; turn on when merges CHAIN —
-    *                  each uncut merge inlines the join subtree into
-    *                  every branch of the next, so a k-step chain
-    *                  re-plans it ~4^k times (q120's 22-broadcast plan,
-    *                  VERDICT r7 #5). A cut, unlike a cache (ADVICE r8:
-    *                  a k-step cached chain pinned k dimension-sized
-    *                  frames for the session, with no unpersist path),
-    *                  is freed by the ContextCleaner as soon as the
-    *                  merged frame is no longer referenced, and stops
-    *                  the chained plan growing at all. */
   def merge(current: DataFrame, incoming: DataFrame, runDate: String,
-            startForNew: Column, cutJoin: Boolean = false): DataFrame =
-    mergeWithFresh(current, incoming, runDate, startForNew, cutJoin)._1
+            startForNew: Column): DataFrame =
+    mergeWithFresh(current, incoming, runDate, startForNew)._1
 
   /** Merge, then persist the next snapshot at `path` — the one SCD2
     * snapshot write path, run by [[graft.pipeline.EtlRun]]'s dimension
@@ -90,7 +78,7 @@ final case class Scd2(naturalKey: Seq[String], tracked: Seq[String], skName: Str
     * Like [[merge]], it assumes one `incoming` row per natural key. */
   def persist(current: DataFrame, incoming: DataFrame, runDate: String,
               startForNew: Column, path: String): Long = {
-    val (next, fresh) = mergeWithFresh(current, incoming, runDate, startForNew, cutJoin = false)
+    val (next, fresh) = mergeWithFresh(current, incoming, runDate, startForNew)
     val nFresh = fresh.count()
     if (nFresh > 0) graft.io.Fs.overwriteViaStaging(
       next.hint("rebalance").sortWithinPartitions(naturalKey.map(col): _*), path)
@@ -99,7 +87,7 @@ final case class Scd2(naturalKey: Seq[String], tracked: Seq[String], skName: Str
 
   /** The next snapshot, and the join rows that emit its fresh versions. */
   private def mergeWithFresh(current: DataFrame, incoming: DataFrame, runDate: String,
-                             startForNew: Column, cutJoin: Boolean): (DataFrame, DataFrame) = {
+                             startForNew: Column): (DataFrame, DataFrame) = {
     val run = to_date(lit(runDate))
 
     val history = current.filter(col("current_flag") === 0)
@@ -107,12 +95,11 @@ final case class Scd2(naturalKey: Seq[String], tracked: Seq[String], skName: Str
 
     val inc = incoming.select(attrs.map(c => col(c).as(s"in_$c")) :+ startForNew.as("in_start"): _*)
 
-    val joined0 = cur.join(
+    val joined = cur.join(
       inc,
       naturalKey.map(k => col(k) === col(s"in_$k")).reduce(_ && _),
       "full_outer"
     )
-    val joined = if (cutJoin) graft.ops.Fixpoint.cut(joined0) else joined0
 
     val hasCur = naturalKey.map(k => col(k).isNotNull).reduce(_ && _)
     val hasInc = naturalKey.map(k => col(s"in_$k").isNotNull).reduce(_ && _)

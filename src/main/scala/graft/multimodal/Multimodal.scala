@@ -1,41 +1,34 @@
 package graft.multimodal
 
 import java.security.MessageDigest
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Dataset, SparkSession}
 
-/** Multimodal-column plumbing: image/audio/video as opaque `binary` columns
-  * with typed metadata, decoded / feature-extracted / resized /
-  * frame-sampled via `mapPartitions` over typed Datasets.
+/** Multimodal-column plumbing: image/audio/video as opaque `binary`
+  * columns, feature-extracted and frame-sampled via `mapPartitions` over
+  * typed Datasets. Three operators, each run by a registered query:
   *
-  * The IMAGE branch is REAL: `decodeMeta` and `resize` decode any format
-  * the JDK's built-in `javax.imageio` readers understand (PNG/BMP/GIF/
-  * JPEG/WBMP — zero external dependencies), and `resize` actually
-  * resamples pixels and re-encodes. The AUDIO container branch is REAL
-  * too: `decodeAudioMeta` parses any format the JDK's
-  * `javax.sound.sampled` providers accept (WAV/AIFF/AU PCM) — sample
-  * rate, channels, bit depth, frame count, duration are measured from
-  * the actual stream, flagged `real_decode = true`. The VIDEO container
-  * branch is REAL as well: [[decodeVideoMeta]] parses MP4/QuickTime box
-  * structure (`moov`→`mvhd` timescale+duration, `trak`→`tkhd` 16.16
-  * fixed-point width/height, `stbl`→`stts` sample counts) and RIFF/AVI
-  * (`hdrl`→`avih` main header) DIRECTLY from bytes — dimensions,
-  * duration, and frame count need no codec, only the container layout.
-  * PCM SAMPLE decode is real too: [[audioFeatures]] reads the actual
-  * 16-bit samples of any accepted stream and computes exact integer
-  * signal features (energy, zero crossings, Haar filterbank bands).
-  * Only pixel/sample DECODE of compressed streams remains stubbed (this
-  * container ships no codecs): `fakeDecode` derives deterministic
-  * pseudo-metadata from an md5 of the payload and backstops any payload
-  * no parser/provider accepts, so a corrupt blob degrades to labeled
-  * fake metadata instead of failing the job. Everything around the
-  * stub is the real production shape —
-  * binary-safe schemas, per-partition batch processing (one decoder init
-  * per partition, not per row), narrow plan (no shuffle introduced by any
-  * stage), and explode-shaped frame sampling — so swapping the remaining
-  * stub for javacv/ffmpeg is a local change.
+  *  - [[imageDct]] (q176): REAL pixel decode through the JDK's built-in
+  *    `javax.imageio` readers (PNG/BMP/GIF/JPEG/WBMP — zero external
+  *    dependencies), then an exact integer 8×8 DCT.
+  *  - [[audioFeatures]] (q179): REAL PCM sample decode through the JDK's
+  *    `javax.sound.sampled` providers (WAV/AIFF/AU), then exact integer
+  *    signal features (energy, zero crossings, Haar filterbank bands).
+  *  - [[sampleFrames]] (q62): stride-sampled video frames whose COUNT
+  *    comes from the container itself — MP4/QuickTime box structure
+  *    (`stbl`→`stts` sample counts) or RIFF/AVI (`hdrl`→`avih` main
+  *    header), parsed DIRECTLY from the bytes, since a frame count needs
+  *    no codec, only the container layout. The parsers treat every
+  *    header field as untrusted and reject a torn or overflowing one.
   *
-  * Scale: all four operators are per-row/narrow; a 100 TB corpus of binary
+  * This container ships no codecs, so a payload no reader or parser
+  * accepts degrades to labeled stub values (`real_decode` /
+  * `real_frame_count` = false) instead of failing the job. Everything
+  * around the stubs is the real production shape: binary-safe schemas,
+  * per-partition batch processing (one decoder init per partition, not
+  * per row), a narrow plan (no stage adds a shuffle) and explode-shaped
+  * frame sampling.
+  *
+  * Scale: every operator is per-row/narrow; a large corpus of binary
   * payloads distributes by input split. Keep payloads ≤ a few MB per row
   * (parquet row-group friendly); bigger media belongs in object storage
   * with the DataFrame carrying (uri, range) pointers instead — the same
@@ -44,27 +37,8 @@ import org.apache.spark.sql.functions._
 object Multimodal {
 
   final case class Media(doc_id: Long, media_type: String, payload: Array[Byte])
-  final case class ImageMeta(doc_id: Long, media_type: String, n_bytes: Long,
-                             width: Int, height: Int, n_channels: Int)
   final case class Frame(doc_id: Long, frame_idx: Int, frame_payload: Array[Byte],
                          real_frame_count: Boolean)
-  final case class AudioMeta(doc_id: Long, media_type: String, n_bytes: Long,
-                             sample_rate: Int, n_channels: Int,
-                             bits_per_sample: Int, n_frames: Long,
-                             duration_ms: Long, real_decode: Boolean)
-  final case class VideoMeta(doc_id: Long, media_type: String, n_bytes: Long,
-                             container: String, width: Int, height: Int,
-                             duration_ms: Long, n_frames: Long,
-                             real_decode: Boolean)
-
-  /** ======= STUB ======= deterministic fake decoder: md5(payload) →
-    * pseudo (width, height, channels). Covers compressed payloads no
-    * container parser / ImageIO reader / sampled-audio provider accepts. */
-  private def fakeDecode(payload: Array[Byte]): (Int, Int, Int) = {
-    val d = MessageDigest.getInstance("MD5").digest(payload)
-    def u16(i: Int) = ((d(i) & 0xff) << 8 | (d(i + 1) & 0xff))
-    (u16(0) % 1024 + 1, u16(2) % 1024 + 1, Array(1, 3, 4)(u16(4) % 3))
-  }
 
   /** REAL image decode via the JDK's bundled ImageIO readers. None when no
     * installed reader accepts the payload (caller falls back to the stub). */
@@ -78,69 +52,6 @@ object Multimodal {
   private def initCodecs(): Unit = {
     System.setProperty("java.awt.headless", "true")
     javax.imageio.ImageIO.setUseCache(false)
-  }
-
-  /** Decode metadata per payload: real width/height/channels for any
-    * ImageIO-readable image, stub metadata otherwise. One decoder init per
-    * PARTITION, not per row. */
-  def decodeMeta(media: Dataset[Media])(implicit spark: SparkSession): Dataset[ImageMeta] = {
-    import spark.implicits._
-    media.mapPartitions { it =>
-      initCodecs()
-      it.map { m =>
-        (if (m.media_type == "image") decodeImage(m.payload) else None) match {
-          case Some(img) =>
-            ImageMeta(m.doc_id, m.media_type, m.payload.length.toLong,
-              img.getWidth, img.getHeight, img.getColorModel.getNumComponents)
-          case None =>
-            val (w, h, c) = fakeDecode(m.payload)
-            ImageMeta(m.doc_id, m.media_type, m.payload.length.toLong, w, h, c)
-        }
-      }
-    }
-  }
-
-  /** Resize to `maxSide` on the longer edge (never upscale). For
-    * ImageIO-readable images this REALLY resamples (bilinear) and
-    * re-encodes as PNG — the reported dims and byte count are measured
-    * from the re-encoded output. Non-decodable payloads keep the stub's
-    * clamp-the-fake-dims behavior. */
-  def resize(media: Dataset[Media], maxSide: Int)
-            (implicit spark: SparkSession): Dataset[ImageMeta] = {
-    import spark.implicits._
-    media.mapPartitions { it =>
-      initCodecs()
-      it.map { m =>
-        (if (m.media_type == "image") decodeImage(m.payload) else None) match {
-          case Some(img) =>
-            val scale = math.min(1.0, maxSide.toDouble / math.max(img.getWidth, img.getHeight))
-            if (scale >= 1.0) // already within bounds: no resample, no re-encode
-              ImageMeta(m.doc_id, m.media_type, m.payload.length.toLong,
-                img.getWidth, img.getHeight, img.getColorModel.getNumComponents)
-            else {
-              val nw = math.max(1, (img.getWidth * scale).toInt)
-              val nh = math.max(1, (img.getHeight * scale).toInt)
-              val dst = new java.awt.image.BufferedImage(nw, nh,
-                if (img.getColorModel.hasAlpha) java.awt.image.BufferedImage.TYPE_INT_ARGB
-                else java.awt.image.BufferedImage.TYPE_3BYTE_BGR)
-              val g = dst.createGraphics()
-              g.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
-                java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-              g.drawImage(img, 0, 0, nw, nh, null)
-              g.dispose()
-              val bos = new java.io.ByteArrayOutputStream()
-              javax.imageio.ImageIO.write(dst, "png", bos)
-              ImageMeta(m.doc_id, m.media_type, bos.size().toLong,
-                dst.getWidth, dst.getHeight, dst.getColorModel.getNumComponents)
-            }
-          case None =>
-            val (w, h, c) = fakeDecode(m.payload)
-            val scale = math.min(1.0, maxSide.toDouble / math.max(w, h))
-            ImageMeta(m.doc_id, m.media_type, m.payload.length.toLong,
-              math.max(1, (w * scale).toInt), math.max(1, (h * scale).toInt), c)
-        }
-      }
-    }
   }
 
   /** The `javax.sound.sampled` file readers, resolved ONCE per JVM.
@@ -184,51 +95,6 @@ object Multimodal {
         try Option(r.getAudioInputStream(new java.io.ByteArrayInputStream(payload)))
         catch { case _: Exception => None }
     }.nextOption()
-
-  /** REAL audio container parse via the JDK's bundled `javax.sound.sampled`
-    * providers (WAV/AIFF/AU PCM). None when no installed provider accepts
-    * the payload (caller falls back to the stub). */
-  private def decodeAudio(payload: Array[Byte])
-      : Option[(javax.sound.sampled.AudioFormat, Long)] =
-    openAudioStream(payload).map { in =>
-      val out = (in.getFormat, in.getFrameLength)
-      in.close()
-      out
-    }
-
-  /** Audio metadata per payload: real sample rate / channels / bit depth /
-    * frame count / duration for any `javax.sound.sampled`-readable stream
-    * (`real_decode = true`), md5-derived stub metadata otherwise. Same
-    * narrow per-partition shape as [[decodeMeta]]. */
-  def decodeAudioMeta(media: Dataset[Media])
-                     (implicit spark: SparkSession): Dataset[AudioMeta] = {
-    import spark.implicits._
-    media.mapPartitions { it =>
-      initCodecs()
-      it.map { m =>
-        (if (m.media_type == "audio") decodeAudio(m.payload) else None) match {
-          case Some((f, frames)) =>
-            val durMs =
-              if (f.getFrameRate > 0 && frames >= 0)
-                math.round(frames * 1000.0 / f.getFrameRate)
-              else -1L
-            AudioMeta(m.doc_id, m.media_type, m.payload.length.toLong,
-              math.round(f.getSampleRate), f.getChannels,
-              f.getSampleSizeInBits, frames, durMs, real_decode = true)
-          case None =>
-            // ======= STUB ======= compressed audio / non-audio payloads:
-            // deterministic md5-derived pseudo-metadata, clearly flagged
-            val (w, h, _) = fakeDecode(m.payload)
-            val rate = 8000 * (1 + w % 6)            // 8/16/../48 kHz classes
-            val channels = 1 + h % 2
-            val frames = m.payload.length.toLong / (2L * channels)
-            AudioMeta(m.doc_id, m.media_type, m.payload.length.toLong,
-              rate, channels, 16, frames, frames * 1000L / rate,
-              real_decode = false)
-        }
-      }
-    }
-  }
 
   // ===== Real video container parsing (pure JVM, no codec needed) =====
 
@@ -365,43 +231,14 @@ object Multimodal {
     }
   }
 
-  /** Video metadata per payload: REAL container parse (MP4 box walk or
-    * RIFF/AVI header — `real_decode = true`, `container` names which)
-    * for any structurally valid payload; md5-derived stub metadata
-    * otherwise (`container = "unknown"`, frame count = the same
-    * payload-size heuristic [[sampleFrames]] uses, 25 fps pseudo
-    * duration). Same narrow per-partition shape as [[decodeMeta]]. */
-  def decodeVideoMeta(media: Dataset[Media])
-                     (implicit spark: SparkSession): Dataset[VideoMeta] = {
-    import spark.implicits._
-    media.mapPartitions(_.map { m =>
-      val real =
-        if (m.media_type == "video")
-          parseMp4(m.payload).map(r => ("mp4", r))
-            .orElse(parseAvi(m.payload).map(r => ("avi", r)))
-        else None
-      real match {
-        case Some((container, (w, h, durMs, frames))) =>
-          VideoMeta(m.doc_id, m.media_type, m.payload.length.toLong,
-            container, w, h, durMs, frames, real_decode = true)
-        case None =>
-          // ======= STUB ======= no parseable container: labeled fake
-          val (w, h, _) = fakeDecode(m.payload)
-          val frames = math.max(1, m.payload.length / 64).toLong
-          VideoMeta(m.doc_id, m.media_type, m.payload.length.toLong,
-            "unknown", w, h, frames * 40L, frames, real_decode = false)
-      }
-    })
-  }
-
   /** Frame sampling for video payloads: emits `everyNth`-stride frames as
     * an exploded Dataset. The frame COUNT is real where the container
     * parse can supply it (MP4 `stts` sample-count sum, AVI `avih`
-    * `dwTotalFrames` — the same walkers [[decodeVideoMeta]] uses;
-    * VERDICT r7 #4), sanity-capped at one frame per payload byte so a
-    * hostile header cannot explode the output; `real_frame_count` on
-    * every emitted row records which path counted. Payloads no parser
-    * accepts fall back to the payload-size heuristic. Frame PAYLOADS
+    * `dwTotalFrames`; VERDICT r7 #4), sanity-capped at one frame per
+    * payload byte so a hostile header cannot explode the output;
+    * `real_frame_count` on every emitted row records which path counted.
+    * Payloads no parser accepts fall back to the payload-size heuristic.
+    * Frame PAYLOADS
     * remain stub byte slices either way (no codec in this container) —
     * deterministic, so the plumbing stays hash-checkable. */
   def sampleFrames(media: Dataset[Media], everyNth: Int)
@@ -415,7 +252,8 @@ object Multimodal {
         case _ => (math.max(1, m.payload.length / 64), false) // STUB count
       }
       (0 until nFrames by everyNth).map { i =>
-        val from = (i * 64) % math.max(1, m.payload.length)
+        // Long: i * 64 wraps an Int from frame index 2^25 on
+        val from = ((i * 64L) % math.max(1, m.payload.length)).toInt
         val until = math.min(from + 64, m.payload.length)
         Frame(m.doc_id, i, m.payload.slice(from, until), real)
       }

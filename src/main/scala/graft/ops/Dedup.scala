@@ -26,7 +26,7 @@ object Dedup {
     * 308-311), so the historical id SCAN grows with history by design —
     * but the EXCHANGE need not. This variant aggregates the bounded
     * incoming side (today's ~2M ids) into ONE bloom filter (Spark's own
-    * BloomFilterAggregate, shipped as a plan literal — the q75/q122
+    * BloomFilterAggregate, shipped as a plan literal — the q122
     * bounded-plan-literal pattern), `might_contain`-prunes the
     * historical id scan BEFORE its distinct/exchange, then runs the
     * exact [[antiJoinExisting]] unchanged on the pruned side.

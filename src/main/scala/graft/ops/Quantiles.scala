@@ -4,33 +4,32 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Exact interpolated quantiles with BOUNDED aggregation state — the
-  * scale-safe replacement for `percentile(v, q)`, whose buffer holds
-  * every value of the group (a guaranteed executor OOM for a single-group
-  * percentile at 100 TB).
+/** Exact interpolated quantiles in TWO exchanges — the replacement for
+  * `percentile(v, q)`, whose buffer holds every value of the group (an
+  * executor OOM for a single large group). The state here is one counter
+  * per DISTINCT value, so the operator is meant for value domains whose
+  * distinct cardinality per group is bounded (integer cents, ratings,
+  * token counts: the common quantile targets in an analytics pipeline).
   *
-  * Shape: histogram partition + boundary-only refinement.
-  *
-  *   1. per-group `min/max/count` (one slim aggregate);
-  *   2. fixed-width bucket counts — state is ≤ `nBuckets` counters per
-  *      group, map-side combinable, never the values;
-  *   3. cumulative bucket counts locate which bucket holds each target
-  *      rank `floor/ceil((n−1)·q)` (a window over ≤ `nBuckets` rows per
-  *      group);
-  *   4. ONLY the located boundary buckets' rows are re-read and ranked
-  *      (`row_number` ordered by value) — the sort input is a few
-  *      buckets, not the group — and the flanking values interpolate.
+  *   1. `groupBy(group, value).count()` — the value histogram (one
+  *      map-side-combinable exchange);
+  *   2. ONE window pass per group over the distinct-value grain gives
+  *      each value its cumulative rank range `[lo, hi)` and the group
+  *      total `n` (second exchange);
+  *   3. every requested quantile's flanking values fall out of a single
+  *      conditional min-aggregate over the same grain — the group
+  *      partitioning from step 2 is reused, so NO further exchange —
+  *      and interpolation is a projection.
   *
   * Reproduces Spark's `Percentile` arithmetic exactly:
   * `(higher − pos)·lowerValue + (pos − lower)·higherValue` at
   * `pos = (n−1)·q` (Spark Percentile.getPercentile), so swapping this in
   * under a query keeps any `quantile_cont` oracle hash-matched.
   *
-  * Skew note: a pathologically concentrated distribution can still load
-  * one bucket (step 4's sort input). Buckets are value-ranges, so that
-  * requires mass concentrated in `(max−min)/nBuckets`; raise `nBuckets`
-  * or recurse the same partition step inside the bucket if a profile
-  * shows it — counts in step 2 make the check free.
+  * Step 2 sorts each group's distinct values in one task, so a
+  * continuous domain with ~10^6+ distinct values per group stays correct
+  * but slow. No caller has such a domain; if one appears, a bounded-state
+  * sketch is the known answer, measured at that point.
   */
 object Quantiles {
 
@@ -38,138 +37,14 @@ object Quantiles {
     * @param groupCols grouping columns (empty = one global group)
     * @param valueCol  numeric column (nulls ignored, like `percentile`)
     * @param quantiles (outputColumnName, q) pairs, each q in [0,1]
-    * @param nBuckets  histogram resolution
     * @param countCol  when set, also emit the group's NON-NULL value
-    *                  count under this name — it falls out of the stats
+    *                  count under this name — it falls out of the window
     *                  pass for free, so callers needing the count
     *                  alongside quantiles skip a whole extra aggregate
     *                  (≡ `count(*)` when the value column is non-null)
     * @return one row per group: groupCols ++ one double column per
-    *         quantile (null for empty groups, like `percentile`)
+    *         quantile (groups with no non-null value emit no row)
     */
-  def exactQuantiles(df: DataFrame, groupCols: Seq[String], valueCol: String,
-                     quantiles: Seq[(String, Double)],
-                     nBuckets: Int = 4096,
-                     countCol: Option[String] = None): DataFrame = {
-    require(quantiles.nonEmpty && quantiles.map(_._1).distinct == quantiles.map(_._1))
-    val g = if (groupCols.isEmpty) Seq("__g") else groupCols
-    val base0 = if (groupCols.isEmpty) df.withColumn("__g", lit(1)) else df
-    val base = base0
-      .select(g.map(col) :+ col(valueCol).cast("double").as("__v"): _*)
-      .filter(col("__v").isNotNull)
-
-    // stats and the rank-location frame below are PROVABLY tiny (one row
-    // per group / per group×quantile×2) but feed several consumers each —
-    // cache them so their multi-stage subtrees run once, not per consumer.
-    // Session-lifetime caches, same contract as VectorOps.lshCandidatePairs
-    // (Verify/Bench clearCache between queries).
-    val stats = base.groupBy(g.map(col): _*)
-      .agg(min("__v").as("__min"), max("__v").as("__max"),
-        count(lit(1)).as("__n"))
-      .cache()
-
-    // histogram: fixed-width buckets over [min, max]; a constant group
-    // (width 0) collapses to bucket 0; max lands in the last bucket
-    val bucketed = base.join(broadcast(stats), g)
-      .withColumn("__b", when(col("__max") === col("__min"), lit(0L))
-        .otherwise(least(
-          floor((col("__v") - col("__min")) * nBuckets /
-            (col("__max") - col("__min"))).cast("long"),
-          lit(nBuckets - 1L))))
-    val hist = bucketed.groupBy(g.map(col) :+ col("__b"): _*)
-      .agg(count(lit(1)).as("__bn"))
-    val cum = hist
-      .withColumn("__hi", sum("__bn")
-        .over(Window.partitionBy(g.map(col): _*).orderBy("__b")))
-      .withColumn("__lo", col("__hi") - col("__bn"))
-
-    // target ranks: for each group × quantile the two flanking 0-based
-    // positions floor/ceil((n−1)·q) — a handful of rows per group
-    val qStructs = quantiles.map { case (name, q) =>
-      struct(lit(name).as("__qn"), lit(q).as("__q"))
-    }
-    val needs = stats
-      .select(g.map(col) :+ col("__n") :+ explode(array(qStructs: _*)).as("__s"): _*)
-      .select(g.map(col) :+ col("__n") :+ col("__s.__qn").as("__qn") :+
-        col("__s.__q").as("__q"): _*)
-      .withColumn("__pos", (col("__n") - 1).cast("double") * col("__q"))
-      .select(g.map(col) :+ col("__qn") :+ col("__pos") :+
-        explode(array(floor(col("__pos")).cast("long"),
-          ceil(col("__pos")).cast("long"))).as("__k"): _*)
-      .dropDuplicates(g ++ Seq("__qn", "__k"))
-
-    // locate each rank's bucket (cum is ≤ groups×nBuckets rows — slim)
-    val located = needs.join(cum, g)
-      .filter(col("__k") >= col("__lo") && col("__k") < col("__hi"))
-      .select(g.map(col) :+ col("__qn") :+ col("__pos") :+ col("__k") :+
-        col("__b") :+ (col("__k") - col("__lo") + 1).as("__rnt"): _*)
-      .cache()
-
-    // rank ONLY the boundary buckets' rows; ties among equal values make
-    // the row_number choice irrelevant (same value at every tied rank)
-    val needed = located.select(g.map(col) :+ col("__b"): _*).distinct()
-    val ranked = bucketed.join(broadcast(needed), g :+ "__b")
-      .withColumn("__rn", row_number()
-        .over(Window.partitionBy((g :+ "__b").map(col): _*).orderBy("__v")))
-    val loc2 = located.select(
-      g.map(c => col(c).as(s"__l_$c")) :+ col("__qn") :+ col("__pos") :+
-        col("__k") :+ col("__b").as("__lb") :+ col("__rnt"): _*)
-    val atK = ranked.join(broadcast(loc2),
-        g.map(c => col(c) === col(s"__l_$c")).reduce(_ && _) &&
-          col("__b") === col("__lb") && col("__rn") === col("__rnt"))
-      .select((g.map(col) :+ col("__qn") :+ col("__pos") :+ col("__k") :+
-        col("__v").as("__kv")): _*)
-
-    // Spark Percentile interpolation, bit-for-bit
-    val perQ = atK.groupBy((g :+ "__qn").map(col): _*)
-      .agg(first("__pos").as("__p"),
-        min(when(col("__k") === floor(col("__pos")).cast("long"), col("__kv")))
-          .as("__lower"),
-        min(when(col("__k") === ceil(col("__pos")).cast("long"), col("__kv")))
-          .as("__upper"))
-      .withColumn("__val",
-        when(floor(col("__p")) === ceil(col("__p")), col("__lower"))
-          .otherwise((ceil(col("__p")) - col("__p")) * col("__lower") +
-            (col("__p") - floor(col("__p"))) * col("__upper")))
-
-    val pivoted = perQ.groupBy(g.map(col): _*)
-      .pivot("__qn", quantiles.map(_._1)).agg(first("__val"))
-    val out = countCol match {
-      case Some(n) =>
-        pivoted.join(stats.select(g.map(col) :+ col("__n").as(n): _*), g)
-      case None => pivoted
-    }
-    if (groupCols.isEmpty) out.drop("__g") else out
-  }
-
-  /** Exact interpolated quantiles in TWO exchanges — the right shape when
-    * the value domain's DISTINCT cardinality is bounded (integer cents,
-    * ratings, token counts: the overwhelmingly common quantile targets in
-    * an analytics pipeline).
-    *
-    *   1. `groupBy(group, value).count()` — the value histogram (one
-    *      map-side-combinable exchange; state = one counter per distinct
-    *      value actually present);
-    *   2. ONE window pass per group over the distinct-value grain gives
-    *      each value its cumulative rank range `[lo, hi)` and the group
-    *      total `n` (second exchange);
-    *   3. every requested quantile's flanking values fall out of a single
-    *      conditional min-aggregate over the same grain — the group
-    *      partitioning from step 2 is reused, so NO further exchange —
-    *      and interpolation is a projection.
-    *
-    * Versus [[exactQuantiles]] (4-pass histogram partition + boundary
-    * refinement, 15–18 exchanges when composed into a query): same
-    * bit-for-bit `Percentile` arithmetic, same oracle hashes, ~2
-    * exchanges. The trade: step 2 sorts each group's DISTINCT values in
-    * one task, so this path requires bounded distinct cardinality per
-    * group (cents over a price book: ~10^5–10^7 — fine at any row
-    * count); for genuinely unbounded continuous domains keep
-    * [[exactQuantiles]], whose state is capped by `nBuckets` regardless
-    * of cardinality.
-    *
-    * Parameters as [[exactQuantiles]] (no `nBuckets`: the histogram is
-    * at value grain). */
   def valueHistogramQuantiles(df: DataFrame, groupCols: Seq[String],
                               valueCol: String,
                               quantiles: Seq[(String, Double)],
@@ -208,8 +83,7 @@ object Quantiles {
     } :+ first("__n").as("__nt")
     val perG = cum.groupBy(g.map(col): _*).agg(aggs.head, aggs.tail: _*)
 
-    // Spark Percentile interpolation, bit-for-bit (same arithmetic as
-    // exactQuantiles — swapping the two paths never moves an oracle hash)
+    // Spark Percentile interpolation, bit-for-bit
     val qCols = quantiles.map { case (name, q) =>
       val p = (col("__nt") - 1).cast("double") * lit(q)
       when(floor(p) === ceil(p), col(s"__l_$name"))

@@ -26,8 +26,8 @@ object QEtl {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
-  /** Row count memoized per (dir, table) per JVM. Used by scale gates
-    * (q75) whose zero-column count scan — cheap but not free — would
+  /** Row count memoized per (dir, table) per JVM. Used to size q181's
+    * bloom, whose zero-column count scan — cheap but not free — would
     * otherwise re-run on every invocation in a sweep (ADVICE r13). Safe
     * to memoize: the driver corpora are immutable for a JVM's lifetime
     * (testdata is read-only; scratch corpora are regenerated only
@@ -340,7 +340,7 @@ object QEtl {
           .select("l_orderkey", "l_linenumber", "l_quantity"),
         t(s, dir, "orders").filter(col("o_orderstatus") === "F")
           .select(col("o_orderkey").as("l_orderkey")),
-        // est sized like q75's: corpus row count × the window/domain ratio
+        // est sized from the corpus row count × the window/domain ratio
         // a stats-backed planner would read (1 ship-month of ~84 × ~4
         // lines/order ≈ 1/300) — the bloom LITERAL ships with every task,
         // so a fixed big est would tax small corpora with MB-scale task
@@ -931,72 +931,14 @@ object QEtl {
     // spark.sql) — Catalyst decorrelates it into a left-semi hash join on
     // l_orderkey, so the "subquery per row" never happens at any scale;
     // the date range prunes the orders scan.
-    //
-    // The registry's one honest BIG-BIG semi-join (150M orders ⋈ 600M
-    // lineitem at sf100, the sf100 sweep's worst honest ratio — VERDICT
-    // r12 #2): Spark's own InjectRuntimeFilter stays off here because the
-    // stats-less creation side (a filtered 2.3 GB orders scan) never
-    // passes the 10 MB creation threshold, so the probe side shuffled
-    // ~45% of lineitem (270M one-column rows) into the SMJ. This builds
-    // the SAME runtime filter by hand with Spark's own bloom expressions
-    // (functions/Bloom): aggregate the date-window order keys into ONE
-    // bounded bloom (count-sized: KBs at sf0.1, ~20 MB at sf100, under
-    // graft.Session's 64 MB maxNumBits clamp), ship it as a plan literal
-    // — the mechanics production runtime filters use — and pre-filter
-    // the lineitem scan to ~7% of its rows before the exchange.
-    // Exactness is unconditional: blooms have no false negatives, and a
-    // false positive just fails the semi join's key equality like any
-    // other non-window row. The two actions (count + single-row bloom
-    // collect) are the sanctioned bounded plan-literal pattern (q122).
     Qry("q75_exists_orders",
       (s, dir) => {
         t(s, dir, "orders").createOrReplaceTempView("g_orders")
-        // probe-side gate, mirroring Spark's own runtime-filter
-        // applicationSideScanSizeThreshold (10 GB): below ~200M lineitem
-        // rows the saved exchange doesn't buy back the bloom build, so
-        // small corpora keep the plain semi-join plan (measured: bloom at
-        // sf10 = +0.7 s, at sf100 = −6.3 s). The row count is a
-        // zero-column scan (no column IO, one job — not literally free),
-        // memoized per (dir, table) per JVM so sweeps pay it once; the
-        // threshold is a conf so PlanBudgetSpec can force the scale
-        // variant at test size (the audit corpus could otherwise never
-        // render it — VERDICT r13 "what's wrong" #2). It parses before
-        // the count runs, so a bad value fails naming its key.
-        val minProbeRows =
-          graft.Session.intKnob(s.conf, "spark.graft.q75.minProbeRows", 200000000, 0)
-        val big = memoCount(s, dir, "lineitem") >= minProbeRows
-        val pruned = if (!big)
-          t(s, dir, "lineitem")
-        else {
-          val winKeys = t(s, dir, "orders")
-            .filter("o_orderdate >= DATE '1995-01-01' AND o_orderdate < DATE '1995-07-01'")
-            .select("o_orderkey")
-          // size the bloom WITHOUT scanning the creation side twice: the
-          // unfiltered row count is a memoized zero-column scan, and the
-          // window/domain
-          // ratio (6 months of the corpus's ~7-year o_orderdate span ≈
-          // 8%) is what a stats-backed planner reads off footer min/max —
-          // est lands within ~15% of the true window key count at every
-          // sf, keeping the bloom's hash count near optimal (fpp is a
-          // perf knob only; correctness never depends on it)
-          val est = math.max((memoCount(s, dir, "orders") * 0.10).toLong, 1024L)
-          val bloomRow = winKeys
-            .agg(graft.functions.Bloom.bloomAgg(col("o_orderkey"), est).as("b")).head()
-          if (bloomRow.isNullAt(0)) t(s, dir, "lineitem").filter(lit(false))
-          else t(s, dir, "lineitem").filter(graft.functions.Bloom.mightContain(
-            lit(bloomRow.getAs[Array[Byte]]("b")), col("l_orderkey")))
-        }
-        pruned.createOrReplaceTempView("g_lineitem")
-        // SHUFFLE_HASH on the bloom-pruned side (big corpora only: the
-        // hint would pin small corpora out of AQE's broadcast
-        // conversion): post-prune it hashes ~10 MB/partition, and the
-        // semi join needs no sort order — SMJ would sort BOTH sides just
-        // to discard the order at the agg
-        val hint = if (big) "/*+ SHUFFLE_HASH(g_lineitem) */ " else ""
-        s.sql(s"""SELECT o_orderpriority, count(*) AS n_orders
+        t(s, dir, "lineitem").createOrReplaceTempView("g_lineitem")
+        s.sql("""SELECT o_orderpriority, count(*) AS n_orders
           FROM g_orders
           WHERE o_orderdate >= DATE '1995-01-01' AND o_orderdate < DATE '1995-07-01'
-            AND EXISTS (SELECT ${hint}1 FROM g_lineitem
+            AND EXISTS (SELECT 1 FROM g_lineitem
                         WHERE l_orderkey = o_orderkey AND l_discount > 0.05)
           GROUP BY o_orderpriority""")
       },

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.multimodal.Multimodal
 import graft.multimodal.Multimodal.Media
 
@@ -17,28 +16,6 @@ class MultimodalSpec extends SparkSpec {
     Media(3L, "video", Array.fill(300)(7.toByte))
   ).toDS()
 
-  test("decodeMeta: typed schema, deterministic dims, byte counts") {
-    val out = Multimodal.decodeMeta(media)
-    assert(out.columns.toSeq ===
-      Seq("doc_id", "media_type", "n_bytes", "width", "height", "n_channels"))
-    val r = out.collect().sortBy(_.doc_id)
-    assert(r.map(_.n_bytes).toSeq === Seq(17L, 19L, 300L))
-    assert(r.forall(m => m.width >= 1 && m.width <= 1024))
-    assert(r.forall(m => Seq(1, 3, 4).contains(m.n_channels)))
-    // determinism: same payload -> same fake dims
-    assert(Multimodal.decodeMeta(media).collect().sortBy(_.doc_id).toSeq === r.toSeq)
-  }
-
-  test("resize clamps the longer side while keeping aspect scale <= 1") {
-    val full = Multimodal.decodeMeta(media).collect().map(m => m.doc_id -> m).toMap
-    Multimodal.resize(media, 256).collect().foreach { m =>
-      assert(math.max(m.width, m.height) <= 256)
-      val orig = full(m.doc_id)
-      if (math.max(orig.width, orig.height) <= 256)
-        assert((m.width, m.height) === (orig.width, orig.height))
-    }
-  }
-
   private def encodeImage(w: Int, h: Int, imgType: Int, fmt: String): Array[Byte] = {
     val img = new java.awt.image.BufferedImage(w, h, imgType)
     for (x <- 0 until w; y <- 0 until h)
@@ -48,57 +25,26 @@ class MultimodalSpec extends SparkSpec {
     bos.toByteArray
   }
 
-  test("REAL image branch: generated PNG/BMP payloads decode to exact dims and channels") {
-    import java.awt.image.BufferedImage._
-    val real = Seq(
-      Media(10L, "image", encodeImage(320, 200, TYPE_INT_RGB, "png")),
-      Media(11L, "image", encodeImage(64, 48, TYPE_3BYTE_BGR, "bmp")),
-      Media(12L, "image", encodeImage(20, 30, TYPE_INT_ARGB, "png"))
+  test("imageDct decodes an 8x8 PNG to the same pHash as its BMP twin") {
+    import java.awt.image.BufferedImage
+    val px = Multimodal.pixelBytes(7L)
+    val gray = new BufferedImage(8, 8, BufferedImage.TYPE_INT_RGB)
+    for (k <- 0 until 64) gray.setRGB(k % 8, k / 8, px(k) * 0x010101)
+    val png = new java.io.ByteArrayOutputStream()
+    assert(javax.imageio.ImageIO.write(gray, "png", png), "no png writer")
+    val ds = Seq(
+      Media(10L, "image", png.toByteArray),
+      Media(11L, "image", Multimodal.encodeBmp8x8(7L)),
+      Media(12L, "image", encodeImage(320, 200, BufferedImage.TYPE_INT_RGB, "png")),
+      Media(13L, "image", "not an image".getBytes)
     ).toDS()
-    val metas = Multimodal.decodeMeta(real).collect().map(m => m.doc_id -> m).toMap
-    assert((metas(10L).width, metas(10L).height, metas(10L).n_channels) === ((320, 200, 3)))
-    assert((metas(11L).width, metas(11L).height, metas(11L).n_channels) === ((64, 48, 3)))
-    assert((metas(12L).width, metas(12L).height, metas(12L).n_channels) === ((20, 30, 4)))
-
-    // resize really resamples: the longer edge lands exactly on maxSide,
-    // aspect preserved, alpha preserved; already-small images untouched
-    val rs = Multimodal.resize(real, 100).collect().map(m => m.doc_id -> m).toMap
-    assert((rs(10L).width, rs(10L).height) === ((100, 62)))
-    assert(rs(10L).n_bytes > 0 && rs(10L).n_bytes < metas(10L).n_bytes,
-      "re-encoded downscale should be smaller than the original")
-    assert((rs(11L).width, rs(11L).height, rs(11L).n_bytes) === ((64, 48, metas(11L).n_bytes)))
-    assert((rs(12L).width, rs(12L).height, rs(12L).n_channels) === ((20, 30, 4)))
-  }
-
-  private def encodeWav(sampleRate: Float, channels: Int, nFrames: Int): Array[Byte] = {
-    import javax.sound.sampled._
-    val fmt = new AudioFormat(sampleRate, 16, channels, true, false)
-    val pcm = new Array[Byte](nFrames * fmt.getFrameSize)
-    for (i <- pcm.indices) pcm(i) = ((i * 37 + 11) & 0xff).toByte
-    val in = new AudioInputStream(new java.io.ByteArrayInputStream(pcm), fmt, nFrames.toLong)
-    val bos = new java.io.ByteArrayOutputStream()
-    AudioSystem.write(in, AudioFileFormat.Type.WAVE, bos)
-    bos.toByteArray
-  }
-
-  test("REAL audio branch: generated WAV payloads decode to exact format fields") {
-    val real = Seq(
-      Media(20L, "audio", encodeWav(16000f, 1, 16000)), // 1 s mono 16 kHz
-      Media(21L, "audio", encodeWav(44100f, 2, 2205)),  // 50 ms stereo CD rate
-      Media(22L, "audio", "not really audio".getBytes)  // falls to the stub
-    ).toDS()
-    val m = Multimodal.decodeAudioMeta(real).collect().map(a => a.doc_id -> a).toMap
-    assert(m(20L).real_decode)
-    assert((m(20L).sample_rate, m(20L).n_channels, m(20L).bits_per_sample,
-      m(20L).n_frames, m(20L).duration_ms) === ((16000, 1, 16, 16000L, 1000L)))
-    assert(m(21L).real_decode)
-    assert((m(21L).sample_rate, m(21L).n_channels, m(21L).n_frames,
-      m(21L).duration_ms) === ((44100, 2, 2205L, 50L)))
-    assert(!m(22L).real_decode) // stub fallback is flagged, not silent
-    assert(m(22L).sample_rate >= 8000 && m(22L).n_channels >= 1)
-    // non-audio media types never hit the audio decoder
-    val img = Multimodal.decodeAudioMeta(media).collect()
-    assert(img.forall(!_.real_decode))
+    val d = Multimodal.imageDct(ds).collect().map(r => r.doc_id -> r).toMap
+    assert(d(10L).real_decode && d(11L).real_decode)
+    assert((d(10L).phash, d(10L).dc) === ((d(11L).phash, d(11L).dc)))
+    // cosQ(0)(x) = 2^15 for every x, so DC = Σ pixels · 2^30
+    assert(d(10L).dc === px.map(_.toLong).sum << 30)
+    // decodable but not 8×8, and undecodable: the labeled stub
+    assert(!d(12L).real_decode && !d(13L).real_decode)
   }
 
   test("REAL audio features: hand-built PCM samples yield hand-computed features") {
@@ -158,19 +104,21 @@ class MultimodalSpec extends SparkSpec {
   }
 
   /** A structurally valid MP4: ftyp + moov(mvhd 600ts/3000dur,
-    * trak(tkhd 640×360 16.16, mdia(minf(stbl(stts 100+25 samples))))). */
-  private def buildMp4(): Array[Byte] = {
+    * trak(tkhd 640×360 16.16, mdia(minf(stbl(stts 100+25 samples))))).
+    * A zero `timescale` or `width` makes the header one the parser must
+    * reject. */
+  private def buildMp4(timescale: Long = 600, width: Long = 640): Array[Byte] = {
     val ftyp = mp4box("ftyp", "isom".getBytes, be32b(512), "isom".getBytes)
     val mvhd = mp4box("mvhd", new Array[Byte](4), // v0 + flags
       be32b(0), be32b(0),      // ctime, mtime
-      be32b(600), be32b(3000), // timescale, duration -> 5000 ms
+      be32b(timescale), be32b(3000), // timescale, duration
       new Array[Byte](80))     // rate/volume/matrix/predefines/next-track
     val tkhd = mp4box("tkhd", new Array[Byte](4),
       be32b(0), be32b(0), be32b(1), be32b(0), be32b(3000),
       new Array[Byte](8),      // reserved
       new Array[Byte](8),      // layer/alt-group/volume/reserved
       new Array[Byte](36),     // identity matrix slots (content unread)
-      be32b(640L << 16), be32b(360L << 16))
+      be32b(width << 16), be32b(360L << 16))
     val stts = mp4box("stts", new Array[Byte](4), be32b(2),
       be32b(100), be32b(40), be32b(25), be32b(40)) // 125 frames total
     val trak = mp4box("trak", tkhd,
@@ -179,50 +127,51 @@ class MultimodalSpec extends SparkSpec {
   }
 
   /** A structurally valid AVI: RIFF(AVI ) > LIST(hdrl) > avih with
-    * 40000 µs/frame, 250 frames, 320×240. */
-  private def buildAvi(): Array[Byte] = {
+    * 40000 µs/frame, `frames` frames (250 by default), 320×240,
+    * zero-padded to `padTo` bytes. */
+  private def buildAvi(frames: Long = 250, padTo: Int = 0): Array[Byte] = {
     val avih = "avih".getBytes("ISO-8859-1") ++ le32b(56) ++
       le32b(40000) ++ le32b(0) ++ le32b(0) ++ le32b(0) ++
-      le32b(250) ++ le32b(0) ++ le32b(1) ++ le32b(0) ++
+      le32b(frames) ++ le32b(0) ++ le32b(1) ++ le32b(0) ++
       le32b(320) ++ le32b(240) ++ new Array[Byte](16)
     val hdrl = "LIST".getBytes("ISO-8859-1") ++ le32b(4 + avih.length) ++
       "hdrl".getBytes("ISO-8859-1") ++ avih
-    "RIFF".getBytes("ISO-8859-1") ++ le32b(4 + hdrl.length) ++
+    val riff = "RIFF".getBytes("ISO-8859-1") ++ le32b(4 + hdrl.length) ++
       "AVI ".getBytes("ISO-8859-1") ++ hdrl
+    riff ++ new Array[Byte](math.max(0, padTo - riff.length))
   }
 
-  test("REAL video branch: MP4 box walk yields exact dims/duration/frames") {
-    val vids = Seq(
-      Media(30L, "video", buildMp4()),
-      Media(31L, "video", buildAvi()),
-      Media(32L, "video", Array.fill(300)(7.toByte)),    // no container: stub
-      Media(33L, "image", buildMp4())                    // wrong media_type: stub
-    ).toDS()
-    val m = Multimodal.decodeVideoMeta(vids).collect().map(v => v.doc_id -> v).toMap
-    assert(m(30L).real_decode)
-    assert((m(30L).container, m(30L).width, m(30L).height,
-      m(30L).duration_ms, m(30L).n_frames) === (("mp4", 640, 360, 5000L, 125L)))
-    assert(m(31L).real_decode)
-    assert((m(31L).container, m(31L).width, m(31L).height,
-      m(31L).duration_ms, m(31L).n_frames) === (("avi", 320, 240, 10000L, 250L)))
-    assert(!m(32L).real_decode && m(32L).container === "unknown")
-    assert(m(32L).n_frames === 300L / 64) // same heuristic as sampleFrames
-    assert(!m(33L).real_decode) // media_type gates the parser
-    // determinism of the stub path
-    val again = Multimodal.decodeVideoMeta(vids).collect().map(v => v.doc_id -> v).toMap
-    assert(again(32L) === m(32L))
+  /** Per doc: (frames emitted, every frame flagged `real_frame_count`). */
+  private def framesOf(vids: Seq[Media]): Map[Long, (Int, Boolean)] =
+    Multimodal.sampleFrames(vids.toDS(), everyNth = 1).collect().groupBy(_.doc_id)
+      .map { case (id, fs) => id -> ((fs.length, fs.forall(_.real_frame_count))) }
+
+  test("REAL video branch: MP4/AVI headers count frames, bad dims/duration rejected") {
+    val m = framesOf(Seq(
+      Media(30L, "video", buildMp4()),                 // stts: 100+25 frames
+      Media(31L, "video", buildAvi(frames = 50)),      // avih: 50 frames
+      Media(32L, "video", buildMp4(width = 0)),        // no visual track
+      Media(33L, "video", buildMp4(timescale = 0)),    // no usable duration
+      Media(34L, "image", buildMp4())                  // wrong media_type
+    ))
+    assert(m(30L) === ((125, true)))
+    assert(m(31L) === ((50, true)))
+    // a rejected header falls to the payload/64 stub count, flagged
+    assert(m(32L) === ((buildMp4().length / 64, false)))
+    assert(m(33L) === ((buildMp4().length / 64, false)))
+    assert(!m.contains(34L)) // media_type gates the sampler
   }
 
   test("video parser rejects torn/corrupt containers instead of misreading") {
     val mp4 = buildMp4()
-    val torn = Seq(
+    val m = framesOf(Seq(
       Media(40L, "video", mp4.take(20)),            // truncated mid-box
       Media(41L, "video", mp4.take(mp4.length - 4)),// truncated tail box
       Media(42L, "video", "RIFF1234AVI ".getBytes), // AVI magic, no avih
       Media(43L, "video", Array[Byte]())            // empty payload
-    ).toDS()
-    val m = Multimodal.decodeVideoMeta(torn).collect()
-    assert(m.forall(!_.real_decode), "corrupt payloads must fall to the labeled stub")
+    ))
+    assert(m.keySet === Set(40L, 41L, 42L, 43L))
+    assert(m.values.forall(!_._2), "corrupt payloads must fall to the labeled stub count")
   }
 
   test("sampleFrames explodes only video payloads with stride") {
@@ -251,8 +200,8 @@ class MultimodalSpec extends SparkSpec {
 
   test("hostile headers cannot overflow duration or explode frame output") {
     // avih claiming u32-max µs/frame × u32-max frames would overflow
-    // usPerFrame·frames; the parser must reject it (labeled stub), not
-    // emit garbage flagged real_decode
+    // usPerFrame·frames; the parser must reject it (labeled stub count),
+    // not count frames flagged real_frame_count
     val hostileAvih = "avih".getBytes("ISO-8859-1") ++ le32b(56) ++
       le32b(0xFFFFFFFFL) ++ le32b(0) ++ le32b(0) ++ le32b(0) ++
       le32b(0xFFFFFFFFL) ++ le32b(0) ++ le32b(1) ++ le32b(0) ++
@@ -261,15 +210,26 @@ class MultimodalSpec extends SparkSpec {
       "hdrl".getBytes("ISO-8859-1") ++ hostileAvih
     val hostile = "RIFF".getBytes("ISO-8859-1") ++ le32b(4 + hdrl.length) ++
       "AVI ".getBytes("ISO-8859-1") ++ hdrl
-    val m = Multimodal.decodeVideoMeta(Seq(Media(60L, "video", hostile)).toDS())
-      .collect().head
-    assert(!m.real_decode, "overflowing header must fall to the labeled stub")
+    assert(framesOf(Seq(Media(60L, "video", hostile)))(60L) === ((hostile.length / 64, false)),
+      "overflowing header must fall to the labeled stub count")
     // a parseable container claiming more frames than payload bytes is
     // clamped — frame output stays bounded by payload size
     val fr = Multimodal.sampleFrames(Seq(Media(61L, "video", buildAvi())).toDS(), 1)
       .collect()
     assert(fr.length === buildAvi().length) // 250 claimed, clamped to bytes
     assert(fr.forall(_.real_frame_count))
+  }
+
+  test("sampleFrames slices stay 64 bytes past frame index 2^25") {
+    // i * 64 overflows an Int at i = 2^25: a 34 MB AVI claiming 34M
+    // frames, sampled every 2^20th frame, reaches i = 33,554,432
+    val avi = buildAvi(frames = 34000000L, padTo = 34000000)
+    val fr = Multimodal.sampleFrames(Seq(Media(70L, "video", avi)).toDS(), 1 << 20)
+      .collect()
+    assert(fr.map(_.frame_idx).max === 1 << 25)
+    assert(fr.length === 33 && fr.forall(_.real_frame_count))
+    assert(fr.forall(_.frame_payload.length == 64),
+      fr.filter(_.frame_payload.length != 64).map(_.frame_idx).mkString(","))
   }
 
   test("all multimodal stages are narrow: no exchange in the plan") {

@@ -507,47 +507,24 @@ class PlanBudgetSpec extends SparkSpec {
     val violations = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       val (nS, nB, pS, pB, _) = Bucketing.cutAwareCounts(fn(spark, sfDir))
       val (cS, cB, cPS, cPB) = rec(name)
-      // shuffle ceilings are EXACT (hash/range exchange counts are
-      // deterministic at fixed data + this spec's pinned config — a +1
-      // slack was proven to absorb a whole gratuitous repartition, r12
-      // mutation test); broadcasts keep +1 for static size-estimate
-      // flips on boundary-sized inputs
-      (if (nS > cS) Seq(s"$name shuffles $nS > $cS") else Nil) ++
+      // shuffle ceilings are EXACT both ways (hash/range exchange counts
+      // are deterministic at fixed data + this spec's pinned config — a
+      // +1 slack was proven to absorb a whole gratuitous repartition, r12
+      // mutation test; a recorded count above the plan is slack that
+      // would hide the same regression, as q137's 12-vs-9 row did);
+      // broadcasts keep +1 for static size-estimate flips on
+      // boundary-sized inputs
+      def exact(what: String, n: Int, c: Int): Seq[String] =
+        if (n > c) Seq(s"$name $what $n > $c")
+        else if (n < c) Seq(s"$name $what $n < recorded $c: stale row, regenerate")
+        else Nil
+      exact("shuffles", nS, cS) ++
         (if (nB > cB + 1) Seq(s"$name broadcasts $nB > $cB+1") else Nil) ++
-        (if (pS > cPS) Seq(s"$name pre-cut shuffles $pS > $cPS") else Nil) ++
+        exact("pre-cut shuffles", pS, cPS) ++
         (if (pB > cPB + 1) Seq(s"$name pre-cut broadcasts $pB > $cPB+1") else Nil)
     }
     assert(violations.isEmpty,
-      "plan-shape regressions (intentional? regenerate plan_ceilings.tsv " +
-        s"via PlanCeilingGen):\n  ${violations.mkString("\n  ")}")
-  }
-
-  test("q75 scale variant: forced gate renders the bloom-pruned shuffled-hash semi join") {
-    // The audit corpus can never trip the 200M-row probe gate, so without
-    // this forced-gate case the sf100-only plan variant would rot unseen
-    // between scale sweeps (VERDICT r13 "what's wrong" #2). Gate forced
-    // via conf; the shape assertions are the variant's two load-bearing
-    // choices: the bloom probe pruning the lineitem scan as a plan
-    // literal, and SHUFFLE_HASH replacing the sort-merge semi join.
-    val ungated = sortedRows(SparkEntry.queries("q75_exists_orders")(spark, sfDir))
-    spark.conf.set("spark.graft.q75.minProbeRows", "0")
-    try {
-      val df = SparkEntry.queries("q75_exists_orders")(spark, sfDir)
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("might_contain"), s"bloom probe missing from forced-gate plan:\n$plan")
-      assert(plan.contains("ShuffledHashJoin") && plan.contains("LeftSemi"),
-        s"expected shuffled-hash left-semi join in forced-gate plan:\n$plan")
-      // same rows: the bloom prune + join strategy are pure plan choices
-      assert(sortedRows(df) === ungated)
-    } finally spark.conf.unset("spark.graft.q75.minProbeRows")
-  }
-
-  test("q75 gate: a garbage minProbeRows fails naming its key") {
-    spark.conf.set("spark.graft.q75.minProbeRows", "abc")
-    try {
-      val e = intercept[IllegalArgumentException](
-        SparkEntry.queries("q75_exists_orders")(spark, sfDir))
-      assert(e.getMessage.contains("spark.graft.q75.minProbeRows"), e.getMessage)
-    } finally spark.conf.unset("spark.graft.q75.minProbeRows")
+      "plan shapes differ from plan_ceilings.tsv (intentional? regenerate " +
+        s"it via PlanCeilingGen):\n  ${violations.mkString("\n  ")}")
   }
 }

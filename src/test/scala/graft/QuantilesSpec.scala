@@ -3,60 +3,16 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.ops.Quantiles
 
-/** [[graft.ops.Quantiles.exactQuantiles]] must reproduce Spark's exact
-  * `percentile` BIT-FOR-BIT (same interpolation arithmetic) while holding
-  * only histogram counters per group — checked against the built-in on
-  * adversarial shapes: ties, constant groups, single-row groups, skewed
-  * mass, negative values, and tiny bucket counts that force multi-rank
-  * buckets and cross-bucket interpolation.
+/** [[graft.ops.Quantiles.valueHistogramQuantiles]] must reproduce Spark's
+  * exact `percentile` BIT-FOR-BIT (same interpolation arithmetic) while
+  * holding one counter per distinct value — checked against the built-in
+  * on adversarial shapes: ties, constant groups, single-row groups, skewed
+  * mass, negative values, boundary quantiles and nulls.
   */
 class QuantilesSpec extends SparkSpec {
   import spark.implicits._
 
   private val qs = Seq("p25" -> 0.25, "p50" -> 0.5, "p95" -> 0.95)
-
-  private def check(data: Seq[(String, Long)], nBuckets: Int): Unit = {
-    val df = data.toDF("grp", "v").repartition(4)
-    val got = Quantiles.exactQuantiles(df, Seq("grp"), "v", qs, nBuckets)
-      .collect().map(r => r.getAs[String]("grp") ->
-        (r.getAs[Double]("p25"), r.getAs[Double]("p50"), r.getAs[Double]("p95"))).toMap
-    val want = df.groupBy("grp")
-      .agg(expr("percentile(v, 0.25)").as("p25"),
-        expr("percentile(v, 0.5)").as("p50"),
-        expr("percentile(v, 0.95)").as("p95"))
-      .collect().map(r => r.getAs[String]("grp") ->
-        (r.getAs[Double]("p25"), r.getAs[Double]("p50"), r.getAs[Double]("p95"))).toMap
-    assert(got.keySet === want.keySet)
-    want.foreach { case (k, w) =>
-      assert(got(k) === w, s"group $k (nBuckets=$nBuckets)")
-    }
-  }
-
-  test("matches built-in percentile exactly across adversarial shapes") {
-    val rnd = new scala.util.Random(42)
-    val data =
-      (1 to 500).map(_ => ("uniform", rnd.nextLong() % 100000)) ++
-      (1 to 300).map(_ => ("ties", (rnd.nextInt(5) * 10).toLong)) ++
-      (1 to 50).map(_ => ("constant", 7L)) ++
-      Seq(("single", 42L)) ++
-      (1 to 400).map(i => ("skew", if (i < 390) 1L else i * 1000L)) ++
-      (1 to 200).map(_ => ("negative", rnd.nextLong() % 1000 - 5000))
-    check(data, nBuckets = 4096)
-    // tiny histogram: many ranks share buckets, interpolation spans buckets
-    check(data, nBuckets = 4)
-  }
-
-  test("global (no groupCols) quantiles match the single-group built-in") {
-    val df = (1 to 1000).map(i => (i * 37 % 501).toLong).toDF("v").repartition(8)
-    val got = Quantiles.exactQuantiles(df, Nil, "v", Seq("p01" -> 0.01, "p99" -> 0.99))
-      .collect().head
-    val want = df.agg(expr("percentile(v, 0.01)"), expr("percentile(v, 0.99)"))
-      .collect().head
-    assert(got.getAs[Double]("p01") === want.getDouble(0))
-    assert(got.getAs[Double]("p99") === want.getDouble(1))
-  }
-
-  // ---- valueHistogramQuantiles: the two-exchange path ----
 
   private def checkVH(data: Seq[(String, Long)]): Unit = {
     val df = data.toDF("grp", "v").repartition(4)
@@ -107,14 +63,12 @@ class QuantilesSpec extends SparkSpec {
     assert(row.getAs[Double]("p99") === want.getDouble(1))
   }
 
-  // ---- r8 adversarial additions (VERDICT r7 #6): path-equivalence and
-  // the documented cardinality boundary between the two paths ----
-
   test("both paths are bit-for-bit equal on shared domains (property sweep)") {
-    // property-style sweep: randomized group layouts × value distributions,
-    // including the shapes the doc calls out (constant groups, a
-    // single-distinct-value domain, heavy ties, mixed-sign continuous) and
-    // boundary quantiles q=0 / q=1 / an irrational-position q=1/3
+    // the two paths: valueHistogramQuantiles and Spark's own `percentile`.
+    // Property-style sweep: randomized group layouts × value
+    // distributions, including constant groups, a single-distinct-value
+    // domain, heavy ties and mixed-sign values, and boundary quantiles
+    // q=0 / q=1 / an irrational-position q=1/3
     val qs2 = Seq("q0" -> 0.0, "q13" -> (1.0 / 3.0), "q50" -> 0.5, "q1" -> 1.0)
     val gens: Seq[(String, scala.util.Random => Long)] = Seq(
       "constant" -> (_ => 13L),
@@ -136,50 +90,11 @@ class QuantilesSpec extends SparkSpec {
             // compare raw bits: "bit-for-bit" means exactly that
             java.lang.Double.doubleToRawLongBits(r.getAs[Double](name))
           }).toMap
-      val a = toMap(Quantiles.exactQuantiles(df, Seq("grp"), "v", qs2))
-      val b = toMap(Quantiles.valueHistogramQuantiles(df, Seq("grp"), "v", qs2))
-      assert(a === b, s"paths diverged (seed=$seed)")
-      // tiny nBuckets forces cross-bucket interpolation in the partition
-      // path — equality must survive the worst histogram resolution
-      val c = toMap(Quantiles.exactQuantiles(df, Seq("grp"), "v", qs2, nBuckets = 2))
-      assert(a === c, s"nBuckets=2 diverged (seed=$seed)")
+      val pct = qs2.map { case (name, q) => expr(s"percentile(v, ${q}D)").as(name) }
+      val got = toMap(Quantiles.valueHistogramQuantiles(df, Seq("grp"), "v", qs2))
+      val want = toMap(df.groupBy("grp").agg(pct.head, pct.tail: _*))
+      assert(got === want, s"paths diverged (seed=$seed)")
     }
-  }
-
-  test("10^6-distinct continuous domain: the bounded-state path is the right route") {
-    // the valueHistogramQuantiles doc requires bounded distinct
-    // cardinality per group (its step-2 window sorts each group's
-    // DISTINCT values in one task); a genuinely continuous domain routes
-    // to exactQuantiles, whose state is nBuckets counters regardless of
-    // cardinality. Drive exactly that: 10^6 all-distinct doubles in ONE
-    // group — the adversarial case for any value-grain method — and
-    // check exact agreement with the built-in.
-    val df = spark.range(1000000)
-      .select((col("id").cast("double") * 1.000001 + 0.125).as("v"))
-      .repartition(16)
-    val got = Quantiles.exactQuantiles(df, Nil, "v",
-      Seq("p25" -> 0.25, "p50" -> 0.5, "p999" -> 0.999)).collect().head
-    val want = df.agg(expr("percentile(v, 0.25)"), expr("percentile(v, 0.5)"),
-      expr("percentile(v, 0.999)")).collect().head
-    assert(got.getAs[Double]("p25") === want.getDouble(0))
-    assert(got.getAs[Double]("p50") === want.getDouble(1))
-    assert(got.getAs[Double]("p999") === want.getDouble(2))
-    // the histogram state really is bounded: rebuild the operator's
-    // bucket grain (same fixed-width bucket expression) and assert the
-    // aggregate really collapses 10^6 distinct values into ≤ nBuckets
-    // rows for the group — the actual state bound, not a proxy (the
-    // previous check counted a 1-row min/max aggregate, which could not
-    // fail — ADVICE r8)
-    val nBuckets = 4096 // exactQuantiles' default
-    val stats = df.agg(min("v").as("mn"), max("v").as("mx")).collect().head
-    val (mn, mx) = (stats.getDouble(0), stats.getDouble(1))
-    val histRows = df
-      .select(least(floor((col("v") - mn) * nBuckets / (mx - mn)),
-        lit(nBuckets - 1L)).as("b"))
-      .groupBy("b").count().count()
-    assert(histRows <= nBuckets.toLong,
-      s"bucket grain must hold <= $nBuckets rows per group, got $histRows")
-    assert(histRows > 1000L, "sanity: the histogram is actually populated")
   }
 
   test("value-histogram path stays correct (if not cheap) past its intended cardinality") {
@@ -203,7 +118,7 @@ class QuantilesSpec extends SparkSpec {
       Seq("p50" -> 0.5), countCol = Some("n")).collect()
       .map(r => r.getAs[String]("grp") ->
         (r.getAs[Double]("p50"), r.getAs[Long]("n"))).toMap
-    // group b has no non-null values: no row (same as exactQuantiles' base)
+    // group b has no non-null values: no row (percentile would emit null)
     assert(got === Map("a" -> ((2.0, 2L))))
   }
 }
