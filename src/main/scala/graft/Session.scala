@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{RuntimeConfig, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** The one session factory: every main and spec starts from [[builder]],
   * so the engine a tool profiles is the engine the bench runs. A caller
@@ -59,10 +59,4 @@ object Session {
     if (aqeStart512) b.config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
     else b
   }
-
-  /** An integer `spark.graft.*` knob, parsed and bounded where it is
-    * read: a too-small or garbage value fails naming its conf key, not
-    * as a bare NumberFormatException from inside a stage. */
-  def intKnob(conf: RuntimeConfig, key: String, default: Int, min: Int): Int =
-    atLeast(key, conf.get(key, default.toString), min)
 }

@@ -152,13 +152,12 @@ object TxSidecar {
     * Self-heals first: [[compact]] rewrites via the staged snapshot
     * swap, so a crash mid-swap leaves debris [[graft.io.Fs
     * .recoverSnapshot]] promotes/restores before the read resolves. */
-  def readState(spark: SparkSession, sidecarPath: String, factPath: String,
-                partitionCol: String = "load_date"): State = {
+  def readState(spark: SparkSession, sidecarPath: String, factPath: String): State = {
     val conf = spark.sessionState.newHadoopConf()
     // a heal moved files — drop any pre-crash listing this session cached
     if (graft.io.Fs.recoverSnapshot(sidecarPath, conf))
       spark.catalog.refreshByPath(sidecarPath)
-    val factDates = graft.io.Fs.partitionValues(factPath, partitionCol, conf)
+    val factDates = graft.io.Fs.partitionValues(factPath, "load_date", conf)
     val metas: Seq[Meta] =
       if (!graft.io.Fs.hasParquetData(sidecarPath, conf)) Seq.empty
       else spark.read.schema(schema).parquet(sidecarPath)
@@ -235,23 +234,30 @@ object TxSidecar {
       schema)
   }
 
+  /** Days a daily row stays in the hot tier: a re-run or backfill of
+    * the last [[HotDays]] days probes that day's own bloom. */
+  val HotDays = 45
+
+  /** Fewest rows a compaction must fold away: with daily rows, the first
+    * rewrite comes after about `HotDays + MinFolded + 2` daily runs, then
+    * about once a month. */
+  val MinFolded = 30
+
   /** Tier the index when enough cold daily rows have accumulated:
     * [[compact]] iff the rows whose whole window predates
-    * `today - keepDays` outnumber their target months by at least
-    * `compactMin` — i.e. at least that many rows would actually
-    * disappear (EtlRun reads both from `spark.graft.j5.sidecarKeepDays`,
-    * default 45, and `spark.graft.j5.sidecarCompactMin`, default 30).
-    * Counting the SHRINKAGE (rows − months), not the rows,
+    * `today - HotDays` outnumber their target months by at least
+    * [[MinFolded]], i.e. at least that many rows would actually
+    * disappear. Counting the SHRINKAGE (rows − months), not the rows,
     * makes the trigger self-quenching: already-compacted tier rows
     * contribute 0 and never re-fire a rewrite. The decision reuses the
     * run's already-collected [[State]] — no extra read or job.
     * Returns (rows compacted, tier rows written) when it ran. */
   def maybeCompact(spark: SparkSession, sidecarPath: String, st: State,
-                   today: String, keepDays: Int, compactMin: Int): Option[(Int, Int)] = {
-    val cutoff = java.time.LocalDate.parse(today).minusDays(keepDays.toLong).toString
+                   today: String): Option[(Int, Int)] = {
+    val cutoff = java.time.LocalDate.parse(today).minusDays(HotDays.toLong).toString
     val cold = st.metas.filter(_.dateMax < cutoff)
     val months = cold.map(_.loadDate.substring(0, 7)).distinct
-    if (cold.size - months.size < math.max(compactMin, 1)) None
+    if (cold.size - months.size < MinFolded) None
     else {
       compact(spark, sidecarPath, cutoff)
       Some((cold.size, months.size))

@@ -151,10 +151,32 @@ object Dedup {
     * `Int.MaxValue` (the default) and skip the size pass. Unlike the
     * vector cap, band keys are an unbounded domain, so the broadcast
     * carries the EXCLUDED keys (few by construction — only pathological
-    * bands cross the cap), never the keep-list.
-    *
-    * Sorted-neighborhood guard (`neighborWidth`, VERDICT r7 #1): the
-    * band cap bounds the WORST band but leaves per-band work quadratic —
+    * bands cross the cap), never the keep-list. Callers that need only
+    * connectivity use the linear chain ([[chainCandidatesFromKeys]]).
+    */
+  def lshBandCandidates(docs: DataFrame, k: Int = 16, bands: Int = 8,
+                        rowsPerBand: Int = 2,
+                        maxBandSize: Int = Int.MaxValue): DataFrame = {
+    val t = graft.text.TextOps
+    // the fused native expression: one JVM call per row for the whole
+    // shingle→minhash→band pipeline (bit-identical to the HOF chain —
+    // NativeExprSpec + every band-family oracle pin it)
+    val allKeys = docs.select(col("doc_id"), explode(
+      t.minhashBandKeys(col("sh"), k, bands, rowsPerBand)).as("band_key"))
+    val keys = if (maxBandSize == Int.MaxValue) allKeys else {
+      val hot = allKeys.groupBy("band_key").agg(count(lit(1)).as("band_n"))
+        .filter(col("band_n") > maxBandSize).select("band_key")
+      allKeys.join(broadcast(hot), Seq("band_key"), "left_anti")
+    }
+    keys.select(col("band_key"), col("doc_id").as("id_a"))
+      .join(keys.select(col("band_key"), col("doc_id").as("id_b")), Seq("band_key"))
+      .filter(col("id_a") < col("id_b"))
+      .select("id_a", "id_b").distinct() // a pair can collide in many bands
+  }
+
+  /** Sorted-neighborhood chain candidates over a `(band_key, doc_id)`
+    * frame (VERDICT r7 #1). [[lshBandCandidates]]' band cap bounds the
+    * WORST band but leaves per-band work quadratic —
     * a dup-dense corpus (every base doc replicated K×) grows candidate
     * pairs K² with NO band crossing a production-sized cap (measured:
     * 378.8M pairs at 100× rows, cap 5000 never engaging). When callers
@@ -178,34 +200,6 @@ object Dedup {
     * neighborhood blocking (Hernández & Stolfo, SIGMOD '95), keyed here
     * by LSH band instead of a global sort key. The plan is ONE window
     * (`lead` over band_key/doc_id — no self-join at all) + the distinct.
-    */
-  def lshBandCandidates(docs: DataFrame, k: Int = 16, bands: Int = 8,
-                        rowsPerBand: Int = 2,
-                        maxBandSize: Int = Int.MaxValue,
-                        neighborWidth: Int = Int.MaxValue): DataFrame = {
-    val t = graft.text.TextOps
-    // the fused native expression: one JVM call per row for the whole
-    // shingle→minhash→band pipeline (bit-identical to the HOF chain —
-    // NativeExprSpec + every band-family oracle pin it)
-    val allKeys = docs.select(col("doc_id"), explode(
-      t.minhashBandKeys(col("sh"), k, bands, rowsPerBand)).as("band_key"))
-    val keys = if (maxBandSize == Int.MaxValue) allKeys else {
-      val hot = allKeys.groupBy("band_key").agg(count(lit(1)).as("band_n"))
-        .filter(col("band_n") > maxBandSize).select("band_key")
-      allKeys.join(broadcast(hot), Seq("band_key"), "left_anti")
-    }
-    if (neighborWidth == Int.MaxValue)
-      keys.select(col("band_key"), col("doc_id").as("id_a"))
-        .join(keys.select(col("band_key"), col("doc_id").as("id_b")), Seq("band_key"))
-        .filter(col("id_a") < col("id_b"))
-        .select("id_a", "id_b").distinct() // a pair can collide in many bands
-    else chainCandidatesFromKeys(keys, neighborWidth)
-  }
-
-  /** The sorted-neighborhood chain step of [[lshBandCandidates]] over an
-    * already-built `(band_key, doc_id)` frame — exposed so callers that
-    * precompute band keys (e.g. to cache hashed-shingle verify arrays
-    * alongside them, q29/q177) share the exact same window.
     * (band_key, doc_id) must be unique (the band index is baked into
     * the key), so the lead order is total and the chain deterministic;
     * id_a < id_b holds by construction (leads ascend in doc_id). */
@@ -240,8 +234,7 @@ object Dedup {
     * @return (src, dst) with src < dst (chain order)
     */
   def chainVerifiedEdges(docsSh: DataFrame, neighborWidth: Int = 3,
-                         threshold: Double = 0.5,
-                         maxBandSize: Int = Int.MaxValue): DataFrame = {
+                         threshold: Double = 0.5): DataFrame = {
     require(neighborWidth > 0 && neighborWidth < 64,
       s"chainVerifiedEdges needs a finite chain width, got $neighborWidth")
     val t = graft.text.TextOps
@@ -249,14 +242,7 @@ object Dedup {
         t.minhashBandKeys(col("sh"), 16, 8, 2).as("bks"),
         t.shingleHashSet(col("sh")).as("hs"))
     val hashed = Fixpoint.cut(hashed0)
-    val allKeys = hashed.select(col("doc_id"), explode(col("bks")).as("band_key"))
-    val keys = if (maxBandSize == Int.MaxValue) allKeys else {
-      // hot-band exclusion, same shape as lshBandCandidates: broadcast
-      // the FEW keys over the cap, anti-join the rest through
-      val hot = allKeys.groupBy("band_key").agg(count(lit(1)).as("band_n"))
-        .filter(col("band_n") > maxBandSize).select("band_key")
-      allKeys.join(broadcast(hot), Seq("band_key"), "left_anti")
-    }
+    val keys = hashed.select(col("doc_id"), explode(col("bks")).as("band_key"))
     val cand = chainCandidatesFromKeys(keys, neighborWidth)
     val inter = size(array_intersect(col("ha"), col("hb"))).cast("double")
     val uni = (size(col("ha")) + size(col("hb"))).cast("double") - inter

@@ -101,7 +101,7 @@ object ClusterLabels {
   /** The q72 pipeline: 3-shingles → chain-bounded LSH band candidates →
     * Jaccard verify → min-label propagation closure → per-cluster member
     * counts. Candidates use `neighborWidth = 3` (sorted-neighborhood
-    * chains inside each band, [[Dedup.lshBandCandidates]]) instead of a
+    * chains inside each band, [[Dedup.chainCandidatesFromKeys]]) instead of a
     * band-size cap: r7's 100×-rows telemetry showed a dup-dense corpus
     * growing to 378.8M all-pairs candidates with NO band crossing the
     * 5000 cap — the chain makes per-band candidates LINEAR by

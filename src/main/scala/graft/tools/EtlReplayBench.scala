@@ -52,11 +52,6 @@ import graft.gen.Synthetic
   *       SPARK_GRAFT_FROM      first day index (default 0; resuming needs
   *                             SPARK_GRAFT_WH pointing at a warehouse that
   *                             already holds days 0..FROM-1)
-  *       SPARK_GRAFT_STAGE_POOL    forwarded to spark.graft.etl.stagePool
-  *                             (1 = serialize stages: solo per-stage times
-  *                             free of 4-way pool contention)
-  *       SPARK_GRAFT_SIDECAR_KEEP         forwarded to spark.graft.j5.sidecarKeepDays
-  *       SPARK_GRAFT_SIDECAR_COMPACT_MIN  forwarded to spark.graft.j5.sidecarCompactMin
   */
 object EtlReplayBench {
 
@@ -74,12 +69,6 @@ object EtlReplayBench {
     // factory default), the posture q180 adopted for exactly this job
     // shape (VERDICT r11 #3)
     val spark = graft.Session.builder(cpus).getOrCreate()
-    sys.env.get("SPARK_GRAFT_STAGE_POOL")
-      .foreach(v => spark.conf.set("spark.graft.etl.stagePool", v))
-    sys.env.get("SPARK_GRAFT_SIDECAR_KEEP")
-      .foreach(v => spark.conf.set("spark.graft.j5.sidecarKeepDays", v))
-    sys.env.get("SPARK_GRAFT_SIDECAR_COMPACT_MIN")
-      .foreach(v => spark.conf.set("spark.graft.j5.sidecarCompactMin", v))
 
     // per-stage attribution: EtlRun labels each phase's jobs "etl:<stage>"
     val active = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()

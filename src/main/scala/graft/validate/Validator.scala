@@ -40,7 +40,7 @@ object Rule {
   * one scan and zero shuffles.
   */
 final class Validator(rules: Seq[Rule], entity: String, recordId: Column,
-                      tableName: String = "") {
+                      val tableName: String = "") {
 
   val failedRulesCol = "failed_rules"
 
@@ -71,8 +71,10 @@ final class Validator(rules: Seq[Rule], entity: String, recordId: Column,
   def rejected(annotated: DataFrame): DataFrame =
     annotated.filter(hasError(col(failedRulesCol))).drop(failedRulesCol)
 
-  /** The error log: one row per (record, fired rule) — the Spark shape of
-    * `etl_error_log` (reference ETL/scripts/create_db.py:29-42). */
+  /** The error events: one row per (record, fired rule). Tagged with
+    * `table_name`, they are the input of [[graft.audit.Audit.errorLog]],
+    * which builds the reference `etl_error_log` rows
+    * (ETL/scripts/create_db.py:29-42). */
   def errors(annotated: DataFrame): DataFrame =
     annotated
       .select(recordId.cast("string").as("record_id"), explode(col(failedRulesCol)).as("e"))
@@ -83,21 +85,4 @@ final class Validator(rules: Seq[Rule], entity: String, recordId: Column,
         col("e.severity").as("severity"),
         col("e.message").as("message")
       )
-
-  /** [[errors]] widened to the reference `etl_error_log` column set
-    * (run_id, entity, table_name, record_id, error_type, message,
-    * created_at, severity — ETL/scripts/create_db.py:29-42). `createdAt`
-    * is a parameter so tests/oracles can pin a deterministic timestamp. */
-  def errorLog(annotated: DataFrame, runId: Column,
-               createdAt: Column = current_timestamp()): DataFrame =
-    errors(annotated).select(
-      runId.cast("long").as("run_id"),
-      col("entity"),
-      lit(tableName).as("table_name"),
-      col("record_id"),
-      col("error_type"),
-      col("message"),
-      createdAt.as("created_at"),
-      col("severity")
-    )
 }

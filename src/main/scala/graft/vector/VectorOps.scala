@@ -481,7 +481,7 @@ object VectorOps {
   /** Multi-table SRP-LSH candidate pairs with a STRUCTURALLY LINEAR
     * bound — the scale path for bucketed ANN pair generation and the
     * vector twin of the text side's banded-minhash chain
-    * ([[graft.ops.Dedup.lshBandCandidates]] / q177).
+    * ([[graft.ops.Dedup.chainCandidatesFromKeys]] / q177).
     *
     * Single-table SRP at a fixed plane count is Θ(n²/2^p) in-bucket
     * pairs — quadratic at ANY plane count once n outgrows 2^p (the r9

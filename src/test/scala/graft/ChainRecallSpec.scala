@@ -6,7 +6,7 @@ import graft.ops.{Components, Dedup}
 import graft.text.TextOps
 
 /** Measures the recall trade of sorted-neighborhood CHAIN candidates
-  * (ADVICE r8, Dedup.lshBandCandidates `neighborWidth`): chain-link
+  * (ADVICE r8, Dedup.chainCandidatesFromKeys): chain-link
   * connectivity is conditional — a band-key hash collision interleaving
   * more than J non-verifying strangers between two true dups inside a
   * band can break the pair's only chain link and silently split a
@@ -38,7 +38,8 @@ class ChainRecallSpec extends SparkSpec {
       .withColumnRenamed("lbl", "lbl_full")
     val chainLbl = Components
       .connectedComponents(verts,
-        verifiedEdges(Dedup.lshBandCandidates(docs, neighborWidth = 3)))
+        verifiedEdges(Dedup.chainCandidatesFromKeys(docs.select(col("doc_id"),
+          explode(TextOps.minhashBandKeys(col("sh"), 16, 8, 2)).as("band_key")), 3)))
       .withColumnRenamed("lbl", "lbl_chain")
     val both = fullLbl.join(chainLbl, Seq("id")).cache()
 

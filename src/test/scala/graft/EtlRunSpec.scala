@@ -113,6 +113,14 @@ class EtlRunSpec extends SparkSpec {
       "invalid_payment_type", "invalid_status",
       "duplicate_tx_id", "price_mismatch")
     assert(expected.subsetOf(kinds), s"missing: ${expected -- kinds}")
+    // every row names its table: the validated source, or the fact table
+    // whose load skipped it
+    val tagged = tbl("etl_error_log").filter(col("run_id") === 1)
+      .select("entity", "table_name").distinct().as[(String, String)].collect().toSet
+    assert(Set("user" -> "users", "product" -> "products", "transaction" -> "transactions")
+      .subsetOf(tagged), tagged)
+    assert(tagged.map(_._2).subsetOf(Set("users", "products", "transactions",
+      "fact_transactions", "fact_stock_history")), tagged)
     // fidelity: bad-date rows are INVISIBLE to the daily run — the extract
     // compares the raw date string to today, and a dd-MM-yyyy date can
     // never equal it (reference etl.py:160-168; the injected bad formats
@@ -361,67 +369,6 @@ class EtlRunSpec extends SparkSpec {
     assert(log.getAs[String]("status") === "failed")
   }
 
-  test("conf knobs: a serialized stage pool reproduces the default run exactly") {
-    // the measurement knob must be semantics-free: a day run with
-    // spark.graft.etl.stagePool=1 (stages serialized for contention-free
-    // timing) must leave a warehouse with the same table counts as the
-    // default-conf run on the SAME inputs
-    val whA = Files.createTempDirectory("graft_e2e_knobs_a").toString
-    val whB = Files.createTempDirectory("graft_e2e_knobs_b").toString
-    val users = Synthetic.users(spark, nUsers)
-    val products = Synthetic.products(spark, nProducts)
-    val tx = Synthetic.transactions(spark, 200, day1, nUsers, nProducts)
-    def stage(wh: String): Unit = {
-      users.write.mode("overwrite").parquet(s"$wh/users")
-      products.write.mode("overwrite").parquet(s"$wh/products")
-      tx.write.mode("overwrite").partitionBy("date").parquet(s"$wh/transactions")
-    }
-    stage(whA); stage(whB)
-    new EtlRun(spark, whA).run(day1)
-    spark.conf.set("spark.graft.etl.stagePool", "1")
-    try new EtlRun(spark, whB).run(day1)
-    finally spark.conf.unset("spark.graft.etl.stagePool")
-    def counts(wh: String) = {
-      val e = new EtlRun(spark, wh)
-      Seq("dim_user" -> Schemas.dimUser, "dim_product" -> Schemas.dimProduct,
-        "fact_transactions" -> Schemas.factTransactions,
-        "fact_stock_history" -> Schemas.factStockHistory,
-        "etl_error_log" -> Schemas.etlErrorLog)
-        .map { case (t, s) => t -> e.table(t, s).count() }
-    }
-    assert(counts(whB) === counts(whA))
-    val status = new EtlRun(spark, whB).table("etl_run_log", Schemas.etlRunLog)
-      .select("status").first().getString(0)
-    assert(status === "success")
-  }
-
-  test("a bad sidecar knob fails naming its key before the warehouse mutates") {
-    // the tiering knobs are consumed by the LAST stage (sidecar_tier),
-    // after the fact/dim_date/error_log appends commit — so they must be
-    // parsed up front, or a typo fails the run with half a day written
-    val whK = Files.createTempDirectory("graft_e2e_badknob").toString
-    Synthetic.users(spark, nUsers).write.mode("overwrite").parquet(s"$whK/users")
-    Synthetic.products(spark, nProducts).write.mode("overwrite").parquet(s"$whK/products")
-    Synthetic.transactions(spark, 200, day1, nUsers, nProducts)
-      .unionByName(Synthetic.transactions(spark, 50, day2, nUsers, nProducts, firstId = 1000))
-      .write.mode("overwrite").partitionBy("date").parquet(s"$whK/transactions")
-    val etlK = new EtlRun(spark, whK)
-    etlK.run(day1)
-    def snapshot() = Seq("dim_user" -> Schemas.dimUser,
-        "fact_transactions" -> Schemas.factTransactions, "etl_run_log" -> Schemas.etlRunLog)
-      .map { case (t, sc) => sortedRows(etlK.table(t, sc)) }
-    val before = snapshot()
-    for ((key, bad) <- Seq("spark.graft.j5.sidecarKeepDays" -> "45d",
-                           "spark.graft.j5.sidecarCompactMin" -> "0")) {
-      spark.conf.set(key, bad)
-      try {
-        val e = intercept[IllegalArgumentException](etlK.run(day2))
-        assert(e.getMessage.contains(key) && e.getMessage.contains(s"'$bad'"), e.getMessage)
-      } finally spark.conf.unset(key)
-      assert(snapshot() === before, s"warehouse mutated by a run with $key=$bad")
-    }
-  }
-
   test("multi-day replay: five drifting days re-version dims exactly and accumulate facts without reloads") {
     // VERDICT r12 "what's missing" #2's correctness side: tools
     // .EtlReplayBench measures the N-day wall profile at corpus scale;
@@ -575,36 +522,47 @@ class EtlRunSpec extends SparkSpec {
       .filter(col("run_id") === runId).select("notes").first().getString(0)
 
     days.zipWithIndex.foreach { case (d, i) => runDay(d, 1L + i.toLong * txPerDay) }
-    spark.conf.set("spark.graft.j5.sidecarKeepDays", "30")
-    spark.conf.set("spark.graft.j5.sidecarCompactMin", "3")
-    try {
-      // day 7 (June): 6 cold dailies − 2 months = 4 ≥ 3 → tiering fires
-      runDay("2025-06-01", firstId = 1000L)
-      assert(notesOf(7).contains(";tier=6->2"), notesOf(7))
-      val sidecars = etlT.table(graft.facts.TxSidecar.tableName, graft.facts.TxSidecar.schema)
-      assert(sidecars.count() === 3) // 2 month rows + June's daily row
-      assert(sidecars.filter(col("bloom").isNull).count() === 2)
-
-      // re-run a COMPACTED day: the tier row (range-only) admits the old
-      // ids, the scan expands to that month's partitions, and the exact
-      // anti-join keeps the re-run idempotent — zero facts reloaded
-      val factsBefore = etlT.table("fact_transactions", Schemas.factTransactions).count()
-      runDay("2025-01-02", firstId = 1L + txPerDay) // same ids as original day 2
-      assert(etlT.table("fact_transactions", Schemas.factTransactions).count() === factsBefore)
-      val rerun = notesOf(8)
-      // month granularity: the January partitions are scanned (the tier
-      // row's range admits the replayed ids), but the prune still rules
-      // out February and June — scanned strictly between 0 and all
-      val scan = "scan=(\\d+)/(\\d+)".r.findFirstMatchIn(rerun).get
-      assert(scan.group(1).toInt >= 1 && scan.group(1).toInt < scan.group(2).toInt, rerun)
-      assert(!rerun.contains("ineffective"), rerun)
-
-      // a fresh far-id day still ends at the range screen: zero scan
-      runDay("2025-06-02", firstId = 5000L)
-      assert(notesOf(9).contains("hit=0;uncovered=0;scan=0/"), notesOf(9))
-    } finally {
-      spark.conf.unset("spark.graft.j5.sidecarKeepDays")
-      spark.conf.unset("spark.graft.j5.sidecarCompactMin")
+    // the trigger needs TxSidecar.MinFolded (30) rows folded away: seed
+    // 31 cold daily rows for December 2024 (no fact partition) in one
+    // write, with ids far above the replay's. One bloom over all seeded
+    // ids serves every row, a superset of each row's own ids.
+    val seedBase = 10000000L
+    val seedBloom = graft.facts.TxSidecar.buildBatchBloom(
+      spark.range(seedBase, seedBase + 3100L).toDF("transaction_id"), "transaction_id", 4096L)
+      .get.bloom
+    val seeded = (1 to 31).map { i =>
+      val d = java.sql.Date.valueOf(f"2024-12-$i%02d")
+      val lo = seedBase + (i - 1) * 100L
+      org.apache.spark.sql.Row(d, lo, lo + 99L, 100L, seedBloom, d)
     }
+    spark.createDataFrame(spark.sparkContext.parallelize(seeded, 1),
+      graft.facts.TxSidecar.schema)
+      .write.mode("append").parquet(s"$whT/${graft.facts.TxSidecar.tableName}")
+    spark.catalog.refreshByPath(s"$whT/${graft.facts.TxSidecar.tableName}")
+
+    // day 7 (June): 37 cold dailies − 3 months = 34 ≥ 30 → tiering fires
+    runDay("2025-06-01", firstId = 1000L)
+    assert(notesOf(7).contains(";tier=37->3"), notesOf(7))
+    val sidecars = etlT.table(graft.facts.TxSidecar.tableName, graft.facts.TxSidecar.schema)
+    assert(sidecars.count() === 4) // 3 month rows + June's daily row
+    assert(sidecars.filter(col("bloom").isNull).count() === 3)
+
+    // re-run a COMPACTED day: the tier row (range-only) admits the old
+    // ids, the scan expands to that month's partitions, and the exact
+    // anti-join keeps the re-run idempotent — zero facts reloaded
+    val factsBefore = etlT.table("fact_transactions", Schemas.factTransactions).count()
+    runDay("2025-01-02", firstId = 1L + txPerDay) // same ids as original day 2
+    assert(etlT.table("fact_transactions", Schemas.factTransactions).count() === factsBefore)
+    val rerun = notesOf(8)
+    // month granularity: the January partitions are scanned (the tier
+    // row's range admits the replayed ids), but the prune still rules
+    // out February and June — scanned strictly between 0 and all
+    val scan = "scan=(\\d+)/(\\d+)".r.findFirstMatchIn(rerun).get
+    assert(scan.group(1).toInt >= 1 && scan.group(1).toInt < scan.group(2).toInt, rerun)
+    assert(!rerun.contains("ineffective"), rerun)
+
+    // a fresh far-id day still ends at the range screen: zero scan
+    runDay("2025-06-02", firstId = 5000L)
+    assert(notesOf(9).contains("hit=0;uncovered=0;scan=0/"), notesOf(9))
   }
 }

@@ -436,13 +436,12 @@ class PlanBudgetSpec extends SparkSpec {
     // query from shipping a genuine global sort over raw rows.
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.window.WindowExec
-    import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, SortAggregateExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.{GlobalLimitExec, TakeOrderedAndProjectExec}
     import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
     def boundedBelow(p: SparkPlan): Boolean = {
       val bounded = p.collectFirst {
         case _: BaseAggregateExec => true
-        case _: SortAggregateExec => true
         case _: GlobalLimitExec => true
         case _: TakeOrderedAndProjectExec => true
         // a broadcast-joined side is bounded by the broadcast threshold;

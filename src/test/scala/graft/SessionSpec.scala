@@ -4,8 +4,8 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** The session factory: the engine config every main and spec gets, the
-  * one `SPARK_GRAFT_CPUS` reader, and a guard that it stays the only
-  * place a session is built. */
+  * one `SPARK_GRAFT_CPUS` reader, a guard that it stays the only place a
+  * session is built, and a guard against `spark.graft.*` conf knobs. */
 class SessionSpec extends SparkSpec {
 
   test("a factory session carries the engine config") {
@@ -50,5 +50,17 @@ class SessionSpec extends SparkSpec {
     val builders = files.filter(p => Files.readString(p).contains(call))
       .map(p => Paths.get("src").relativize(p).toString).sorted
     assert(builders === Seq("main/scala/graft/Session.scala"))
+  }
+
+  test("the program reads no spark.graft.* conf keys") {
+    // a tuning knob needs two non-test callers that want different
+    // values; until one exists a value is a constant in its module
+    val files = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala")).toSeq
+    assert(files.exists(_.endsWith(Paths.get("graft/pipeline/EtlRun.scala"))),
+      s"source walk missed src/main: found ${files.size} files")
+    val knobs = files.filter(p => Files.readString(p).contains("spark.graft."))
+      .map(p => Paths.get("src/main").relativize(p).toString).sorted
+    assert(knobs.isEmpty, s"spark.graft.* keys in: ${knobs.mkString(", ")}")
   }
 }

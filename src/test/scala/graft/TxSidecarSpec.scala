@@ -174,16 +174,14 @@ class TxSidecarSpec extends SparkSpec {
       assert(st.metas.forall(m => m.dateMax === m.loadDate)) // null date_max → daily
       assert(st.uncoveredDates.isEmpty)
 
-      // 40 cold dailies − 2 target months = 38 ≥ compactMin(30): fires
-      val fired = TxSidecar.maybeCompact(spark, scPath, st, today = "2025-06-01",
-        keepDays = 45, compactMin = 30)
+      // 40 cold dailies − 2 target months = 38 ≥ MinFolded (30): fires
+      val fired = TxSidecar.maybeCompact(spark, scPath, st, today = "2025-06-01")
       assert(fired === Some((40, 2)))
       val st2 = TxSidecar.readState(spark, scPath, s"$dir/fact")
       assert(st2.metas.size === 2)
       assert(st2.uncoveredDates.isEmpty)
       // self-quenching: tier rows contribute rows − months = 0, no re-fire
-      assert(TxSidecar.maybeCompact(spark, scPath, st2, today = "2025-06-01",
-        keepDays = 45, compactMin = 30).isEmpty)
+      assert(TxSidecar.maybeCompact(spark, scPath, st2, today = "2025-06-01").isEmpty)
     } finally graft.io.Fs.deleteRecursively(dir, conf)
   }
 

@@ -87,7 +87,10 @@ class ValidatorSpec extends SparkSpec {
     val v = new Validator(
       Rules.userRules(col("user_id"), col("name"), col("email"), col("join_date")),
       "user", col("user_id"), tableName = "users")
-    val log = v.errorLog(v.annotate(users), lit(7), to_timestamp(lit("2024-06-01 00:00:00")))
+    // the shape EtlRun hands to the one error-log builder
+    val log = graft.audit.Audit.errorLog(
+      v.errors(v.annotate(users)).withColumn("table_name", lit(v.tableName)), 7L,
+      to_timestamp(lit("2024-06-01 00:00:00")))
     assert(log.columns.toSeq === Seq("run_id", "entity", "table_name", "record_id",
       "error_type", "message", "created_at", "severity"))
     val r = log.collect().head
