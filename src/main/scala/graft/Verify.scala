@@ -26,7 +26,7 @@ object Verify {
         d.mkdirs()
         // leave ONLY the marker: a half-written parquet dir must not pass
         // for a result
-        d.listFiles().filter(_.getName != "_ERROR").foreach(deleteRec)
+        d.listFiles().filter(_.getName != "_ERROR").foreach(graft.io.Fs.deleteLocal)
         Files.writeString(Paths.get(s"$outDir/$name/_ERROR"), msg)
       }
       finally spark.catalog.clearCache() // don't let cached intermediates accumulate
@@ -64,10 +64,5 @@ object Verify {
     // rc stays 0: the per-query artifacts above are the failure signal —
     // a non-zero exit could make a harness discard the 150+ good rows
     spark.stop()
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(deleteRec)
-    f.delete()
   }
 }

@@ -295,49 +295,30 @@ object TxSidecar {
     kept.select(fields: _*).unionByName(tiers.select(fields: _*))
   }
 
-  // Deserialized bloom cache, keyed by broadcast id: the probe UDF runs
-  // once per task and must not re-parse MBs of bloom bytes per task. A
-  // long-lived session (30-day replay) creates one broadcast per run, so
-  // the cache is a small bounded LRU — entries for destroyed broadcasts
-  // age out instead of pinning day-sized byte arrays forever.
-  private val probeCache = new java.util.LinkedHashMap[Long, Array[(String, Long, Long, BloomFilter)]](
-    8, 0.75f, true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[Long, Array[(String, Long, Long, BloomFilter)]]): Boolean = size > 4
-  }
-
   /** Which sidecar rows any incoming id might belong to — ONE pass over
     * the batch (range check first, bloom probe only on range overlap;
     * a null bloom — a compacted tier row — admits on range alone), then
     * a tiny distinct; returns the hit rows' `loadDate`s. Empty result =
     * no incoming id can exist anywhere in indexed history. The probe is
     * an interpreted UDF by design: the per-day blooms are driver-held
-    * MBs that must ship ONCE per executor (broadcast), not per-task in
-    * a codegen'd literal. */
+    * MBs, parsed once here and shipped once per executor as a broadcast
+    * (which each executor keeps deserialized), not per task in a
+    * codegen'd literal. */
   def probeHitDates(incoming: DataFrame, key: String, rows: Seq[Sidecar]): Seq[String] = {
     if (rows.isEmpty) return Seq.empty
     val spark = incoming.sparkSession
     import spark.implicits._
-    val bc = spark.sparkContext.broadcast(
-      rows.map(s => (s.loadDate, s.minId, s.maxId, s.bloom)).toArray)
+    val bc = spark.sparkContext.broadcast(rows.map { s =>
+      (s.loadDate, s.minId, s.maxId,
+        if (s.bloom == null) null
+        else BloomFilter.readFrom(new java.io.ByteArrayInputStream(s.bloom)))
+    }.toArray)
     try {
       val probe = udf { (id: java.lang.Long) =>
         if (id == null) Array.empty[String]
         else {
-          val filters = probeCache.synchronized {
-            var f = probeCache.get(bc.id)
-            if (f == null) {
-              f = bc.value.map { case (d, mn, mx, bytes) =>
-                (d, mn, mx,
-                  if (bytes == null) null
-                  else BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes)))
-              }
-              probeCache.put(bc.id, f)
-            }
-            f
-          }
           val v = id.longValue()
-          filters.collect {
+          bc.value.collect {
             case (d, mn, mx, bf)
               if v >= mn && v <= mx && (bf == null || bf.mightContainLong(v)) => d
           }.distinct

@@ -75,47 +75,3 @@ case class FloatCosine(left: Expression, right: Expression)
                                                  newRight: Expression): FloatCosine =
     copy(left = newLeft, right = newRight)
 }
-
-/** Native dot product over two `array<float>` columns — same design notes
-  * (and NULL on length mismatch) as [[FloatCosine]]. */
-case class FloatDot(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes = bridge.floatArrayInputs
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_dot"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    if (x.numElements() != y.numElements()) return null
-    val n = x.numElements()
-    var dot = 0.0
-    var i = 0
-    while (i < n) { dot += x.getFloat(i).toDouble * y.getFloat(i).toDouble; i += 1 }
-    dot
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      s"""
-         |if ($a.numElements() != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  final int $n = $a.numElements();
-         |  double $dot = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $dot += (double) $a.getFloat($i) * (double) $b.getFloat($i);
-         |  }
-         |  ${ev.value} = $dot;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): FloatDot =
-    copy(left = newLeft, right = newRight)
-}

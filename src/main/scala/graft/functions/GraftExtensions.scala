@@ -1,16 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import org.apache.spark.sql.graft.bridge
 
-/** Column wrappers + SQL registration for the native graft expressions.
+/** Column wrappers for the native graft expressions.
   *
-  * DataFrame API: `GraftFunctions.cosineF(a, b)`. SQL: either start the
-  * session with `spark.sql.extensions=graft.functions.GraftExtensions` or
-  * call `GraftFunctions.register(spark)` on a live session; both expose
-  * `graft_cosine` / `graft_dot` to `spark.sql(...)`.
+  * DataFrame API: `GraftFunctions.cosineF(a, b)`. SQL: every session that
+  * `graft.Session` builds sets `spark.sql.extensions=graft.functions.GraftExtensions`,
+  * which exposes `graft_cosine` to `spark.sql(...)`.
   */
 object GraftFunctions {
 
@@ -18,39 +17,20 @@ object GraftFunctions {
     bridge.column(FloatCosine(bridge.expression(a),
       bridge.expression(b)))
 
-  def dotF(a: Column, b: Column): Column =
-    bridge.column(FloatDot(bridge.expression(a),
-      bridge.expression(b)))
-
   def srpBucketF(vec: Column, nPlanes: Int, planeOffset: Int,
                  maxDims: Int): Column =
     bridge.column(SrpBucket(bridge.expression(vec), nPlanes, planeOffset, maxDims))
-
-  private[functions] val registry: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
-    ("graft_cosine", "cosine similarity of two float arrays (double result)",
-      { args: Seq[Expression] => FloatCosine(args(0), args(1)) }),
-    ("graft_dot", "dot product of two float arrays (double result)",
-      { args: Seq[Expression] => FloatDot(args(0), args(1)) })
-  )
-
-  /** Register on an already-running session (tests, notebooks). */
-  def register(spark: SparkSession): Unit = registry.foreach { case (name, usage, builder) =>
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name),
-      new ExpressionInfo("graft.functions", name, usage),
-      builder)
-  }
 }
 
 /** `spark.sql.extensions` entry point (SparkSessionExtensions): the native
-  * expressions as SQL functions plus the date-string-compare pushdown
-  * optimizer rule ([[graft.plans.DateStringComparePushdown]]). */
+  * cosine as the SQL function `graft_cosine` plus the date-string-compare
+  * pushdown optimizer rule ([[graft.plans.DateStringComparePushdown]]). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftFunctions.registry.foreach { case (name, usage, builder) =>
-      ext.injectFunction((FunctionIdentifier(name),
-        new ExpressionInfo("graft.functions", name, usage), builder))
-    }
+    ext.injectFunction((FunctionIdentifier("graft_cosine"),
+      new ExpressionInfo("graft.functions", "graft_cosine",
+        "cosine similarity of two float arrays (double result)"),
+      args => FloatCosine(args(0), args(1))))
     ext.injectOptimizerRule(_ => graft.plans.DateStringComparePushdown)
   }
 }

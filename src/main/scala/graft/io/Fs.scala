@@ -30,6 +30,38 @@ object Fs {
     if (f.exists(p)) f.delete(p, true)
   }
 
+  /** Delete a local file or directory tree (no-op when absent). Plain
+    * `java.io`, not the Hadoop API: scratch dirs are local, and the exit
+    * hook below runs after Hadoop's own hook may have closed its
+    * `FileSystem` cache. */
+  def deleteLocal(f: java.io.File): Unit = if (f != null && f.exists()) {
+    if (f.isDirectory) f.listFiles().foreach(deleteLocal)
+    f.delete(): Unit
+  }
+
+  /** Copy a local file or directory tree to `dst`, replacing files that
+    * already exist there. */
+  def copyLocal(src: java.io.File, dst: java.io.File): Unit =
+    if (src.isDirectory) {
+      dst.mkdirs()
+      src.listFiles().foreach(f => copyLocal(f, new java.io.File(dst, f.getName)))
+    } else {
+      java.nio.file.Files.copy(src.toPath, dst.toPath,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
+    }
+
+  private val deleteAtExit = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+  private lazy val exitHook: Unit = Runtime.getRuntime.addShutdownHook(new Thread(() =>
+    deleteAtExit.forEach(f => try deleteLocal(f) catch { case _: Exception => () })))
+
+  /** Delete the local tree `f` when the JVM exits (one shared shutdown
+    * hook; best-effort). Returns `f`. */
+  def deleteLocalOnExit(f: java.io.File): java.io.File = {
+    exitHook
+    deleteAtExit.add(f)
+    f
+  }
+
   /** Move every data file under `src` into `dst`, preserving relative
     * partition subdirectories (`col=value/...`) and merging with whatever
     * `dst` already holds. Spark part-file names carry task UUIDs, so moves

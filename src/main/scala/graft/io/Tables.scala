@@ -11,11 +11,6 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * table root instead of a single file — call sites never assume a layout.
   */
 object Tables {
-  val tpch: Seq[String] =
-    Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem")
-  val extended: Seq[String] = Seq("events", "documents", "embeddings")
-  val all: Seq[String] = tpch ++ extended
-
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
@@ -42,15 +37,6 @@ object Tables {
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .json(path)
 
-  def lineitem(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "lineitem")
-  def orders(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "orders")
-  def customer(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "customer")
-  def part(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "part")
-  def supplier(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "supplier")
-  def nation(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "nation")
-  def region(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "region")
-  def events(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "events")
-
   /** `events.parquet` carries TIMESTAMP(NANOS), which different Spark
     * runtimes surface differently: 4.1+ reads it as TIMESTAMP_NTZ (µs
     * truncation built in); older runtimes under
@@ -63,7 +49,7 @@ object Tables {
   def eventsMicros(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{LongType, TimestampNTZType}
-    val raw = events(spark, dir)
+    val raw = table(spark, dir, "events")
     raw.schema("ts").dataType match {
       case LongType => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case TimestampNTZType =>
@@ -85,6 +71,4 @@ object Tables {
       case _ => raw
     }
   }
-  def documents(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "documents")
-  def embeddings(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "embeddings")
 }

@@ -131,55 +131,43 @@ object Multimodal {
     out.toSeq
   }
 
-  /** MP4/QuickTime metadata straight from box structure: `mvhd` gives
-    * duration (in movie-timescale units), the first visual `trak`'s
-    * `tkhd` gives 16.16 fixed-point width/height, and that trak's
-    * `stts` (time-to-sample) entry counts sum to the frame count.
-    * None unless the payload leads with `ftyp`/`moov` and carries a
-    * positive-dimension track — a text blob can never satisfy this. */
-  private def parseMp4(b: Array[Byte]): Option[(Int, Int, Long, Long)] = {
+  /** MP4/QuickTime frame count straight from box structure: the first
+    * visual `trak`'s `stts` (time-to-sample) entry counts sum to it.
+    * None unless the payload leads with `ftyp`/`moov`, its `mvhd` holds
+    * a usable duration and a track's `tkhd` carries positive 16.16
+    * fixed-point dims — a text blob can never satisfy this. */
+  private def parseMp4(b: Array[Byte]): Option[Long] = {
     val top = mp4Children(b, 0, b.length)
     if (!top.exists(t => t._1 == "ftyp" || t._1 == "moov")) return None
     top.find(_._1 == "moov").flatMap { case (_, mf, mt) =>
       val kids = mp4Children(b, mf, mt)
-      val durMs = kids.find(_._1 == "mvhd").flatMap { case (_, f, t) =>
-        if (t - f < 4) None
-        else (b(f) & 0xff) match {
-          case 1 if t - f >= 32 => // v1: 8-byte ctime/mtime/duration
-            val ts = be32(b, f + 20); val du = be64(b, f + 24)
-            // du is an untrusted u64 read into a Long: reject negative
-            // (wrapped) values and anything du*1000 would overflow on —
-            // a hostile header then falls back to the labeled stub
-            if (ts > 0 && du >= 0 && du <= Long.MaxValue / 1000L)
-              Some(du * 1000L / ts)
-            else None
-          case 0 if t - f >= 24 =>
-            val ts = be32(b, f + 12); val du = be32(b, f + 16)
-            if (ts > 0) Some(du * 1000L / ts) else None
-          case _ => None
-        }
+      val hasDuration = kids.find(_._1 == "mvhd").exists { case (_, f, t) =>
+        t - f >= 4 && ((b(f) & 0xff) match {
+          // v1: 8-byte ctime/mtime/duration. du is an untrusted u64 read
+          // into a Long: reject negative (wrapped) values and anything a
+          // millisecond conversion (du·1000) would overflow on — a hostile
+          // header then falls back to the labeled stub
+          case 1 if t - f >= 32 =>
+            val du = be64(b, f + 24)
+            be32(b, f + 20) > 0 && du >= 0 && du <= Long.MaxValue / 1000L
+          case 0 if t - f >= 24 => be32(b, f + 12) > 0
+          case _ => false
+        })
       }
       // first trak whose tkhd carries non-zero dims (audio tracks are 0×0);
       // width/height are the LAST 8 bytes of tkhd for both versions
-      val visual = kids.filter(_._1 == "trak").flatMap { case (_, f, t) =>
-        val tk = mp4Children(b, f, t)
-        tk.find(_._1 == "tkhd").flatMap { case (_, hf, ht) =>
-          if (ht - hf < 8) None
-          else {
-            val w = (be32(b, ht - 8) >> 16).toInt
-            val h = (be32(b, ht - 4) >> 16).toInt
-            if (w > 0 && h > 0) Some((w, h, tk)) else None
-          }
-        }
-      }.headOption
-      visual.flatMap { case (w, h, tk) =>
+      val visual = kids.filter(_._1 == "trak").map { case (_, f, t) => mp4Children(b, f, t) }
+        .find(_.find(_._1 == "tkhd").exists { case (_, hf, ht) =>
+          ht - hf >= 8 && (be32(b, ht - 8) >> 16) > 0 && (be32(b, ht - 4) >> 16) > 0
+        })
+      visual.filter(_ => hasDuration).map { tk =>
         // trak → mdia → minf → stbl → stts: Σ sample_count = frame count
         def child(kids: Seq[(String, Int, Int)], name: String) =
           kids.find(_._1 == name).map { case (_, f, t) => mp4Children(b, f, t) }
         val stts = child(tk, "mdia").flatMap(child(_, "minf"))
           .flatMap(child(_, "stbl"))
           .flatMap(_.find(_._1 == "stts"))
-        val frames = stts.map { case (_, f, t) =>
+        stts.map { case (_, f, t) =>
           if (t - f < 8) 0L
           else {
             val n = be32(b, f + 4).toInt
@@ -187,14 +175,14 @@ object Multimodal {
               .map(i => be32(b, f + 8 + i * 8)).sum
           }
         }.getOrElse(0L)
-        durMs.map(d => (w, h, d, frames))
       }
     }
   }
 
-  /** RIFF/AVI metadata from the `hdrl` LIST's `avih` main header
-    * (little-endian): µs-per-frame, total frames, width, height. */
-  private def parseAvi(b: Array[Byte]): Option[(Int, Int, Long, Long)] = {
+  /** RIFF/AVI total frames from the `hdrl` LIST's `avih` main header
+    * (little-endian), accepted only with positive width/height and a
+    * sane µs-per-frame. */
+  private def parseAvi(b: Array[Byte]): Option[Long] = {
     if (b.length < 12 || fourcc(b, 0) != "RIFF" || fourcc(b, 8) != "AVI ")
       return None
     val limit = math.min(b.length.toLong, 8L + le32(b, 4)).toInt
@@ -217,15 +205,13 @@ object Multimodal {
       if (o + 40 > b.length) None
       else {
         val usPerFrame = le32(b, o)
-        val frames = le32(b, o + 16)
         val w = le32(b, o + 32).toInt
         val h = le32(b, o + 36).toInt
-        // both fields are untrusted u32 (≤ 2^32−1 each): their product
-        // can overflow Long, emitting a garbage duration flagged as a
-        // real decode. 10^9 µs/frame (1000 s) is far beyond any real
-        // container and keeps the product provably < 2^62.
-        if (w > 0 && h > 0 && usPerFrame <= 1000000000L)
-          Some((w, h, usPerFrame * frames / 1000L, frames))
+        // usPerFrame and frames are untrusted u32 (≤ 2^32−1 each): a
+        // duration (their product) could overflow Long. 10^9 µs/frame
+        // (1000 s) is far beyond any real container and keeps the product
+        // provably < 2^62; a header past it is hostile and rejected.
+        if (w > 0 && h > 0 && usPerFrame <= 1000000000L) Some(le32(b, o + 16))
         else None
       }
     }
@@ -245,7 +231,7 @@ object Multimodal {
                   (implicit spark: SparkSession): Dataset[Frame] = {
     import spark.implicits._
     media.filter(_.media_type == "video").mapPartitions(_.flatMap { m =>
-      val parsed = parseMp4(m.payload).map(_._4).orElse(parseAvi(m.payload).map(_._4))
+      val parsed = parseMp4(m.payload).orElse(parseAvi(m.payload))
       val (nFrames, real) = parsed match {
         case Some(f) if f > 0 =>
           (math.min(f, m.payload.length.toLong).toInt, true)
@@ -285,12 +271,22 @@ object Multimodal {
   /** Deterministic 8×8 grayscale test card for `doc_id`: 64 pixel bytes
     * from an md5 HEX-STRING chain (h1 = md5("img:" + id), h2 = md5(h1),
     * …) — the same chain an oracle can walk with SQL `md5()`. */
-  def pixelBytes(docId: Long): Array[Int] = {
+  def pixelBytes(docId: Long): Array[Int] = md5HexChain(s"img:$docId")
+
+  /** 64 bytes from four chained md5 hex digests of `seed`: h1 = md5(seed),
+    * h2 = md5(h1), h3, h4; the bytes are the hex pairs of h1‖h2‖h3‖h4. */
+  private def md5HexChain(seed: String): Array[Int] = {
     val md = MessageDigest.getInstance("MD5")
     def hex(s: String): String =
       md.digest(s.getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
-    val h1 = hex(s"img:$docId"); val h2 = hex(h1); val h3 = hex(h2); val h4 = hex(h3)
-    (h1 + h2 + h3 + h4).grouped(2).map(Integer.parseInt(_, 16)).toArray
+    Iterator.iterate(hex(seed))(hex).take(4).mkString
+      .grouped(2).map(Integer.parseInt(_, 16)).toArray
+  }
+
+  /** Little-endian 32-bit write of `v` at `out(o)` (BMP and WAV headers). */
+  private def putLe32(out: Array[Byte], o: Int, v: Int): Unit = {
+    out(o) = v.toByte; out(o + 1) = (v >> 8).toByte
+    out(o + 2) = (v >> 16).toByte; out(o + 3) = (v >> 24).toByte
   }
 
   /** REAL BMP encoding of [[pixelBytes]]: 24bpp bottom-up, 8×8 (row
@@ -300,10 +296,7 @@ object Multimodal {
   def encodeBmp8x8(docId: Long): Array[Byte] = {
     val px = pixelBytes(docId)
     val out = new Array[Byte](54 + 192)
-    def le32(o: Int, v: Int): Unit = {
-      out(o) = v.toByte; out(o + 1) = (v >> 8).toByte
-      out(o + 2) = (v >> 16).toByte; out(o + 3) = (v >> 24).toByte
-    }
+    def le32(o: Int, v: Int): Unit = putLe32(out, o, v)
     out(0) = 'B'; out(1) = 'M'; le32(2, 54 + 192); le32(10, 54)
     le32(14, 40); le32(18, 8); le32(22, 8)
     out(26) = 1; out(28) = 24; le32(34, 192)
@@ -371,13 +364,7 @@ object Multimodal {
     * signed samples from an md5 hex chain (h1 = md5("wav:" + id),
     * h2 = md5(h1), …, 4 blocks = 64 bytes) — the same chain an oracle
     * walks with SQL `md5()`, mirroring [[pixelBytes]]. */
-  def audioSampleBytes(docId: Long): Array[Int] = {
-    val md = MessageDigest.getInstance("MD5")
-    def hex(s: String): String =
-      md.digest(s.getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
-    val h1 = hex(s"wav:$docId"); val h2 = hex(h1); val h3 = hex(h2); val h4 = hex(h3)
-    (h1 + h2 + h3 + h4).grouped(2).map(Integer.parseInt(_, 16)).toArray
-  }
+  def audioSampleBytes(docId: Long): Array[Int] = md5HexChain(s"wav:$docId")
 
   /** REAL WAV encoding of [[audioSampleBytes]]: canonical 44-byte
     * RIFF/WAVE header (PCM, mono, 8 kHz, 16-bit LE) + the 64 data
@@ -387,10 +374,7 @@ object Multimodal {
   def encodeWavPcm16(docId: Long): Array[Byte] = {
     val data = audioSampleBytes(docId) // 64 bytes = 32 LE16 samples
     val out = new Array[Byte](44 + data.length)
-    def le32(o: Int, v: Int): Unit = {
-      out(o) = v.toByte; out(o + 1) = (v >> 8).toByte
-      out(o + 2) = (v >> 16).toByte; out(o + 3) = (v >> 24).toByte
-    }
+    def le32(o: Int, v: Int): Unit = putLe32(out, o, v)
     def tag(o: Int, s: String): Unit = s.zipWithIndex.foreach {
       case (c, i) => out(o + i) = c.toByte
     }

@@ -7,7 +7,8 @@ import graft.schemas.Schemas
   * table as a temp view so reference users' ad-hoc SQL (demo.ipynb's
   * analytics and cell-26 invariant checks, `SELECT ... FROM dim_user
   * WHERE current_flag = 1`, error-log rollups) runs unchanged via
-  * `spark.sql(...)`. Also registers the graft native functions.
+  * `spark.sql(...)`. The graft native functions come with the session
+  * (`graft.functions.GraftExtensions`).
   */
 object Olap {
 
@@ -28,6 +29,5 @@ object Olap {
     tables.foreach { case (name, schema) =>
       run.table(name, schema).createOrReplaceTempView(name)
     }
-    graft.functions.GraftFunctions.register(spark)
   }
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.io.Fs
 import graft.ops.Dedup
 import graft.text.TextOps
 
@@ -21,9 +22,9 @@ import graft.text.TextOps
   * the documents table (relative path + length + mtime of every data file),
   * not the dir string — a mutated input can never serve stale labels, which
   * is the contract a production pipeline artifact needs. The memo is
-  * JVM-local and scratch dirs are deleted on [[reset]] AND by a JVM
-  * shutdown hook (Verify exits without calling reset; at a real scale
-  * factor a leaked artifact is corpus-sized). [[graft.Bench]] calls
+  * JVM-local and scratch dirs are deleted on [[reset]] AND at JVM exit
+  * (Verify exits without calling reset; at a real scale factor a leaked
+  * artifact is corpus-sized). [[graft.Bench]] calls
   * [[reset]] between timed runs so a multi-run bench pays the build exactly
   * once per run (whichever consumer runs first), keeping per-run totals
   * honest.
@@ -45,11 +46,6 @@ object ClusterLabels {
     * (0.0 when every call so far was a memo hit). */
   def buildSecondsSinceReset: Double = buildNanos.get() / 1e9
 
-  private val hooked = new java.util.concurrent.atomic.AtomicBoolean(false)
-  private def ensureShutdownHook(): Unit =
-    if (hooked.compareAndSet(false, true))
-      Runtime.getRuntime.addShutdownHook(new Thread(() => reset()))
-
   /** Content fingerprint of the build's only input (the documents table):
     * every data file's name, byte length, and mtime. Cheap (directory
     * metadata only — no data read) and exactly as strong as parquet
@@ -70,28 +66,23 @@ object ClusterLabels {
     * copy per run would fill the temp volume. */
   def reset(): Unit = {
     memo.values.forEach { p =>
-      try deleteRec(new java.io.File(p).getParentFile)
+      try Fs.deleteLocal(new java.io.File(p).getParentFile)
       catch { case _: Exception => () } // scratch cleanup is best-effort
     }
     memo.clear()
     buildNanos.set(0L)
   }
 
-  private def deleteRec(f: java.io.File): Unit = if (f != null && f.exists()) {
-    if (f.isDirectory) f.listFiles().foreach(deleteRec)
-    f.delete()
-  }
-
   def apply(s: SparkSession, dir: String): DataFrame = {
-    ensureShutdownHook()
     val path = memo.computeIfAbsent(fingerprint(dir), _ => {
-      val scratch = java.nio.file.Files.createTempDirectory("graft_cluster_labels")
+      val scratch = Fs.deleteLocalOnExit(
+        java.nio.file.Files.createTempDirectory("graft_cluster_labels").toFile)
       val out = scratch.toString + "/labels"
       // a failed build must not leak its scratch dir (only memoized paths
       // are reachable by reset)
       val t0 = System.nanoTime()
       try build(s, dir, out)
-      catch { case e: Throwable => deleteRec(scratch.toFile); throw e }
+      catch { case e: Throwable => Fs.deleteLocal(scratch); throw e }
       finally buildNanos.addAndGet(System.nanoTime() - t0)
       out
     })

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.gen.Synthetic
+import graft.io.Fs
 
 /** Staged synthetic day-1 warehouse for q180 (the oracle-checked run-log
   * query). q180 must run the REAL [[graft.pipeline.EtlRun]] against a
@@ -24,11 +25,12 @@ import graft.gen.Synthetic
   * fixture. [[stageSeconds]] lets the bench artifact attribute the
   * staging cost explicitly, à la `labels_build_s`.
   *
-  * Every temp dir this object creates is deleted by ONE JVM shutdown hook
-  * (ADVICE r10: repeated sweeps leaked a parquet warehouse per q180
-  * invocation). Warehouses cannot be deleted mid-session — the run-log
-  * DataFrame a caller holds still reads from its warehouse's audit sink —
-  * so cleanup is deferred to exit; the dirs are KB-sized.
+  * Every temp dir this object creates is deleted at JVM exit
+  * ([[graft.io.Fs.deleteLocalOnExit]]; ADVICE r10: repeated sweeps leaked
+  * a parquet warehouse per q180 invocation). Warehouses cannot be deleted
+  * mid-session — the run-log DataFrame a caller holds still reads from
+  * its warehouse's audit sink — so cleanup is deferred to exit; the dirs
+  * are KB-sized.
   */
 object EtlStage {
 
@@ -37,30 +39,21 @@ object EtlStage {
   val day = "2025-03-01"
   val (nUsers, nProducts, nTx) = (50, 20, 200)
 
-  private val created = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
   @volatile private var stagedInputs: String = null
   private val stageNanos = new java.util.concurrent.atomic.AtomicLong(0L)
-  private val hooked = new java.util.concurrent.atomic.AtomicBoolean(false)
 
   /** Seconds spent generating + writing the staged inputs (0.0 while no
     * q180 ran; constant after the first — it never re-stages). */
   def stageSeconds: Double = stageNanos.get() / 1e9
 
-  private def ensureHook(): Unit =
-    if (hooked.compareAndSet(false, true))
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        created.forEach(f => try deleteRec(f) catch { case _: Exception => () })
-      }))
-
   /** A fresh warehouse pre-populated with the staged day-1 inputs —
     * generate-once, copy-per-call. Thread-safe; the first caller pays the
     * generation, everyone pays only the KB-scale file copy. */
   def freshWarehouse(spark: SparkSession): String = synchronized {
-    ensureHook()
     if (stagedInputs == null) {
       val t0 = System.nanoTime()
-      val dir = java.nio.file.Files.createTempDirectory("graft_q180_inputs").toFile
-      created.add(dir)
+      val dir = Fs.deleteLocalOnExit(
+        java.nio.file.Files.createTempDirectory("graft_q180_inputs").toFile)
       val (badU, badP, badT) = Synthetic.invalid(spark, day, nUsers, nProducts)
       Synthetic.users(spark, nUsers).unionByName(badU)
         .write.mode("overwrite").parquet(s"$dir/users")
@@ -72,25 +65,10 @@ object EtlStage {
       stageNanos.addAndGet(System.nanoTime() - t0)
       stagedInputs = dir.toString
     }
-    val wh = java.nio.file.Files.createTempDirectory("graft_q180_wh").toFile
-    created.add(wh)
+    val wh = Fs.deleteLocalOnExit(java.nio.file.Files.createTempDirectory("graft_q180_wh").toFile)
     Seq("users", "products", "transactions").foreach { t =>
-      copyRec(new java.io.File(stagedInputs, t), new java.io.File(wh, t))
+      Fs.copyLocal(new java.io.File(stagedInputs, t), new java.io.File(wh, t))
     }
     wh.toString
-  }
-
-  private def copyRec(src: java.io.File, dst: java.io.File): Unit =
-    if (src.isDirectory) {
-      dst.mkdirs()
-      src.listFiles().foreach(f => copyRec(f, new java.io.File(dst, f.getName)))
-    } else {
-      java.nio.file.Files.copy(src.toPath, dst.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-
-  private def deleteRec(f: java.io.File): Unit = if (f != null && f.exists()) {
-    if (f.isDirectory) f.listFiles().foreach(deleteRec)
-    f.delete(): Unit
   }
 }

@@ -4,10 +4,11 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.dims.{DimDate, Scd2}
-import graft.facts.{StockHistory, TxLoad}
+import graft.facts.{StockHistory, TxLoad, TxSidecar}
 import graft.ops.{AsOfJoin, Dedup}
 import graft.gen.Synthetic
 import graft.validate.{Rules, Validator}
+import QLlm.{t, events}
 
 /** One registered query: the Spark program plus (when SQL-expressible) the
   * DuckDB oracle the driver cross-checks it against. */
@@ -23,9 +24,6 @@ final case class Qry(name: String, fn: (SparkSession, String) => DataFrame,
   */
 object QEtl {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
   /** Row count memoized per (dir, table) per JVM. Used to size q181's
     * bloom, whose zero-column count scan — cheap but not free — would
     * otherwise re-run on every invocation in a sweep (ADVICE r13). Safe
@@ -36,14 +34,34 @@ object QEtl {
   private def memoCount(s: SparkSession, dir: String, name: String): Long =
     rowCountMemo.getOrElseUpdate(s"$dir/$name", t(s, dir, name).count())
 
-  /** `events.parquet` carries TIMESTAMP(NANOS) — normalize to a µs
-    * session-zone timestamp whatever the runtime reads it as (NTZ on
-    * Spark 4.1+, nanos-long under the legacy flag). See
-    * [[graft.io.Tables.eventsMicros]]. */
-  private def events(s: SparkSession, dir: String): DataFrame =
-    graft.io.Tables.eventsMicros(s, dir)
-
   private def ymd(c: Column): Column = date_format(c, "yyyy-MM-dd")
+
+  /** q182/q183's J5 sidecar fixture: the 'F'-order history bucketed into
+    * 64 key ranges (`kb`), and the ORDERKEY-range slice of lineitem that
+    * arrives as the incoming batch. */
+  private def sidecarFixture(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val bucketW = 1L + t(s, dir, "orders")
+      .agg(max("o_orderkey")).head().getLong(0) / 64L
+    val hist = t(s, dir, "orders").filter(col("o_orderstatus") === "F")
+      .select(col("o_orderkey").as("l_orderkey"),
+        (col("o_orderkey") / bucketW).cast("long").as("kb"))
+    val incoming = t(s, dir, "lineitem")
+      .filter("l_orderkey >= 1000 AND l_orderkey < 3000")
+      .select("l_orderkey", "l_linenumber", "l_quantity")
+    (hist, incoming)
+  }
+
+  /** One bloom-index row per `kb` bucket of `hist`, from one bounded agg
+    * (collect is the sanctioned plan-literal pattern: ≤ 64 rows × ~57 KB
+    * blooms). */
+  private def bucketBlooms(hist: DataFrame): Seq[TxSidecar.Sidecar] =
+    hist.groupBy("kb").agg(
+        graft.functions.Bloom.bloomAgg(col("l_orderkey"), 65536L).as("b"),
+        min("l_orderkey").as("mn"), max("l_orderkey").as("mx"),
+        count(lit(1)).as("n"))
+      .collect().toSeq.map(r => TxSidecar.Sidecar(r.getAs[Long]("kb").toString,
+        r.getAs[Long]("kb").toString, r.getAs[Long]("mn"), r.getAs[Long]("mx"),
+        r.getAs[Long]("n"), r.getAs[Array[Byte]]("b")))
 
   // --- synthesized dirty "transactions" shared by q03/q15/q23 -----------
   // (user orphans at %11, product orphans at %13, qty -1..5 from %7,
@@ -369,24 +387,8 @@ object QEtl {
     // what makes those coincide.
     Qry("q182_anti_join_sidecar",
       (s, dir) => {
-        import graft.facts.TxSidecar
-        val bucketW = 1L + t(s, dir, "orders")
-          .agg(max("o_orderkey")).head().getLong(0) / 64L
-        val hist = t(s, dir, "orders").filter(col("o_orderstatus") === "F")
-          .select(col("o_orderkey").as("l_orderkey"),
-            (col("o_orderkey") / bucketW).cast("long").as("kb"))
-        // the whole 64-bucket index from ONE bounded agg (collect is the
-        // sanctioned plan-literal pattern: 64 rows × ~57 KB blooms)
-        val sidecars = hist.groupBy("kb").agg(
-            graft.functions.Bloom.bloomAgg(col("l_orderkey"), 65536L).as("b"),
-            min("l_orderkey").as("mn"), max("l_orderkey").as("mx"),
-            count(lit(1)).as("n"))
-          .collect().toSeq.map(r => TxSidecar.Sidecar(r.getAs[Long]("kb").toString,
-            r.getAs[Long]("kb").toString, r.getAs[Long]("mn"), r.getAs[Long]("mx"),
-            r.getAs[Long]("n"), r.getAs[Array[Byte]]("b")))
-        val incoming = t(s, dir, "lineitem")
-          .filter("l_orderkey >= 1000 AND l_orderkey < 3000")
-          .select("l_orderkey", "l_linenumber", "l_quantity")
+        val (hist, incoming) = sidecarFixture(s, dir)
+        val sidecars = bucketBlooms(hist) // the whole 64-bucket index
         val bb = TxSidecar.buildBatchBloom(incoming, "l_orderkey", 4096L)
         val hits = TxSidecar.probeHitDates(incoming, "l_orderkey", sidecars)
         Dedup.antiJoinExistingPartitionPruned(incoming, hist, "l_orderkey",
@@ -406,20 +408,9 @@ object QEtl {
     // the result at any tiering state.
     Qry("q183_anti_join_sidecar_tiered",
       (s, dir) => {
-        import graft.facts.TxSidecar
-        val bucketW = 1L + t(s, dir, "orders")
-          .agg(max("o_orderkey")).head().getLong(0) / 64L
-        val hist = t(s, dir, "orders").filter(col("o_orderstatus") === "F")
-          .select(col("o_orderkey").as("l_orderkey"),
-            (col("o_orderkey") / bucketW).cast("long").as("kb"))
+        val (hist, incoming) = sidecarFixture(s, dir)
         // hot buckets (48..63): per-bucket bloom rows, as daily rows would be
-        val hot = hist.filter(col("kb") >= 48).groupBy("kb").agg(
-            graft.functions.Bloom.bloomAgg(col("l_orderkey"), 65536L).as("b"),
-            min("l_orderkey").as("mn"), max("l_orderkey").as("mx"),
-            count(lit(1)).as("n"))
-          .collect().toSeq.map(r => TxSidecar.Sidecar(r.getAs[Long]("kb").toString,
-            r.getAs[Long]("kb").toString, r.getAs[Long]("mn"), r.getAs[Long]("mx"),
-            r.getAs[Long]("n"), r.getAs[Array[Byte]]("b")))
+        val hot = bucketBlooms(hist.filter(col("kb") >= 48))
         // cold buckets compacted: one RANGE row per 16-bucket group
         val cold = hist.filter(col("kb") < 48)
           .groupBy((col("kb") / 16).cast("long").as("g")).agg(
@@ -430,9 +421,6 @@ object QEtl {
             TxSidecar.Sidecar(s"tier$g", s"tier$g", r.getAs[Long]("mn"),
               r.getAs[Long]("mx"), r.getAs[Long]("n"), null)
           }
-        val incoming = t(s, dir, "lineitem")
-          .filter("l_orderkey >= 1000 AND l_orderkey < 3000")
-          .select("l_orderkey", "l_linenumber", "l_quantity")
         val bb = TxSidecar.buildBatchBloom(incoming, "l_orderkey", 4096L)
         val hits = TxSidecar.probeHitDates(incoming, "l_orderkey", hot ++ cold).toSet
         val scanKbs: Seq[Long] = hot.collect {

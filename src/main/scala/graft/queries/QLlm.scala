@@ -28,6 +28,20 @@ object QLlm {
   private[queries] def events(s: SparkSession, dir: String): DataFrame =
     graft.io.Tables.eventsMicros(s, dir)
 
+  /** Events with a per-user `session_num`: a new session starts at a
+    * user's first event and after every 30-minute gap (q40, q158). Both
+    * windows are user-partitioned, never a global window over raw events. */
+  private[queries] def sessionized(s: SparkSession, dir: String): DataFrame = {
+    val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    val run = Window.partitionBy("user_id").orderBy("ts", "event_id")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    events(s, dir).withColumn("prev_us", lag(unix_micros(col("ts")), 1).over(w))
+      .withColumn("new_session",
+        when(col("prev_us").isNull ||
+          unix_micros(col("ts")) - col("prev_us") > 1800000000L, 1).otherwise(0))
+      .withColumn("session_num", sum("new_session").over(run))
+  }
+
   /** documents/embeddings arrive as ONE small parquet file → one input
     * partition, but the per-row work downstream (shingling, minhash,
     * simhash, cosine — all interpreted higher-order expressions) is CPU
@@ -1062,20 +1076,10 @@ object QLlm {
 
     // gap-based sessionization (30-min inactivity breaks)
     Qry("q40_sessionize",
-      (s, dir) => {
-        val ev = events(s, dir)
-        val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        val run = Window.partitionBy("user_id").orderBy("ts", "event_id")
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ev.withColumn("prev_us", lag(unix_micros(col("ts")), 1).over(w))
-          .withColumn("new_session",
-            when(col("prev_us").isNull ||
-              unix_micros(col("ts")) - col("prev_us") > 1800000000L, 1).otherwise(0))
-          .withColumn("session_num", sum("new_session").over(run))
-          .groupBy("user_id", "session_num")
-          .agg(count(lit(1)).as("n_events"),
-            date_format(min("ts"), "yyyy-MM-dd HH:mm:ss").as("session_start"))
-      },
+      (s, dir) => sessionized(s, dir)
+        .groupBy("user_id", "session_num")
+        .agg(count(lit(1)).as("n_events"),
+          date_format(min("ts"), "yyyy-MM-dd HH:mm:ss").as("session_start")),
       Some("""WITH g AS (SELECT user_id, event_id, ts,
         |    CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
         |           OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000 THEN 1

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.text.TextOps
-import QLlm.{t, events, h64, toksSql, docsWithDups, docsWithDupsSql}
+import QLlm.{t, events, h64, toksSql, docsWithDups, docsWithDupsSql, sessionized}
 
 /** Scale-layout and distributed-analytics operators past the curation
   * surface: equi-depth binning off broadcast quantile cuts (the
@@ -636,23 +636,13 @@ object QScale {
     // raw events); per-session state is the ≤5-element sorted slice; the
     // final top-k is a TakeOrdered, not a global sort.
     Qry("q158_top_paths",
-      (s, dir) => {
-        val ev = events(s, dir)
-        val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        val run = Window.partitionBy("user_id").orderBy("ts", "event_id")
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ev.withColumn("prev_us", lag(unix_micros(col("ts")), 1).over(w))
-          .withColumn("new_session",
-            when(col("prev_us").isNull ||
-              unix_micros(col("ts")) - col("prev_us") > 1800000000L, 1).otherwise(0))
-          .withColumn("session_num", sum("new_session").over(run))
-          .groupBy("user_id", "session_num")
-          .agg(slice(array_sort(collect_list(struct(
-            col("ts"), col("event_id"), col("event_type")))), 1, 5).as("s5"))
-          .select(concat_ws(">", expr("transform(s5, x -> x.event_type)")).as("path"))
-          .groupBy("path").agg(count(lit(1)).as("n"))
-          .orderBy(desc("n"), col("path")).limit(20)
-      },
+      (s, dir) => sessionized(s, dir)
+        .groupBy("user_id", "session_num")
+        .agg(slice(array_sort(collect_list(struct(
+          col("ts"), col("event_id"), col("event_type")))), 1, 5).as("s5"))
+        .select(concat_ws(">", expr("transform(s5, x -> x.event_type)")).as("path"))
+        .groupBy("path").agg(count(lit(1)).as("n"))
+        .orderBy(desc("n"), col("path")).limit(20),
       Some("""WITH g AS (SELECT user_id, event_id, ts, event_type,
         |    CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
         |           OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000 THEN 1

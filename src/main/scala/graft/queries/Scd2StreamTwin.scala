@@ -21,12 +21,10 @@ object Scd2StreamTwin {
 
   private def mkEmail(k: Column) = concat(lit("u"), k.cast("string"), lit("@x.com"))
   private def jd(k: Column) = date_add(to_date(lit("1994-01-01")), (k % 365).cast("int"))
-  private def customer(s: SparkSession, dir: String) =
-    s.read.parquet(s"$dir/customer.parquet")
 
   /** Seed snapshot (same construction as q06's `cur`). */
   def cur(s: SparkSession, dir: String): DataFrame =
-    customer(s, dir)
+    QLlm.t(s, dir, "customer")
       .select(col("c_custkey").as("user_id"), col("c_name").as("name"),
         mkEmail(col("c_custkey")).as("email"), jd(col("c_custkey")).as("join_date"))
       .withColumn("user_sk", (col("user_id") + 1).cast("long"))
@@ -38,7 +36,7 @@ object Scd2StreamTwin {
 
   /** Wave 1 (run date [[d1]]): name changes on keys ≡ 0 (mod 10). */
   def batch1(s: SparkSession, dir: String): DataFrame =
-    customer(s, dir).filter(col("c_custkey") % 10 === 0)
+    QLlm.t(s, dir, "customer").filter(col("c_custkey") % 10 === 0)
       .select(col("c_custkey").as("user_id"),
         concat(col("c_name"), lit(" v2")).as("name"),
         mkEmail(col("c_custkey")).as("email"), jd(col("c_custkey")).as("join_date"))
@@ -46,7 +44,7 @@ object Scd2StreamTwin {
   /** Wave 2 (run date [[d2]]): disjoint name changes (≡ 5 mod 10)
     * plus brand-new members entering at [[d2]]. */
   def batch2(s: SparkSession, dir: String): DataFrame = {
-    val c = customer(s, dir)
+    val c = QLlm.t(s, dir, "customer")
     c.filter(col("c_custkey") % 10 === 5)
       .select(col("c_custkey").as("user_id"),
         concat(col("c_name"), lit(" v3")).as("name"),

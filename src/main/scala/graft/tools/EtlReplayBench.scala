@@ -90,12 +90,8 @@ object EtlReplayBench {
       case Some(dir) => // persistent: kept across runs for resume / solo A/B
         val f = new java.io.File(dir); f.mkdirs(); f
       case None =>
-        val f = java.nio.file.Files.createTempDirectory("graft_etl_replay").toFile
-        sys.addShutdownHook {
-          def rm(g: java.io.File): Unit = { if (g.isDirectory) g.listFiles().foreach(rm); g.delete(): Unit }
-          rm(f)
-        }
-        f
+        graft.io.Fs.deleteLocalOnExit(
+          java.nio.file.Files.createTempDirectory("graft_etl_replay").toFile)
     }
     def path(t: String) = s"$wh/$t"
     // regular, non-dot files under the ETL tables (the sources excluded):

@@ -26,7 +26,7 @@ object PlanCeilingGen {
     val outFile = args(1)
     val spark = graft.Session.builder(cpus = 4).getOrCreate()
     // the label-consumer family materializes the shared closure at
-    // construction; build it once up front (PlanAudit discipline)
+    // construction; build it once up front
     try graft.queries.ClusterLabels(spark, sfDir)
     catch { case e: Throwable => System.err.println(s"[ceilings] labels: $e") }
     val sb = new StringBuilder

@@ -64,7 +64,7 @@ object ScaleGen {
     // at a real deployment these would be HDFS copies or views)
     val copyOnly = Seq("region", "nation", "customer", "supplier", "part")
     copyOnly.foreach { t =>
-      copyRec(new java.io.File(s"$src/$t.parquet"), new java.io.File(s"$out/$t.parquet"))
+      graft.io.Fs.copyLocal(new java.io.File(s"$src/$t.parquet"), new java.io.File(s"$out/$t.parquet"))
     }
     scaleFacts(spark, src, out, k)
     scaleDocuments(spark, src, out, k)
@@ -159,13 +159,4 @@ object ScaleGen {
     while (p < n) p *= 10
     p
   }
-
-  private[tools] def copyRec(src: java.io.File, dst: java.io.File): Unit =
-    if (src.isDirectory) {
-      dst.mkdirs()
-      src.listFiles().foreach(f => copyRec(f, new java.io.File(dst, f.getName)))
-    } else {
-      java.nio.file.Files.copy(src.toPath, dst.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
 }

@@ -21,9 +21,6 @@ object VectorOps {
     * reproducible across engines; double is (≤ 1 ulp for 64-dim dots). */
   private def d(c: Column): Column = transform(c, x => x.cast("double"))
 
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(d(a), d(b), (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-
   def norm(a: Column): Column =
     sqrt(aggregate(d(a), lit(0.0), (acc, x) => acc + x * x))
 
