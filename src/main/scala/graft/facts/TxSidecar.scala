@@ -111,7 +111,7 @@ object TxSidecar {
     def isEmpty: Boolean = metas.isEmpty && factDates.isEmpty
   }
 
-  /** A resolved prune decision, handed to [[TxLoad.load]]: the fact
+  /** A resolved prune decision, handed to [[TxLoad.tag]]: the fact
     * partitions the anti-join must read (probe hits ∪ uncovered
     * partitions) and the batch bloom to row-prune inside them. An empty
     * `scanDates` means the whole history read is skipped. */

@@ -101,11 +101,16 @@ object Dedup {
     * `duplicate_tx_id` warnings.
     */
   def firstWins(df: DataFrame, pk: Seq[String], order: Seq[Column]): (DataFrame, DataFrame) = {
-    val w = Window.partitionBy(pk.map(col): _*).orderBy(order: _*)
-    val ranked = df.withColumn("dedup_rn", row_number().over(w))
+    val ranked = firstWinsRank(df, pk, order)
     (ranked.filter(col("dedup_rn") === 1).drop("dedup_rn"),
       ranked.filter(col("dedup_rn") > 1).drop("dedup_rn"))
   }
+
+  /** The one window of [[firstWins]], unsplit: `df` plus its `dedup_rn`
+    * (1 = the kept row of its PK). */
+  def firstWinsRank(df: DataFrame, pk: Seq[String], order: Seq[Column]): DataFrame =
+    df.withColumn("dedup_rn",
+      row_number().over(Window.partitionBy(pk.map(col): _*).orderBy(order: _*)))
 
   /** Change-only snapshot: keep a row only when its value differs from the
     * key's previous value in time order (reference's stock history — "last

@@ -132,7 +132,7 @@ final class EtlRun(spark: SparkSession, warehouse: String) {
     var notes = ""
     // every frame this run caches, unpersisted in the outer finally: a
     // long-lived session replaying consecutive days would otherwise (a)
-    // accumulate three pinned frames per run and (b) serve DAY-OLD data
+    // accumulate pinned frames run after run and (b) serve DAY-OLD data
     // to the next run — the cached annotate plan is structurally identical
     // across days (same path, same rules), so Spark's CacheManager
     // substitutes yesterday's rows for today's extract. Found by the
@@ -202,14 +202,16 @@ final class EtlRun(spark: SparkSession, warehouse: String) {
       // snapshot only when there are any — a re-run writes no dim file.
       //
       // INDEPENDENT stages run CONCURRENTLY (the production-DAG pattern a
-      // scheduler would apply): dim_user ∥ dim_product first, then — once
-      // both snapshots are readable — fact_stock ∥ fact_tx ∥ dim_date ∥
-      // error_log. No stage in a group reads a table another group member
-      // writes, so per-table staged-commit semantics (L2) are untouched;
-      // a failure in any branch is rethrown after ALL branches settle, so
-      // the `failed` run-log row still comes last (L1). Wall win is real
-      // at every scale (the driver plans ~10 actions; serially that
-      // planning alone was ~2 s at fixture size) and bounded by the
+      // scheduler would apply), each started as early as its inputs allow:
+      // dim_user ∥ dim_product ∥ fact_plan (the J5 probe) first, then —
+      // once both snapshots are readable — fact_stock ∥ fact_tx ∥
+      // dim_date ∥ error_log. No stage in a group reads a table another
+      // group member writes (fact_plan writes nothing and reads no
+      // dimension), so per-table staged-commit semantics (L2) are
+      // untouched; a failure in any branch is rethrown after ALL branches
+      // settle, so the `failed` run-log row still comes last (L1). Wall
+      // win is real at every scale (the driver plans ~10 actions; serially
+      // that planning alone was ~2 s at fixture size) and bounded by the
       // slowest branch instead of the sum.
       val userDimSpec = Scd2(Seq("user_id"), Seq("name", "email"), "user_sk", Seq("join_date"))
       val curUserDim = table("dim_user", Schemas.dimUser)
@@ -221,14 +223,14 @@ final class EtlRun(spark: SparkSession, warehouse: String) {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      def awaitAll[T](fs: Seq[scala.concurrent.Future[T]]): Seq[T] = {
+      def awaitAll(fs: scala.concurrent.Future[Any]*): Unit = {
         // settle every branch before surfacing the first failure — the
         // finally block must not race still-running sibling actions
         val settled = fs.map(f => scala.util.Try(
           scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)))
         settled.collectFirst { case scala.util.Failure(e) => throw e }
-        settled.map(_.get)
       }
+      def got[T](f: scala.concurrent.Future[T]): T = f.value.get.get
       val (userInserted, productInserted, stockInserted, txInserted) =
         try {
           val fUser = scala.concurrent.Future(stage("dim_user") {
@@ -240,29 +242,20 @@ final class EtlRun(spark: SparkSession, warehouse: String) {
             productDimSpec.persist(curProductDim,
               validProducts.drop("stock"), today, to_date(lit(today)), path("dim_product"))
           })
-          val Seq(uIns, pIns) = awaitAll(Seq(fUser, fProduct))
-
-          val dimUserNow = table("dim_user", Schemas.dimUser)
-          val dimProductNow = table("dim_product", Schemas.dimProduct)
-
-          // ---- FACT: stock history (change-only snapshot)
-          val (stockRows, stockWarnings) = StockHistory.load(
-            validProducts, dimProductNow, table("fact_stock_history", Schemas.factStockHistory), today)
-          // ---- FACT: transactions (anti-join + PIT + first-wins)
-          // labeled: the load's PLANNING is not action-free (the sidecar
-          // state read, the single-pass batch bloom build and the id
-          // probe all run here) — without a stage label those jobs land
-          // in wall_s but in no stage_s, silently understating the J5
-          // path in replay attribution (VERDICT r14 "what's wrong" #1).
-          //
-          // J5 scale path (VERDICT r15 target): instead of scanning every
-          // historical transaction_id per run, probe the per-load_date
-          // id sidecars (graft.facts.TxSidecar) and anti-join against
-          // ONLY the partitions that could contain an incoming id — zero
-          // history bytes on a disjoint-id day. Partitions without a
+          // ---- FACT PLAN: the J5 probe (VERDICT r15 target). Instead of
+          // scanning every historical transaction_id per run, probe the
+          // per-load_date id sidecars (graft.facts.TxSidecar) and anti-join
+          // against ONLY the partitions that could contain an incoming id —
+          // zero history bytes on a disjoint-id day. Partitions without a
           // sidecar row (pre-sidecar warehouse) are always scanned, so
-          // results are identical on any warehouse state.
-          val (txFacts, txWarnings, sidecarRowDf, sidecarState) = stage("fact_plan") {
+          // results are identical on any warehouse state. It reads
+          // validTx, the sidecar table and the fact partition listing —
+          // no dimension — and writes nothing, so it runs beside the
+          // dimension merges. Labeled: the sidecar state read, the
+          // single-pass batch bloom build and the id probe are jobs, and
+          // unlabeled they would land in wall_s but in no stage_s (VERDICT
+          // r14 "what's wrong" #1).
+          val fProbe = scala.concurrent.Future(stage("fact_plan") {
             val st = graft.facts.TxSidecar.readState(
               spark, path(graft.facts.TxSidecar.tableName), path("fact_transactions"))
             // bloom sizing: 2× the last run's inserted count (BOOTSTRAP: the
@@ -284,15 +277,34 @@ final class EtlRun(spark: SparkSession, warehouse: String) {
             // batch is NOT the bounded daily increment the design assumes
             // (or ids are adversarially interleaved) — the run row's notes
             // flag it instead of waiting for an sf100 sweep.
-            notes = s"j5:path=sidecar;overlap=$nOverlap;hit=${hits.size};" +
+            val j5Notes = s"j5:path=sidecar;overlap=$nOverlap;hit=${hits.size};" +
               s"uncovered=${st.uncoveredDates.size};" +
               s"scan=${res.scanDates.size}/${res.allDates};batch_ids=${bb.map(_.nRows).getOrElse(0L)}" +
               (if (res.ineffective) ";ineffective=1" else "")
-            val (f, w, _) = TxLoad.load(validTx, dimUserNow, dimProductNow,
-              table("fact_transactions", Schemas.factTransactions), today,
-              sidecarPrune = Some(res.prune(bb.map(_.bloom))))
-            (f, w, bb.map(graft.facts.TxSidecar.sidecarRow(spark, today, _)), st)
-          }
+            (st, bb, res, j5Notes)
+          })
+          awaitAll(fUser, fProduct, fProbe)
+          val (sidecarState, batchBloom, j5, j5Notes) = got(fProbe)
+          notes = j5Notes
+
+          val dimUserNow = table("dim_user", Schemas.dimUser)
+          val dimProductNow = table("dim_product", Schemas.dimProduct)
+
+          // ---- FACT: stock history (change-only snapshot)
+          val (stockRows, stockWarnings) = StockHistory.load(
+            validProducts, dimProductNow, table("fact_stock_history", Schemas.factStockHistory), today)
+          // ---- FACT: transactions (anti-join + PIT + first-wins), one
+          // evaluation for both sinks: fact_tx and error_log read the one
+          // cached tagged frame instead of each planning and running the
+          // anti-join, both PIT broadcasts and the window. It holds the
+          // day's increment only, and its plan embeds the `date = today`
+          // extract literal, so the day-reuse trap above cannot serve it
+          // to another day.
+          val tagged = TxLoad.tag(validTx, dimUserNow, dimProductNow,
+            table("fact_transactions", Schemas.factTransactions),
+            sidecarPrune = Some(j5.prune(batchBloom.map(_.bloom)))).cache()
+          cached += tagged
+          val (txFacts, txWarnings) = TxLoad.split(tagged, today)
           // ---- AUDIT (S9/S10) — the warnings derive from the LOAD INPUTS,
           // not the written facts, so this branch is independent of the
           // appends.
@@ -307,7 +319,8 @@ final class EtlRun(spark: SparkSession, warehouse: String) {
             // sidecar covering ids that never landed — a superset, which
             // over-scans but never violates the no-false-negative
             // contract (TxSidecar's crash-ordering invariant)
-            sidecarRowDf.foreach(r => write(r, graft.facts.TxSidecar.tableName))
+            batchBloom.foreach(b =>
+              write(graft.facts.TxSidecar.sidecarRow(spark, today, b), graft.facts.TxSidecar.tableName))
             append(txFacts, "fact_transactions", Seq("load_date"))
           })
           // dim_date back-fill (etl.py:320-324, 431) from the calendar: the
@@ -320,13 +333,13 @@ final class EtlRun(spark: SparkSession, warehouse: String) {
                 .filter(col("date_id") === DimDate.dateId(todayDate)).isEmpty)
               write(DimDate.fromDates(spark.range(0, 1, 1, 1).select(todayDate.as("d")), col("d"))
                 .select(Schemas.dimDate.fieldNames.map(col).toSeq: _*), "dim_date")
-            Row.empty
           })
           val fErrors = scala.concurrent.Future(stage("error_log") {
             def n(sev: String) = coalesce(sum(when(col("severity") === sev, 1L).otherwise(0L)), lit(0L))
             append(allErrors, "etl_error_log", metrics = Seq(n("error").as("e"), n("warning").as("w")))
           })
-          val Seq(stock, tx, _, errors) = awaitAll(Seq(fStock, fTx, fDates, fErrors))
+          awaitAll(fStock, fTx, fDates, fErrors)
+          val errors = got(fErrors)
           nErrors = errors.getLong(1)
           nWarnings = errors.getLong(2)
           // ---- INDEX TIERING (after the day's sidecar row landed): roll
@@ -343,7 +356,7 @@ final class EtlRun(spark: SparkSession, warehouse: String) {
             notes += s";tier=$nCold->$nTiers"
             spark.catalog.refreshByPath(path(graft.facts.TxSidecar.tableName))
           }
-          (uIns, pIns, stock.getLong(0), tx.getLong(0))
+          (got(fUser), got(fProduct), got(fStock).getLong(0), got(fTx).getLong(0))
         } finally pool.shutdown()
 
       counts = Map(

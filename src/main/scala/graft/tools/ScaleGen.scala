@@ -85,8 +85,8 @@ object ScaleGen {
     // replicas. 1e7 floor keeps any derived-id arithmetic downstream
     // (+10⁴-style synthetic offsets) inside a replica's band.
     val maxOk = math.max(
-      ord.agg(max("o_orderkey")).head.getLong(0),
-      li.agg(max("l_orderkey")).head.getLong(0))
+      ord.agg(max("o_orderkey")).head().getLong(0),
+      li.agg(max("l_orderkey")).head().getLong(0))
     val off = math.max(pow10Ceil(maxOk + 1), 10000000L)
     replicate(ord, k)
       .withColumn("o_orderkey", col("o_orderkey") + col("rep") * off)
@@ -106,7 +106,7 @@ object ScaleGen {
     // derived ids of replica r stay inside r's band (a 10000 offset made
     // replica 1's ids collide with replica 0's derived dups — observed as
     // q153 returning 0 rows on the scaled corpus)
-    val off = math.max(pow10Ceil(base.agg(max("doc_id")).head.getLong(0) + 1), 1000000L)
+    val off = math.max(pow10Ceil(base.agg(max("doc_id")).head().getLong(0) + 1), 1000000L)
     val scaled = replicate(base, k)
       .select(
         (col("doc_id") + col("rep") * off).as("doc_id"),
@@ -121,7 +121,7 @@ object ScaleGen {
 
   private def scaleEmbeddings(spark: SparkSession, src: String, out: String, k: Int): Unit = {
     val base = spark.read.parquet(s"$src/embeddings.parquet")
-    val off = pow10Ceil(base.agg(max("vec_id")).head.getLong(0) + 1)
+    val off = pow10Ceil(base.agg(max("vec_id")).head().getLong(0) + 1)
     val scaled = replicate(base, k)
       .select(
         (col("vec_id") + col("rep") * off).as("vec_id"),
@@ -140,8 +140,8 @@ object ScaleGen {
 
   private def scaleEvents(spark: SparkSession, src: String, out: String, k: Int): Unit = {
     val base = graft.io.Tables.eventsMicros(spark, src)
-    val eOff = pow10Ceil(base.agg(max("event_id")).head.getLong(0) + 1)
-    val uOff = pow10Ceil(base.agg(max("user_id")).head.getLong(0) + 1)
+    val eOff = pow10Ceil(base.agg(max("event_id")).head().getLong(0) + 1)
+    val uOff = pow10Ceil(base.agg(max("user_id")).head().getLong(0) + 1)
     val scaled = replicate(base, k)
       .select(
         (col("event_id") + col("rep") * eOff).as("event_id"),

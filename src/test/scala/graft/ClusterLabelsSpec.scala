@@ -46,7 +46,7 @@ class ClusterLabelsSpec extends SparkSpec {
 
   test("memo keys on input CONTENT: a mutated documents table rebuilds") {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val dir = Files.createTempDirectory("graft_cl_fp")
+    val dir = tempDir("graft_cl_fp")
     val doc = dir.resolve("documents.parquet")
     Files.copy(Paths.get(s"$sfDir/documents.parquet"), doc,
       StandardCopyOption.REPLACE_EXISTING)
@@ -66,7 +66,7 @@ class ClusterLabelsSpec extends SparkSpec {
     val tmpRoot = new java.io.File(System.getProperty("java.io.tmpdir"))
     def scratchDirs = tmpRoot.listFiles()
       .filter(_.getName.startsWith("graft_cluster_labels")).map(_.getName).toSet
-    val dir = Files.createTempDirectory("graft_cl_bad")
+    val dir = tempDir("graft_cl_bad")
     Files.writeString(dir.resolve("documents.parquet"), "not parquet")
     val before = scratchDirs
     intercept[Throwable] { ClusterLabels(spark, dir.toString).count() }

@@ -39,7 +39,7 @@ class DedupSpec extends SparkSpec {
     // history must be a REAL scan: over a LocalRelation the optimizer
     // evaluates the bloom probe at plan time (ConvertToLocalRelation)
     // and the assertion would see nothing
-    val dir = java.nio.file.Files.createTempDirectory("graft_j5_bloom").toString
+    val dir = tempDir("graft_j5_bloom").toString
     try {
       Seq(6L).toDF("tx_id").write.mode("overwrite").parquet(dir)
       val incoming = Seq((6L, "loaded"), (8L, "new")).toDF("tx_id", "v")

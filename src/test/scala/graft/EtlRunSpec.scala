@@ -16,7 +16,7 @@ import graft.schemas.Schemas
 class EtlRunSpec extends SparkSpec {
   import spark.implicits._
 
-  private val wh = Files.createTempDirectory("graft_e2e").toString
+  private val wh = tempDir("graft_e2e").toString
   private lazy val etl = new EtlRun(spark, wh)
 
   private val nUsers = 50
@@ -188,7 +188,7 @@ class EtlRunSpec extends SparkSpec {
   }
 
   test("sink policy: every computed sink lands one part-file per day at fixture size") {
-    val whS = Files.createTempDirectory("graft_e2e_sinks").toString
+    val whS = tempDir("graft_e2e_sinks").toString
     val etlS = new EtlRun(spark, whS)
     def parquetFiles = fileListing(whS).keySet.filter(_.endsWith(".parquet"))
     def newFilesByTable(run: => Unit): Map[String, Int] = {
@@ -219,7 +219,7 @@ class EtlRunSpec extends SparkSpec {
   }
 
   test("append: an empty frame observes zeros above the rebalance and writes no part-file") {
-    val whE = Files.createTempDirectory("graft_e2e_empty").toString
+    val whE = tempDir("graft_e2e_empty").toString
     // a computed frame with upstream partitions and no rows, as a re-run's
     // fact increment: the observation must still report, as zeros
     val empty = spark.range(0, 100, 1, 4).filter(col("id") < 0)
@@ -265,7 +265,7 @@ class EtlRunSpec extends SparkSpec {
     // simulate a crash AFTER job commit but MID-promotion: staging holds a
     // _SUCCESS marker plus one not-yet-moved part-file
     val strayDf = tbl("etl_error_log").limit(3).withColumn("run_id", lit(90L))
-    val tmpOut = Files.createTempDirectory("graft_stray").toString
+    val tmpOut = tempDir("graft_stray").toString
     strayDf.write.mode("overwrite").parquet(tmpOut)
     Files.createDirectories(staging)
     Files.createFile(staging.resolve("_SUCCESS"))
@@ -282,8 +282,9 @@ class EtlRunSpec extends SparkSpec {
 
     // a MARKERLESS staging dir is a dead job's debris: dropped, not promoted
     Files.createDirectories(staging)
-    strayDf.write.mode("overwrite").parquet(tmpOut + "_2")
-    val stray2 = strayFileFrom(tmpOut + "_2")
+    val tmpOut2 = tempDir("graft_stray").toString
+    strayDf.write.mode("overwrite").parquet(tmpOut2)
+    val stray2 = strayFileFrom(tmpOut2)
     Files.move(stray2, staging.resolve("dead-" + stray2.getFileName))
     val extra2 = tbl("etl_error_log").limit(1).withColumn("run_id", lit(92L))
     etl.append(extra2, "etl_error_log")
@@ -318,7 +319,7 @@ class EtlRunSpec extends SparkSpec {
   }
 
   test("torn dimension swap, then a zero-change day: table() heals and nothing is rewritten") {
-    val whT = Files.createTempDirectory("graft_e2e_torn").toString
+    val whT = tempDir("graft_e2e_torn").toString
     val etlT = new EtlRun(spark, whT)
     writeDay1(whT)
     etlT.run(day1)
@@ -357,6 +358,11 @@ class EtlRunSpec extends SparkSpec {
   test("a failing run still writes a 'failed' run-log row") {
     day1Run
     val runsBefore = tbl("etl_run_log").count()
+    val sidecars = graft.facts.TxSidecar.tableName
+    def sidecarRows = etl.table(sidecars, graft.facts.TxSidecar.schema).count()
+    def factDates = tbl("fact_transactions").select("load_date").distinct().collect().toSet
+    val (sidecarsBefore, factDatesBefore, errorsBefore) =
+      (sidecarRows, factDates, tbl("etl_error_log").count())
     // break the source: user_id written as STRING clashes with the LongType
     // read schema — the scan throws mid-run (missing columns would NOT
     // fail: schema-on-read nulls them and validation just rejects rows)
@@ -367,6 +373,27 @@ class EtlRunSpec extends SparkSpec {
     val log = tbl("etl_run_log").orderBy(col("run_id").desc).limit(1).collect().head
     assert(tbl("etl_run_log").count() === runsBefore + 1)
     assert(log.getAs[String]("status") === "failed")
+    // the run row is all the failed day leaves behind
+    assert(sidecarRows === sidecarsBefore)
+    assert(factDates === factDatesBefore)
+    assert(tbl("etl_error_log").count() === errorsBefore)
+  }
+
+  test("a run leaves the session's cache as it found it") {
+    // EtlRun caches its validated extracts and the tagged fact subtree for
+    // the day; a frame left registered would be substituted into the next
+    // day's structurally equal plans (the day-reuse trap). Other suites
+    // in this JVM may leave frames cached, so start from an empty cache.
+    spark.catalog.clearCache()
+    val cm = spark.sharedState.cacheManager
+    val whC = tempDir("graft_e2e_cache").toString
+    writeDay1(whC)
+    val etlC = new EtlRun(spark, whC)
+    for (day <- Seq(day1, day1)) { // a new day, then a re-run that scans history
+      assert(cm.isEmpty)
+      assert(etlC.run(day).first().getAs[String]("status") === "success")
+      assert(cm.isEmpty, s"run of $day left frames cached")
+    }
   }
 
   test("multi-day replay: five drifting days re-version dims exactly and accumulate facts without reloads") {
@@ -375,7 +402,7 @@ class EtlRunSpec extends SparkSpec {
     // this pins the N-day STATE arithmetic at fixture scale. Every
     // expectation below is derived INDEPENDENTLY of the pipeline, from
     // the seeded drift model itself (which ids mutate on which day).
-    val whM = Files.createTempDirectory("graft_e2e_multiday").toString
+    val whM = tempDir("graft_e2e_multiday").toString
     val etlM = new EtlRun(spark, whM)
     val nU = 40; val nP = 15; val txPerDay = 60; val nDays = 5
     def day(d: Int) = java.time.LocalDate.parse("2025-03-01").plusDays(d.toLong).toString
@@ -503,7 +530,7 @@ class EtlRunSpec extends SparkSpec {
   }
 
   test("J5 sidecar tiering e2e: mid-replay compaction keeps re-runs idempotent at month granularity") {
-    val whT = Files.createTempDirectory("graft_e2e_tier").toString
+    val whT = tempDir("graft_e2e_tier").toString
     val etlT = new EtlRun(spark, whT)
     val nU = 20; val nP = 8; val txPerDay = 30
     // two cold months' worth of days, then a far-future day that compacts

@@ -26,6 +26,21 @@ class FactLoadSpec extends SparkSpec {
 
   private val emptyFact = Seq.empty[Long].toDF("transaction_id")
 
+  /** Run `body` with the given session confs, then restore them. */
+  private def withConf[T](conf: (String, String)*)(body: => T): T = {
+    val before = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  private val onePartitionAqe =
+    Seq("spark.sql.shuffle.partitions" -> "1", "spark.sql.adaptive.enabled" -> "true")
+  private val sevenPartitionsNoAqe = Seq("spark.sql.shuffle.partitions" -> "7",
+    "spark.sql.adaptive.enabled" -> "false", "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+
   test("orphan user is warned and skipped BEFORE the product probe") {
     val batch = tx((1L, "2024-02-01", 99L, 999L, 1, 10.0)) // both orphan
     val (facts, warnings, _) = TxLoad.load(batch, dimUser, dimProduct, emptyFact, "2024-02-02")
@@ -82,7 +97,7 @@ class FactLoadSpec extends SparkSpec {
     // partitioned history: evens ≤ 600 live in two load_date partitions;
     // the sidecar-pruned load must match the plain path row-for-row,
     // including duplicate warnings for blocked ids
-    val dir = java.nio.file.Files.createTempDirectory("graft_j5_sidecar").toString
+    val dir = tempDir("graft_j5_sidecar").toString
     try {
       import graft.facts.TxSidecar
       val hist = ((2L to 300L by 2).map((_, "2024-01-01")) ++
@@ -133,27 +148,74 @@ class FactLoadSpec extends SparkSpec {
         (63L, "2024-02-01", 10L, 100L, 1, 10.0))): _*) // already loaded
       .repartition(col("quantity"))
     val existing = Seq(63L).toDF("transaction_id")
-    def loadUnder(conf: (String, String)*): Seq[Seq[Seq[Any]]] = {
-      val before = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
-      conf.foreach { case (k, v) => spark.conf.set(k, v) }
-      try {
-        val (f, w, d) = TxLoad.load(batch, dimUser, dimProduct, existing, "2024-02-04")
-        Seq(sortedRows(f), sortedRows(w), sortedRows(d))
-      } finally before.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
+    def loadUnder(conf: Seq[(String, String)]): Seq[Seq[Seq[Any]]] = withConf(conf: _*) {
+      val (f, w, d) = TxLoad.load(batch, dimUser, dimProduct, existing, "2024-02-04")
+      Seq(sortedRows(f), sortedRows(w), sortedRows(d))
     }
-    val a = loadUnder("spark.sql.shuffle.partitions" -> "1",
-      "spark.sql.adaptive.enabled" -> "true")
-    val b = loadUnder("spark.sql.shuffle.partitions" -> "7",
-      "spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    val a = loadUnder(onePartitionAqe)
+    val b = loadUnder(sevenPartitionsNoAqe)
     assert(b === a)
     val Seq(facts, warnings, _) = a
     assert(facts.size === 60) // one winner per PK; 63 blocked, 61/62 orphaned
     assert(warnings.map(_(3)).groupBy(identity).view.mapValues(_.size).toMap ===
       Map("duplicate_tx_id" -> 60, "orphan_user" -> 1, "orphan_product" -> 1))
+  }
+
+  test("split of a cached tag equals the load: every kind, both prune states, 1 and 7 partitions") {
+    // one evaluation for both sinks: EtlRun caches TxLoad.tag and splits
+    // it. Tx 1's orphan-user line shares (transaction_id, product_sk) with
+    // a resolved line and sorts before it on the tiebreak (user 5 < 10):
+    // a window over all rows that let the orphan rank first would turn
+    // the resolved line into a duplicate and lose the fact.
+    val dir = tempDir("graft_tag_split").toString
+    Seq((6L, "2024-01-01")).toDF("transaction_id", "load_date")
+      .withColumn("load_date", to_date(col("load_date")))
+      .write.partitionBy("load_date").parquet(s"$dir/fact")
+    val existing = spark.read.parquet(s"$dir/fact")
+    val batch = tx(
+      (1L, "2024-02-01", 10L, 100L, 1, 10.0),
+      (1L, "2024-02-01", 5L, 100L, 1, 5.0), // orphan user beside a resolved line
+      (2L, "2024-02-01", 99L, 100L, 1, 10.0), // orphan user
+      (3L, "2024-02-01", 10L, 999L, 1, 10.0), // orphan product
+      (4L, "2024-02-01", 99L, 999L, 1, 10.0), // both missing: warns only about the user
+      (5L, "2024-02-01", 10L, 100L, 2, 20.0), // PK duplicate, other columns differ
+      (5L, "2024-02-01", 10L, 100L, 1, 10.0),
+      (6L, "2024-02-01", 10L, 100L, 1, 10.0)) // already loaded
+      .repartition(col("quantity"))
+    val bloom = graft.facts.TxSidecar.buildBatchBloom(batch, "transaction_id", 4096).get.bloom
+    // the probe's two outcomes: the one partition holding tx 6 is scanned,
+    // or every partition is pruned (the batch then shares no id with history)
+    val pruneStates = Seq(
+      "scan" -> (batch, graft.facts.TxSidecar.Prune(Seq("2024-01-01"), Some(bloom))),
+      "pruned" -> (batch.filter(col("transaction_id") =!= 6L),
+        graft.facts.TxSidecar.Prune(Nil, None)))
+    val today = "2024-02-04"
+    val expectedFacts = Seq(1L, 5L).map(id =>
+      Seq(id, 1L, 5L, 20240201, 1, 10.0, "visa", "success", java.sql.Date.valueOf(today)))
+    val expectedWarnings = Seq(
+      (1L, "orphan_user", "User 5 not in dim_user for transaction 1, skipping"),
+      (2L, "orphan_user", "User 99 not in dim_user for transaction 2, skipping"),
+      (3L, "orphan_product", "Product 999 not in dim_product for transaction 3, skipping"),
+      (4L, "orphan_user", "User 99 not in dim_user for transaction 4, skipping"),
+      (5L, "duplicate_tx_id", "Could not insert transaction 5: duplicate key"))
+      .map { case (id, kind, msg) =>
+        Seq("transaction", "fact_transactions", id.toString, kind, "warning", msg) }
+    for {
+      conf <- Seq(onePartitionAqe, sevenPartitionsNoAqe)
+      (state, (in, prune)) <- pruneStates
+    } withConf(conf: _*) {
+      val clue = s"$state under $conf"
+      val (loadF, loadW, _) = TxLoad.load(in, dimUser, dimProduct, existing, today, Some(prune))
+      val tagged = TxLoad.tag(in, dimUser, dimProduct, existing, Some(prune)).cache()
+      try {
+        val (f, w) = TxLoad.split(tagged, today)
+        assert(sortedRows(f) === expectedFacts, clue)
+        assert(sortedRows(w) === expectedWarnings, clue)
+        assert(sortedRows(loadF) === expectedFacts, clue)
+        assert(sortedRows(loadW) === expectedWarnings, clue)
+        assert(f.schema === loadF.schema && w.schema === loadW.schema, clue)
+      } finally tagged.unpersist(blocking = true)
+    }
   }
 
   test("stock orphan (no current dim row) is warned and skipped") {

@@ -34,7 +34,7 @@ class FaultToleranceLocalClusterSpec extends AnyFunSuite {
   test("a query survives losing an executor mid-flight with an identical result") {
     val classes = Seq("target/scala-2.13/classes", "target/scala-2.13/test-classes")
       .map(p => new java.io.File(p).getAbsolutePath).mkString(":")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ft-ckpt")
+    val ckpt = SparkSpec.tempDir("graft-ft-ckpt")
     val s = Session.builder(cpus = 4).master("local-cluster[2,2,1536]")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.executor.extraClassPath", classes)

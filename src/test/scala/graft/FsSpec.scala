@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions.col
 
@@ -15,7 +14,7 @@ class FsSpec extends SparkSpec {
 
   private def conf = spark.sessionState.newHadoopConf()
   private def freshTable(): String =
-    Files.createTempDirectory("graft_fs").toString + "/snap"
+    tempDir("graft_fs").toString + "/snap"
 
   private def write(path: String, vals: Seq[Int]): Unit =
     Fs.overwriteViaStaging(vals.toDF("v"), path)
@@ -88,7 +87,7 @@ class FsSpec extends SparkSpec {
     // An hdfs:// or s3a:// warehouse takes the identical code path.
     import graft.gen.Synthetic
     import graft.pipeline.EtlRun
-    val wh = "file:" + Files.createTempDirectory("graft_fs_uri").toString + "/wh"
+    val wh = "file:" + tempDir("graft_fs_uri").toString + "/wh"
     val users = Synthetic.users(spark, 30)
     val products = Synthetic.products(spark, 10)
     val tx = Synthetic.transactions(spark, 60, "2025-03-01", 30, 10)
@@ -103,7 +102,7 @@ class FsSpec extends SparkSpec {
   }
 
   test("promoteInto merges partitioned part-files idempotently") {
-    val base = Files.createTempDirectory("graft_fs").toString
+    val base = tempDir("graft_fs").toString
     val staging = s"$base/stage"
     val target = s"$base/tbl"
     Seq((1, "a"), (2, "b")).toDF("v", "p").write.partitionBy("p").parquet(staging)

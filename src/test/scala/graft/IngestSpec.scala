@@ -12,7 +12,7 @@ class IngestSpec extends SparkSpec {
   import spark.implicits._
 
   test("CSV ingest: clean rows parse typed, corrupt rows carry the raw line") {
-    val dir = Files.createTempDirectory("graft_csv").toString
+    val dir = tempDir("graft_csv").toString
     Files.writeString(Paths.get(s"$dir/users.csv"),
       """user_id,name,email,join_date
         |1,Ann,a@x.com,2024-01-01
@@ -29,7 +29,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("JSONL ingest: same corrupt-record contract") {
-    val dir = Files.createTempDirectory("graft_jsonl").toString
+    val dir = tempDir("graft_jsonl").toString
     Files.writeString(Paths.get(s"$dir/products.json"),
       """{"product_id": 1, "name": "P1", "category": "home", "price": 9.5, "stock": 3}
         |{"product_id": "oops, not a number
@@ -45,7 +45,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("corrupt rows flow into the validator as rejects, quoting the input") {
-    val dir = Files.createTempDirectory("graft_csv2").toString
+    val dir = tempDir("graft_csv2").toString
     Files.writeString(Paths.get(s"$dir/users.csv"),
       """user_id,name,email,join_date
         |1,Ann,a@x.com,2024-01-01

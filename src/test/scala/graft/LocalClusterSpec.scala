@@ -81,7 +81,7 @@ class LocalClusterSpec extends AnyFunSuite {
     // cluster: two executor processes + reliable checkpoint dir
     val classes = Seq("target/scala-2.13/classes", "target/scala-2.13/test-classes")
       .map(p => new java.io.File(p).getAbsolutePath).mkString(":")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-lc-ckpt")
+    val ckpt = SparkSpec.tempDir("graft-lc-ckpt")
     val got =
       try {
         val s = builder("local-cluster[2,2,1536]")

@@ -56,7 +56,7 @@ class PlanRuleSpec extends SparkSpec {
 
     // on a re-materialized µs-LTZ parquet (the cast column written out,
     // r3's original fixture) the plain TIMESTAMP branch still pushes
-    val dir = java.nio.file.Files.createTempDirectory("graft_rule_ts").toString
+    val dir = tempDir("graft_rule_ts").toString
     events.select("event_id", "ts").write.mode("overwrite").parquet(dir)
     val pushed = spark.read.parquet(dir)
       .filter(date_format(col("ts"), "yyyy-MM-dd") === "2024-01-18")
@@ -85,7 +85,7 @@ class PlanRuleSpec extends SparkSpec {
     // ALL of 2011-12-30, so every naive 12-30 value casts forward into
     // rendered 12-31 — naive-date and rendered-date disagree for a whole
     // day, and any naive-bound rewrite returns visibly wrong rows.
-    val dir = java.nio.file.Files.createTempDirectory("graft_rule_dst").toString
+    val dir = tempDir("graft_rule_dst").toString
     spark.range(0, 72) // hourly naive 2011-12-29T00 .. 2011-12-31T23 (NTZ)
       .selectExpr("id AS event_id",
         "timestampadd(HOUR, CAST(id AS INT), TIMESTAMP_NTZ'2011-12-29 00:00:00') AS ts")

@@ -56,7 +56,7 @@ class RegistrySpec extends SparkSpec {
     // sufficient: mutate the input between invocations, clear, and the
     // second result must reflect the mutation.
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_cache_contract").toString
+    val dir = tempDir("graft_cache_contract").toString
     try {
       // q106 (winsorized stats) caches its percentile frame in-body;
       // re-write its one input as a mutable directory-backed copy

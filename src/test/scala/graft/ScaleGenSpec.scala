@@ -14,16 +14,7 @@ class ScaleGenSpec extends SparkSpec {
 
   private val src = "/root/testdata/sf0.001"
 
-  private def freshOut(): String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_scalegen_spec")
-    sys.addShutdownHook(deleteRec(d.toFile))
-    d.toString
-  }
-
-  private def deleteRec(f: java.io.File): Unit = if (f.exists()) {
-    if (f.isDirectory) f.listFiles().foreach(deleteRec)
-    f.delete()
-  }
+  private def freshOut(): String = tempDir("graft_scalegen_spec").toString
 
   test("K < 1 fails naming K before the output dir is created") {
     val out = freshOut() + "/out"
@@ -55,7 +46,7 @@ class ScaleGenSpec extends SparkSpec {
     // replica's band — the collision that zeroed q153 on an early corpus
     val docs = spark.read.parquet(s"$out/documents.parquet")
     val maxBase = spark.read.parquet(s"$src/documents.parquet")
-      .agg(max("doc_id")).head.getLong(0)
+      .agg(max("doc_id")).head().getLong(0)
     val bands = docs.select((col("doc_id") / 1000000L).cast("long").as("band")).distinct()
     assert(bands.count() === 2 && maxBase + 20000 < 1000000L)
 
@@ -90,7 +81,6 @@ class ScaleGenSpec extends SparkSpec {
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
     assert(emb.exceptAll(emb2).isEmpty && emb2.exceptAll(emb).isEmpty)
 
-    deleteRec(new java.io.File(out))
-    deleteRec(new java.io.File(out2))
+    Seq(out, out2).foreach(graft.io.Fs.deleteRecursively(_, spark.sessionState.newHadoopConf()))
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.gen.Synthetic
 import graft.pipeline.EtlRun
@@ -14,7 +13,7 @@ import graft.schemas.Schemas
 class Scd2ChainSpec extends SparkSpec {
   import spark.implicits._
 
-  private val wh = Files.createTempDirectory("graft_chain").toString
+  private val wh = tempDir("graft_chain").toString
   private val etl = new EtlRun(spark, wh)
   private val nUsers = 40
   private val nProducts = 15

@@ -75,7 +75,7 @@ class Scd2Spec extends SparkSpec {
   test("merge is idempotent: re-running the same day changes nothing") {
     val once = merged
     val twice = dim.merge(once, incoming, "2024-06-01", col("join_date"))
-    assert(sortedRows(twice.select(once.columns.map(col): _*)) === sortedRows(once))
+    assert(sortedRows(twice.select(once.columns.map(col).toSeq: _*)) === sortedRows(once))
   }
 
   test("null-safe change detection: null -> value is a change, null -> null is not") {
@@ -112,7 +112,7 @@ class Scd2Spec extends SparkSpec {
     extract((10, "ann", "a@x.com", "2020-01-01"), (40, "dee", "d@x.com", "1999-09-09"))
 
   private def tempTable(df: org.apache.spark.sql.DataFrame): String = {
-    val p = java.nio.file.Files.createTempDirectory("graft_scd2_persist").resolve("dim").toString
+    val p = tempDir("graft_scd2_persist").resolve("dim").toString
     df.write.parquet(p)
     p
   }

@@ -29,10 +29,16 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       .toMap
     finally walk.close()
   }
+
+  def tempDir(prefix: String): java.nio.file.Path = SparkSpec.tempDir(prefix)
 }
 
 object SparkSpec {
   // a fixed 4 cores, not SPARK_GRAFT_CPUS: plan ceilings and plan-shape
   // budgets are recorded against this session
   lazy val session: SparkSession = Session.builder(cpus = 4).getOrCreate()
+
+  /** A fresh local scratch dir, deleted when the test JVM exits. */
+  def tempDir(prefix: String): java.nio.file.Path =
+    graft.io.Fs.deleteLocalOnExit(java.nio.file.Files.createTempDirectory(prefix).toFile).toPath
 }

@@ -72,7 +72,7 @@ class TxSidecarSpec extends SparkSpec {
   }
 
   test("readState: fact partitions without a sidecar row are uncovered") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sidecar_state").toString
+    val dir = tempDir("graft_sidecar_state").toString
     val conf = spark.sessionState.newHadoopConf()
     try {
       val fact = Seq((1L, "2025-03-01"), (2L, "2025-03-02"))
@@ -100,7 +100,7 @@ class TxSidecarSpec extends SparkSpec {
   }
 
   test("tiering: compact rolls cold daily rows into month range rows; coverage is a superset") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sidecar_tier").toString
+    val dir = tempDir("graft_sidecar_tier").toString
     val conf = spark.sessionState.newHadoopConf()
     val scPath = s"$dir/${TxSidecar.tableName}"
     try {
@@ -151,7 +151,7 @@ class TxSidecarSpec extends SparkSpec {
   }
 
   test("tiering: v1 sidecar files (no date_max) read as daily rows; maybeCompact self-quenches") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sidecar_v1").toString
+    val dir = tempDir("graft_sidecar_v1").toString
     val conf = spark.sessionState.newHadoopConf()
     val scPath = s"$dir/${TxSidecar.tableName}"
     try {
@@ -186,7 +186,7 @@ class TxSidecarSpec extends SparkSpec {
   }
 
   test("tiering crash windows: an interrupted compaction swap self-heals at the next read") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sidecar_crash").toString
+    val dir = tempDir("graft_sidecar_crash").toString
     val conf = spark.sessionState.newHadoopConf()
     val scPath = s"$dir/${TxSidecar.tableName}"
     import org.apache.hadoop.fs.Path
@@ -231,7 +231,7 @@ class TxSidecarSpec extends SparkSpec {
   }
 
   test("tiering: anti-join over a compacted index is identical to the plain anti-join") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sidecar_tier_join").toString
+    val dir = tempDir("graft_sidecar_tier_join").toString
     val conf = spark.sessionState.newHadoopConf()
     val scPath = s"$dir/${TxSidecar.tableName}"
     try {
@@ -270,7 +270,7 @@ class TxSidecarSpec extends SparkSpec {
   }
 
   test("partition-pruned anti-join: identical to the plain anti-join under the superset contract") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sidecar_join").toString
+    val dir = tempDir("graft_sidecar_join").toString
     val conf = spark.sessionState.newHadoopConf()
     try {
       // history: evens 2..200 on day 1, 301..400 on day 2

@@ -137,7 +137,7 @@ class VectorOpsSpec extends SparkSpec {
     import graft.vector.TopKAgg
     val rows = (for {
       g <- 1L to 5L; i <- 1L to 200L
-    } yield (g, i, math.sin(g * 977 + i * 13).toDouble)).toDS()
+    } yield (g, i, math.sin((g * 977 + i * 13).toDouble))).toDS()
       .repartition(8) // force multi-partition merge path
     val agg = rows.groupByKey(_._1)
       .agg(TopKAgg(3).toColumn)
